@@ -3,8 +3,8 @@
 The same closed-form math as :mod:`seraster_spark.grid`, expressed as pure
 ``pyspark.sql.functions`` Column arithmetic so tile assignment runs inside
 whole-stage codegen with **zero Python boundary** on the 100 TB path. The
-numpy pandas-UDF variants in :mod:`seraster_spark.udfs` are the batch-kernel
-fallback (and the parity oracle); tests assert both paths agree bit-for-bit.
+numpy kernels in :mod:`seraster_spark.grid` are the parity oracle: property
+tests assert both agree bit-for-bit, square and hex.
 
 Replaces the reference's materialize-grid + st_intersects spatial join
 (``R/main.R:118,132-136``) with O(1) arithmetic per point.

@@ -251,28 +251,3 @@ def write_lineage(out_dir: str, record: dict) -> None:
     os.makedirs(out_dir, exist_ok=True)
     with open(os.path.join(out_dir, "_lineage.jsonl"), "a") as f:
         f.write(json.dumps(record) + "\n")
-
-
-class StageMetrics:
-    """Cheap stage metrics via observations (no extra jobs)."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-        self.records: list[dict] = []
-
-    def observe(self, df: DataFrame, name: str) -> DataFrame:
-        from pyspark.sql import Observation
-
-        obs = Observation(name)
-        out = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        self.records.append({"stage": name, "observation": obs})
-        return out
-
-    def dump(self) -> list[dict]:
-        out = []
-        for r in self.records:
-            try:
-                out.append({"stage": r["stage"], **r["observation"].get})
-            except Exception:
-                out.append({"stage": r["stage"], "rows": None})
-        return out

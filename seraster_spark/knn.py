@@ -6,9 +6,9 @@ queries answered by H3 k-ring expansion with a broadcast tile index."*
 
 Algorithm (exact, provably complete):
 
-1. Encode each query point's tile; fan out its ring-R neighborhood as a
-   literal offset array (pure Column math — offsets are compile-time
-   constants, the fan-out is ``explode``; no Python boundary).
+1. Encode each query point's tile; fan out its ring-R neighborhood by a
+   broadcast crossJoin with the (tiny) ring-offsets table (pure Column
+   math, constant plan size at any radius; no Python boundary).
 2. Equi-join candidates ↔ the big points table on ``cell_id`` with the
    (small) exploded query side broadcast — the spatial join becomes a
    broadcast hash join, no shuffle of the points table beyond its scan.
@@ -48,26 +48,6 @@ def _ring_offsets(radius: int, square: bool) -> list[tuple[int, int]]:
     return offs
 
 
-def _neighbor_array(cell_id, spec: GridSpec, radius: int):
-    """Array column of ring-`radius` neighbor cell ids (literal offsets).
-    Only for SMALL radii — the expression count is (2r+1)^2; knn_join uses
-    the broadcast-offsets crossJoin instead, which is O(1) expressions at
-    any radius."""
-    row, col = X.unpack_rowcol(cell_id)
-    mode = 0 if spec.square else 1
-    head = F.lit((mode << 62) | ((spec.level & 0x3F) << 56)).cast("long")
-    exprs = []
-    mask = F.lit((1 << _AXIS_BITS) - 1)
-    for dr, dc in _ring_offsets(radius, spec.square):
-        # mask to the axis field like expressions._pack — unmasked, a ring
-        # cell near the +-2^27 coordinate edge bleeds into the level/mode
-        # bits and can never equal the masked ids on the points side
-        r = (row + F.lit(dr + _OFF)).cast("long").bitwiseAND(mask)
-        c = (col + F.lit(dc + _OFF)).cast("long").bitwiseAND(mask)
-        exprs.append(head.bitwiseOR(F.shiftleft(r, _AXIS_BITS)).bitwiseOR(c))
-    return F.array(*exprs)
-
-
 def _candidate_cells(spark, qdf, spec: GridSpec, radius: int):
     """Query rows fanned out to their ring-`radius` neighbor cells via a
     broadcast crossJoin with the (small) offsets table — constant plan size
@@ -78,6 +58,9 @@ def _candidate_cells(spark, qdf, spec: GridSpec, radius: int):
     row, col = X.unpack_rowcol(F.col("_qcell"))
     mode = 0 if spec.square else 1
     head = F.lit((mode << 62) | ((spec.level & 0x3F) << 56)).cast("long")
+    # mask to the axis field like expressions._pack — unmasked, a ring cell
+    # near the +-2^27 coordinate edge bleeds into the level/mode bits and
+    # can never equal the masked ids on the points side
     mask = F.lit((1 << _AXIS_BITS) - 1)
     r = (row + F.col("dr") + F.lit(_OFF)).cast("long").bitwiseAND(mask)
     c = (col + F.col("dc") + F.lit(_OFF)).cast("long").bitwiseAND(mask)

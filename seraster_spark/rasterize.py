@@ -6,7 +6,7 @@ polygon grid → spatial-index join points→pixels → per-pixel task fan-out
 (``bplapply``) slicing the matrix → driver-side assembly. The Spark engine
 replaces all of that with:
 
-    docs → cell_id = closed-form encode (JVM Column math or Arrow UDF)
+    docs → cell_id = closed-form encode (JVM Column math)
          → ONE hash aggregate groupBy(cell_id[, feature]) with map-side
            partial combine
          → broadcast-join per-tile num_cell (mean denominator)
@@ -51,7 +51,6 @@ from pyspark.sql import DataFrame, functions as F
 from . import expressions as X
 from .bbox import BBox, grid_spec_for
 from .grid import GridSpec
-from .udfs import cell_id_udf
 
 VALID_FUNS = ("sum", "mean")
 
@@ -105,13 +104,9 @@ def assign_tiles(
     x_col: str = "x",
     y_col: str = "y",
     out_col: str = "cell_id",
-    use_udf: bool = False,
 ) -> DataFrame:
-    """Attach the closed-form tile id. Default path is pure Column math
-    (whole-stage codegen); ``use_udf=True`` routes through the Arrow-batched
-    numpy kernel instead (bit-identical; used for cross-checks)."""
-    if use_udf:
-        return df.withColumn(out_col, cell_id_udf(spec)(F.col(x_col), F.col(y_col)))
+    """Attach the closed-form tile id as pure Column math (whole-stage
+    codegen, no Python boundary); bit-identical to :func:`seraster_spark.grid.encode`."""
     return df.withColumn(out_col, X.cell_id_expr(F.col(x_col), F.col(y_col), spec))
 
 

@@ -35,12 +35,8 @@ def get_spark(
         # hold (it still falls back to sort-merge when the build side is too
         # big to hash per partition): the pointpat bucket self-joins flipped
         # SortMergeJoin -> ShuffledHashJoin and stopped paying two 10M-row
-        # sorts. Size-guarded by the planner, so safe at cluster scale;
-        # override via SPARK_GRAFT_PREFER_SMJ=true.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        # sorts. Size-guarded by the planner, so safe at cluster scale.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # Fall back from whole-stage codegen exactly when HotSpot would
@@ -49,11 +45,8 @@ def get_spark(
         # oversized fused stages running as INTERPRETED bytecode — measured
         # ~4x slower on the segment-supercover expression pipeline. A JVM
         # property, not a data-scale tunable, so the same value is right on
-        # a cluster; override via SPARK_GRAFT_HUGE_METHOD_LIMIT.
-        .config(
-            "spark.sql.codegen.hugeMethodLimit",
-            os.environ.get("SPARK_GRAFT_HUGE_METHOD_LIMIT", "8000"),
-        )
+        # a cluster.
+        .config("spark.sql.codegen.hugeMethodLimit", "8000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
     if shuffle_partitions is None:

@@ -5,16 +5,15 @@ top-k. Scale path: random-hyperplane LSH bucketing — signatures via one
 Arrow-batched numpy matmul, candidates from an equi-join on bucket id, exact
 re-rank only within buckets; multi-probe via Hamming-adjacent buckets.
 
-Exact-cosine evaluation (the verify/re-rank hot path) runs as an
-Arrow-batched numpy kernel by default (``exact_impl="arrow"``): the repo's
-own measurements put the interpreted ``zip_with``/``aggregate`` HOF fold at
-~46 µs/element — ~8× slower than the vectorized kernel — and at corpus
-scale the re-rank touches ~10⁸ candidate pairs × 768-dim vectors. The HOF
-fold remains available as ``exact_impl="hof"`` for its strictly-sequential
-summation order; for INTEGER-VALUED vectors (every driver oracle row) all
-partial sums are exact, so both impls — and any engine — produce
-bit-identical cosines, which is what keeps the oracle rows green on the
-fast path.
+Exact-cosine evaluation (the verify/re-rank hot path) has ONE kernel,
+:func:`_cosine_pairs_map_arrow`: a ``mapInArrow`` numpy pass that reads
+vectors straight from the Arrow list buffers. The repo's own measurements
+put the interpreted ``zip_with``/``aggregate`` HOF fold at ~46 µs/element —
+~8× slower than the vectorized kernel — and at corpus scale the re-rank
+touches ~10⁸ candidate pairs × 768-dim vectors. For INTEGER-VALUED vectors
+(every driver oracle row) all partial sums are exact, so the kernel's
+cosines are bit-identical to any engine's, which is what keeps the oracle
+rows green.
 
 Embedding-cosine near-duplicate detection reuses the same machinery with a
 threshold instead of top-k.
@@ -32,66 +31,20 @@ def _as_matrix(cells: np.ndarray) -> np.ndarray:
     """(n, dim) float64 matrix from an object array of equal-length numeric
     vectors: np.concatenate's C-level loop over the cells instead of a
     per-row Python stack (measured ~5x less Python overhead per Arrow
-    batch); same values as np.stack([np.asarray(v, float64) ...])."""
+    batch); same values as np.stack([np.asarray(v, float64) ...]).
+    Ragged input raises: a bare reshape(n, -1) would silently realign rows
+    whenever the total element count happens to divide by n."""
     n = len(cells)
     if n == 0:
         return np.zeros((0, 0), dtype=np.float64)
+    lens = np.fromiter(map(len, cells), dtype=np.int64, count=n)
+    bad = np.flatnonzero(lens != lens[0])
+    if len(bad):
+        raise ValueError(
+            f"ragged vectors: expected length {lens[0]} (row 0), "
+            f"found {lens[bad[0]]} at row {bad[0]}"
+        )
     return np.concatenate(cells).astype(np.float64, copy=False).reshape(n, -1)
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm_expr(vec) -> "F.Column":
-    return F.sqrt(_dot(vec, vec))
-
-
-@F.pandas_udf(T.DoubleType())
-def _cosine_arrow(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Row-wise cosine(a, b), one vectorized numpy pass per (Arrow batch ×
-    distinct dimension). Degenerate rows yield NULL — never NaN, and never
-    a task failure: NULL on either side, a zero norm, MISMATCHED vector
-    lengths in a pair (a truncated/corrupt embedding must not abort a
-    corpus scan), or a non-finite outcome (NaN elements). NaN would sort
-    ABOVE every real value in Spark's double ordering and poison a
-    descending top-k; the HOF fold instead propagates NaN and NULLs
-    mismatched lengths via zip_with padding — bit-parity between the two
-    impls is guaranteed for finite, equal-length, integer-valued inputs
-    (the oracle regime)."""
-    n = len(a)
-    out = np.full(n, np.nan, dtype=np.float64)
-    mask = a.notna().to_numpy() & b.notna().to_numpy()
-    if mask.any():
-        idx = np.flatnonzero(mask)
-        av = a.to_numpy()[idx]
-        bv = b.to_numpy()[idx]
-        la = np.fromiter(map(len, av), dtype=np.int64, count=len(idx))
-        lb = np.fromiter(map(len, bv), dtype=np.int64, count=len(idx))
-        eq = la == lb
-        arr_a = a.to_numpy()
-        arr_b = b.to_numpy()
-        for dim in np.unique(la[eq]):
-            if dim == 0:
-                continue  # zero-dim pair: den 0 -> NULL
-            sel = idx[eq & (la == dim)]
-            ma = _as_matrix(arr_a[sel])
-            mb = _as_matrix(arr_b[sel])
-            num = np.einsum("ij,ij->i", ma, mb)
-            den = np.sqrt(np.einsum("ij,ij->i", ma, ma)) * np.sqrt(
-                np.einsum("ij,ij->i", mb, mb)
-            )
-            good = den > 0  # False for NaN dens too
-            sub = np.full(len(sel), np.nan, dtype=np.float64)
-            sub[good] = num[good] / den[good]
-            out[sel] = sub
-    res = pd.array(out, dtype="Float64")
-    res[np.isnan(out)] = pd.NA
-    return pd.Series(res, dtype="Float64")
 
 
 def _cosine_pairs_map_arrow(
@@ -104,15 +57,17 @@ def _cosine_pairs_map_arrow(
     """Fused cosine evaluation as ``mapInArrow``: emits ``keep_cols`` +
     ``cosine`` per input row (rows in input order within each batch).
 
-    Same VALUES as ``cosine_expr(..., "arrow")`` — identical float64 cast,
-    identical einsum order — but zero-copy: vectors are read straight from
-    the Arrow list offsets + flat child buffer instead of being boxed into
-    one numpy object per cell by the pandas-UDF path (measured ~2.6 s of
-    pure conversion overhead on a 640k-pair verify). Degenerate rows (NULL
-    side, mismatched/zero lengths, zero norm, non-finite outcome) yield a
-    NULL cosine, exactly like the pandas kernel. With ``threshold`` the
-    kernel also applies ``cosine >= threshold`` (NULL never passes —
-    identical to the Column filter) so dropped rows never cross back."""
+    Zero-copy: vectors are read straight from the Arrow list offsets + flat
+    child buffer instead of being boxed into one numpy object per cell (a
+    pandas-UDF kernel measured ~2.6 s of pure conversion overhead on a
+    640k-pair verify). Degenerate rows yield a NULL cosine — never NaN,
+    which would sort ABOVE every real value in Spark's double ordering and
+    poison a descending top-k, and never a task failure: NULL on either
+    side, mismatched or zero lengths (a truncated/corrupt embedding must
+    not abort a corpus scan), a zero norm, or a non-finite outcome (NaN or
+    ±inf elements). With ``threshold`` the kernel also applies
+    ``cosine >= threshold`` (NULL never passes — identical to the Column
+    filter) so dropped rows never cross back."""
     import pyarrow as pa
 
     out_schema = T.StructType(
@@ -177,19 +132,6 @@ def _cosine_pairs_map_arrow(
     return pairs.select(*keep_cols, a_col, b_col).mapInArrow(kernel, out_schema)
 
 
-def cosine_expr(a, b, exact_impl: str = "arrow"):
-    """cosine(a, b) as a Column: ``"arrow"`` = vectorized numpy kernel (the
-    default — the 100 TB verify path), ``"hof"`` = interpreted
-    zip_with/aggregate fold (strictly sequential summation order)."""
-    if exact_impl == "arrow":
-        return _cosine_arrow(a, b)
-    if exact_impl == "hof":
-        # try_divide: NULL (not an ANSI DIVIDE_BY_ZERO error) on zero-norm
-        # vectors, matching the Arrow kernel's NULL-never-NaN contract
-        return F.try_divide(_dot(a, b), norm_expr(a) * norm_expr(b))
-    raise ValueError(f"exact_impl must be 'arrow' or 'hof', got {exact_impl!r}")
-
-
 def brute_force_topk(
     items: DataFrame,
     queries: DataFrame,
@@ -197,12 +139,11 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id: str = "query_id",
-    exact_impl: str = "arrow",
 ) -> DataFrame:
     """Exact cosine top-k: broadcast the (small) query set, crossJoin against
     the items table (embarrassingly parallel scan — no shuffle of the big
     side), window top-k per query. Ties broken by item id. Cosines run on
-    the Arrow kernel by default (see :func:`cosine_expr`); the rank<=k
+    the Arrow kernel (see :func:`_cosine_pairs_map_arrow`); the rank<=k
     filter is a WindowGroupLimit, so each task forwards only its local
     top-k per query into the single exchange."""
     q = queries.select(
@@ -210,14 +151,7 @@ def brute_force_topk(
     )
     it = items.select(F.col(id_col).alias("_iid"), F.col(vec_col).alias("_ivec"))
     joined = it.crossJoin(F.broadcast(q))
-    if exact_impl == "arrow":
-        scored = _cosine_pairs_map_arrow(
-            joined, "_ivec", "_qvec", ["_qid", "_iid"]
-        )
-    else:
-        scored = joined.withColumn(
-            "cosine", cosine_expr(F.col("_ivec"), F.col("_qvec"), exact_impl)
-        )
+    scored = _cosine_pairs_map_arrow(joined, "_ivec", "_qvec", ["_qid", "_iid"])
     ranked = (
         scored
         .withColumn(
@@ -231,93 +165,6 @@ def brute_force_topk(
     return ranked.select(
         F.col("_qid").alias(query_id), F.col("_iid").alias(id_col), "cosine", "rank"
     )
-
-
-def brute_force_topk_arrow(
-    items: DataFrame,
-    queries_pdf: pd.DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id: str = "query_id",
-) -> DataFrame:
-    """Exact cosine top-k, Arrow fast path for the 100 TB scan:
-    the (small) query matrix is shipped in the UDF closure; each Arrow batch
-    of items does ONE numpy matmul and emits only its per-batch top-k
-    candidates per query (k × n_queries rows per batch, not batch × n_queries)
-    — a global window top-k then finalizes. Orders of magnitude faster than
-    the interpreted zip_with/aggregate fold at scale.
-
-    queries_pdf: pandas with (query_id, vec) columns where vec is list/array.
-    Dtypes are PRESERVED: query_id and the item id come back with their
-    input types (no silent stringification). NULL-embedding items are
-    skipped (parity with the columnar path's NULL-cosine degradation).
-    """
-    spark = items.sparkSession
-    iid_type = items.schema[id_col].dataType
-    qid_type = (
-        spark.createDataFrame(queries_pdf[[query_id]]).schema[query_id].dataType
-        if len(queries_pdf)
-        else T.StringType()
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField(query_id, qid_type),
-            T.StructField("_iid", iid_type),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-    final_schema = T.StructType(
-        [
-            T.StructField(query_id, qid_type),
-            T.StructField(id_col, iid_type),
-            T.StructField("cosine", T.DoubleType()),
-            T.StructField("rank", T.IntegerType()),
-        ]
-    )
-    if not len(queries_pdf):
-        return spark.createDataFrame([], final_schema)
-    qids = queries_pdf[query_id].tolist()
-    qm = np.stack([np.asarray(v, dtype=np.float64) for v in queries_pdf[vec_col]])
-    qm_n = qm / np.linalg.norm(qm, axis=1, keepdims=True)
-
-    def batch_topk(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            m = _as_matrix(pdf[vec_col].to_numpy())
-            norms = np.linalg.norm(m, axis=1)
-            norms[norms == 0] = 1.0
-            cos = (m / norms[:, None]) @ qm_n.T  # (batch, nq)
-            kk = min(k, len(m))
-            rows = {query_id: [], "_iid": [], "cosine": []}
-            ids = pdf[id_col].to_numpy()
-            for qi in range(len(qids)):
-                # deterministic per-batch cut: (cosine desc, id asc) — a bare
-                # argpartition splits tied cosines arbitrarily and could drop
-                # the smallest-id item before the global re-rank sees it
-                order = np.lexsort((ids, -cos[:, qi]))
-                sel = order[:kk]
-                rows[query_id].extend([qids[qi]] * len(sel))
-                rows["_iid"].extend(ids[sel].tolist())
-                rows["cosine"].extend(cos[sel, qi].tolist())
-            yield pd.DataFrame(rows)
-
-    cand = (
-        items.select(id_col, vec_col)
-        .filter(F.col(vec_col).isNotNull())
-        .mapInPandas(batch_topk, out_schema)
-    )
-    ranked = (
-        cand.withColumn(
-            "rank",
-            F.row_number().over(
-                W.partitionBy(query_id).orderBy(F.col("cosine").desc(), F.col("_iid").asc())
-            ),
-        )
-        .filter(F.col("rank") <= k)
-    )
-    return ranked.select(query_id, F.col("_iid").alias(id_col), "cosine", "rank")
 
 
 def _centroid_dist2(vec: pd.Series, cent: np.ndarray) -> np.ndarray:
@@ -423,7 +270,6 @@ def ivf_topk(
     kmeans_iters: int = 8,
     centroids: np.ndarray | None = None,
     broadcast_queries: bool = True,
-    exact_impl: str = "arrow",
 ) -> DataFrame:
     """IVF approximate top-k: coarse k-means centroids trained CLUSTER-SIDE
     (seeded uniform sample + mapInPandas partial-sum iterations — see
@@ -513,14 +359,7 @@ def ivf_topk(
         .withColumn("_list", F.explode(probe_lists(F.col("_qvec"))))
     )
     joined = it.join(F.broadcast(q) if broadcast_queries else q, "_list")
-    if exact_impl == "arrow":
-        scored = _cosine_pairs_map_arrow(
-            joined, vec_col, "_qvec", ["_qid", id_col]
-        )
-    else:
-        scored = joined.withColumn(
-            "cosine", cosine_expr(F.col(vec_col), F.col("_qvec"), exact_impl)
-        )
+    scored = _cosine_pairs_map_arrow(joined, vec_col, "_qvec", ["_qid", id_col])
     # no dedup pass: an item is assigned to exactly ONE list and a query's
     # probe lists are distinct, so a (query, item) pair matches at most once
     ranked = (
@@ -579,7 +418,6 @@ def lsh_topk(
     seed: int = 7,
     planes: np.ndarray | None = None,
     broadcast_queries: bool = True,
-    exact_impl: str = "arrow",
 ) -> DataFrame:
     """Approximate cosine top-k: bucket both sides by hyperplane signature,
     multi-probe queries into Hamming-1 neighbor buckets (probe list built as
@@ -605,14 +443,7 @@ def lsh_topk(
     ]
     qp = q.withColumn("bucket", F.explode(F.array(*probes))).drop("bucket0")
     joined = it.join(F.broadcast(qp) if broadcast_queries else qp, "bucket")
-    if exact_impl == "arrow":
-        scored = _cosine_pairs_map_arrow(
-            joined, "_ivec", "_qvec", ["_qid", "_iid"]
-        )
-    else:
-        scored = joined.withColumn(
-            "cosine", cosine_expr(F.col("_ivec"), F.col("_qvec"), exact_impl)
-        )
+    scored = _cosine_pairs_map_arrow(joined, "_ivec", "_qvec", ["_qid", "_iid"])
     # no dedup pass before the window: an item owns ONE bucket and the
     # probe buckets of a query are distinct, so a (query, item) pair can
     # match at most once
@@ -641,7 +472,6 @@ def cosine_near_duplicates(
     seed: int = 7,
     planes: np.ndarray | None = None,
     max_bucket_size: int | None = None,
-    exact_impl: str = "arrow",
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs: LSH self-bucket-join + exact cosine
     filter. Returns (id_a, id_b, cosine) with id_a < id_b.
@@ -683,15 +513,8 @@ def cosine_near_duplicates(
         pairs.join(it.select(F.col("_id").alias("id_a"), F.col("_vec").alias("_va")), "id_a")
         .join(it.select(F.col("_id").alias("id_b"), F.col("_vec").alias("_vb")), "id_b")
     )
-    if exact_impl == "arrow":
-        # fused mapInArrow verify: same einsum values, zero per-cell boxing,
-        # threshold applied in-kernel so rejected pairs never cross back
-        return _cosine_pairs_map_arrow(
-            j, "_va", "_vb", ["id_a", "id_b"], threshold=float(threshold)
-        )
-    cos = cosine_expr(F.col("_va"), F.col("_vb"), exact_impl)
-    return (
-        j.withColumn("cosine", cos)
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+    # fused mapInArrow verify: zero per-cell boxing, threshold applied
+    # in-kernel so rejected pairs never cross back
+    return _cosine_pairs_map_arrow(
+        j, "_va", "_vb", ["id_a", "id_b"], threshold=float(threshold)
     )

@@ -232,7 +232,11 @@ def heavy_hitters(
     d_total = partials.agg(F.sum("dec").alias("err_bound"))
     # global top-k via orderBy+limit: Spark plans TakeOrderedAndProject
     # (per-partition top-k, k·partitions rows to the final merge) — never
-    # an empty-partitionBy window over the whole summary
+    # an empty-partitionBy window over the whole summary. Its per-task
+    # buffer is sized from the limit, so clamp k to what the merged summary
+    # can hold (<= capacity keys per partition): k=10**9 otherwise grows
+    # the JVM heap by gigabytes for a summary of a few hundred rows.
+    k = min(k, capacity * partials.rdd.getNumPartitions())
     ranked = (
         merged.crossJoin(F.broadcast(d_total))
         .orderBy(F.col("est_count").desc(), F.col("_k").asc())

@@ -428,15 +428,18 @@ def shingles_expr(text: Column, n: int = 3) -> Column:
     return F.array_distinct(gram)
 
 
-_MERSENNE61 = (1 << 61) - 1
+# MinHash permutations are (a·h + b) mod p over Z_p, p = 2^31 − 1 prime:
+# with h, a, b < p every intermediate stays below 2^62 + 2^31 (int64- and
+# ANSI-safe), and a ∈ [1, p) makes each map a bijection of Z_p.
+_P31 = (1 << 31) - 1
 
 
 def _shingles_pandas_udf(n: int):
     """Arrow-batched shingling over PRE-LOWERCASED text (callers pass
-    ``F.lower(col)`` so case folding happens JVM-side on BOTH paths —
-    Python ``str.lower()`` and JVM ``lower()`` diverge on locale-sensitive
-    code points like U+0130, which would make impl='arrow' vs impl='expr'
-    produce different dedup candidates on multilingual corpora).
+    ``F.lower(col)`` so case folding happens JVM-side exactly as in
+    :func:`shingles_expr` — Python ``str.lower()`` and JVM ``lower()``
+    diverge on locale-sensitive code points like U+0130, which would make
+    the xxhash64 and md5 variants shingle multilingual corpora differently).
 
     ~8× faster than the interpreted slice/array_join HOF chain (measured
     12s → 1.4s for 260k shingles on 5k docs) and result-identical to
@@ -474,8 +477,8 @@ def _minhash_sig_pandas_udf(num_perm: int, seed: int = 13):
     """Arrow-batched MinHash signature over pre-hashed shingles
     (array<long> → array<long>): the 32 universal-hash permutations as one
     numpy pass per batch — bit-identical to :func:`minhash_signature`
-    (int64 arithmetic: a < 2^31, h mod 2^31-1 < 2^31 ⇒ a·h+b < 2^63; numpy
-    ``%`` with a positive divisor is non-negative, matching F.pmod)."""
+    (int64 arithmetic, see ``_P31``; numpy ``%`` with a positive divisor is
+    non-negative, matching F.pmod)."""
     params = _perm_params(num_perm, seed)
     pa = np.array([p[0] for p in params], dtype=np.int64)
     pb = np.array([p[1] for p in params], dtype=np.int64)
@@ -487,13 +490,13 @@ def _minhash_sig_pandas_udf(num_perm: int, seed: int = 13):
         if not nonempty.any():
             return pd.Series([None] * len(sh))
         flat = np.concatenate([np.asarray(v, dtype=np.int64) for v in sh if len(v)])
-        hmod = flat % np.int64(2147483647)
+        p31 = np.int64(_P31)
+        hmod = flat % p31
         starts = np.zeros(int(nonempty.sum()), dtype=np.int64)
         np.cumsum(lens[nonempty][:-1], out=starts[1:])
         out_ne = np.empty((len(starts), num_perm), dtype=np.int64)
-        m61 = np.int64(_MERSENNE61)
         for p in range(num_perm):
-            vals = (pa[p] * hmod + pb[p]) % m61
+            vals = (pa[p] * hmod + pb[p]) % p31
             out_ne[:, p] = np.minimum.reduceat(vals, starts)
         res = [None] * len(sh)
         for row, i in zip(out_ne.tolist(), np.flatnonzero(nonempty)):
@@ -504,26 +507,27 @@ def _minhash_sig_pandas_udf(num_perm: int, seed: int = 13):
 
 
 def _perm_params(num_perm: int, seed: int = 13):
-    """Deterministic universal-hash family parameters (a odd, b)."""
+    """Deterministic universal-hash family parameters a ∈ [1, p), b ∈ [0, p)
+    over Z_p, p = 2^31 − 1. (A modulus far above p lets a·h + b wrap at
+    most twice, so the permutations order shingles nearly alike and the
+    LSH bands stop being independent.)"""
     import random
 
     rnd = random.Random(seed)
-    return [
-        (rnd.randrange(1, 1 << 31) | 1, rnd.randrange(0, 1 << 31))
-        for _ in range(num_perm)
-    ]
+    return [(rnd.randrange(1, _P31), rnd.randrange(0, _P31)) for _ in range(num_perm)]
 
 
 def minhash_signature(hashed_shingles: Column, num_perm: int = 32) -> Column:
-    """num_perm-wide MinHash signature over PRE-HASHED shingles (array<long>):
-    one xxhash64 per shingle total, then cheap universal-hash permutations
-    min_s((a_p * h + b_p) mod M) — overflow-safe under ANSI (h reduced to
-    31 bits first). array<long>."""
+    """num_perm-wide MinHash signature over PRE-HASHED shingles (array<long>)
+    as Column expressions: min_s((a_p * (h mod p) + b_p) mod p), overflow-
+    safe under ANSI (see ``_P31``). array<long>. The Column reference for
+    the Arrow kernel :func:`_minhash_sig_pandas_udf`, which
+    :func:`minhash_lsh_candidates` runs."""
     def perm_fn(a: int, b: int):
         # NB closure factory — a default-arg lambda would change the arity
         # PySpark infers for the HOF lambda
         return lambda h: F.pmod(
-            F.lit(a) * F.pmod(h, F.lit(2147483647)) + F.lit(b), F.lit(_MERSENNE61)
+            F.lit(a) * F.pmod(h, F.lit(_P31)) + F.lit(b), F.lit(_P31)
         )
 
     sigs = [
@@ -556,7 +560,6 @@ def minhash_lsh_candidates(
     bands: int = 8,
     verify_threshold: float | None = 0.5,
     hash: str = "xxhash64",
-    impl: str = "arrow",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """MinHash+LSH near-duplicate candidate pairs.
@@ -566,16 +569,13 @@ def minhash_lsh_candidates(
     Returns (id_a, id_b, jaccard) with id_a < id_b.
 
     ``hash="xxhash64"`` (default): shingles pre-hashed once to int64, cheap
-    universal-hash permutations — the production path. ``hash="md5"``: salted
-    md5 permutations over raw shingles — slower, but bit-reproducible in any
-    engine with md5 (the DuckDB oracle runs this variant).
-
-    ``impl="arrow"`` (default, xxhash64 only): shingling and the num_perm
-    permutation mins run as Arrow-batched numpy/pandas kernels — interpreted
-    HOF expression chains (slice/array_join ×shingles, array_min ×perms) are
-    the slow path here, ~8× slower measured; results are identical
-    (shingle hashing stays JVM xxhash64 either way). ``impl="expr"`` keeps
-    everything as Column expressions.
+    universal-hash permutations — the production path. Shingling and the
+    num_perm permutation mins run as Arrow-batched numpy/pandas kernels
+    (the interpreted slice/array_join and array_min HOF chains measured ~8×
+    slower); shingle hashing stays JVM xxhash64. ``hash="md5"``: salted md5
+    permutations over raw shingles, all Column expressions — slower, but
+    bit-reproducible in any engine with md5 (the DuckDB oracle runs this
+    variant).
 
     100 TB shape: the band self-join shuffles ONLY (_id, band, bhash) — the
     shingle sets stay out of every exchange. Candidate ids are materialized
@@ -589,8 +589,6 @@ def minhash_lsh_candidates(
     degenerate hot buckets (see :func:`cap_buckets`) — at corpus scale
     always set it.
     """
-    if impl not in ("arrow", "expr"):
-        raise ValueError("impl must be 'arrow' or 'expr'")
     if hash not in ("xxhash64", "md5"):
         raise ValueError("hash must be 'xxhash64' or 'md5'")
     if bands < 1 or bands > num_perm or num_perm % bands != 0:
@@ -608,8 +606,8 @@ def minhash_lsh_candidates(
         """(_id, _sh) distinct shingle sets for ``sl`` — the one shingling
         definition shared by the signature pass and the (candidate-pruned)
         verification pass."""
-        if hash == "xxhash64" and impl == "arrow":
-            # lower() JVM-side: exact case-fold parity with the expr path
+        if hash == "xxhash64":
+            # lower() JVM-side: exact case-fold parity with shingles_expr
             rw = sl.select(
                 "_id", _shingles_pandas_udf(n)(F.lower(F.col("_text"))).alias("_s")
             ).filter(F.size("_s") > 0)
@@ -628,10 +626,7 @@ def minhash_lsh_candidates(
 
     base = shingle_sets(slim)
     if hash == "xxhash64":
-        if impl == "arrow":
-            sig_expr = _minhash_sig_pandas_udf(num_perm)(F.col("_sh"))
-        else:
-            sig_expr = minhash_signature(F.col("_sh"), num_perm)
+        sig_expr = _minhash_sig_pandas_udf(num_perm)(F.col("_sh"))
 
         def band_hash(elems):
             return F.xxhash64(F.concat_ws(",", *elems))
@@ -708,7 +703,6 @@ def ngram_jaccard(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.5,
-    impl: str = "arrow",
     max_df: int | None = None,
 ) -> DataFrame:
     """Exact all-pairs n-gram Jaccard above a threshold, pruned by a shared-
@@ -722,21 +716,20 @@ def ngram_jaccard(
     whose every shared shingle is hot are missed — at a sane cap such a pair
     is far below any useful threshold anyway. Set it whenever the corpus is
     not known to be boilerplate-free."""
-    if impl not in ("arrow", "expr"):
-        raise ValueError("impl must be 'arrow' or 'expr'")
-    shing = (
-        (lambda c: _shingles_pandas_udf(n)(F.lower(c))) if impl == "arrow"
-        else (lambda c: shingles_expr(c, n))
-    )
+    shing = _shingles_pandas_udf(n)
     is_self = df_b is None
-    a = df_a.select(F.col(id_col).alias("id_a"), shing(F.col(text_col)).alias("sh_a"))
+    a = df_a.select(
+        F.col(id_col).alias("id_a"), shing(F.lower(F.col(text_col))).alias("sh_a")
+    )
     # self mode: derive the B side by RENAMING the A side so the expensive
     # shingling subtree exists once in the plan (a structurally separate
     # rebuild would shingle every document twice)
     b = (
         a.select(F.col("id_a").alias("id_b"), F.col("sh_a").alias("sh_b"))
         if is_self
-        else df_b.select(F.col(id_col).alias("id_b"), shing(F.col(text_col)).alias("sh_b"))
+        else df_b.select(
+            F.col(id_col).alias("id_b"), shing(F.lower(F.col(text_col))).alias("sh_b")
+        )
     )
     ia = a.select("id_a", F.explode("sh_a").alias("g")).dropDuplicates()
     ib = (

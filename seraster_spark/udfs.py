@@ -2,10 +2,9 @@
 :mod:`seraster_spark.grid`.
 
 These are the vectorized batch kernels (never per-row Python — BASELINE.json
-``input_hint``). The square/hex encoders also exist as pure Column expressions
-(:mod:`seraster_spark.expressions`) which stay JVM-side; the UDF variants here
-serve (a) as the parity cross-check between the two paths, (b) ops with no
-reasonable Column form: polygonize to WKT, k-ring fan-out, point-in-polygon.
+``input_hint``) for ops with no reasonable Column form: polygonize to WKT or
+GeoJSON, and point-in-polygon. Tile encoding and centroids have no UDF here:
+they run as pure Column expressions (:mod:`seraster_spark.expressions`).
 
 Each factory closes over a broadcastable :class:`GridSpec` (plain frozen
 dataclass → pickled once into the UDF closure, not per batch).
@@ -20,27 +19,6 @@ from pyspark.sql import types as T
 
 from . import grid
 from .grid import GridSpec
-
-
-def cell_id_udf(spec: GridSpec):
-    @F.pandas_udf(T.LongType())
-    def _encode(x: pd.Series, y: pd.Series) -> pd.Series:
-        ids = grid.encode(x.to_numpy(np.float64), y.to_numpy(np.float64), spec)
-        return pd.Series(ids)
-
-    return _encode
-
-
-def centroid_udf(spec: GridSpec):
-    @F.pandas_udf(T.StructType([
-        T.StructField("cx", T.DoubleType()),
-        T.StructField("cy", T.DoubleType()),
-    ]))
-    def _centroid(cell_id: pd.Series) -> pd.DataFrame:
-        cx, cy = grid.centroid(cell_id.to_numpy(np.int64), spec)
-        return pd.DataFrame({"cx": cx, "cy": cy})
-
-    return _centroid
 
 
 def wkt_udf(spec: GridSpec, decimals: int = 6):
@@ -66,18 +44,6 @@ def geojson_geom_udf(spec: GridSpec, decimals: int = 6):
         return pd.Series(out)
 
     return _geom
-
-
-def kring_udf(spec: GridSpec, k: int):
-    """cell_id → array of neighbor cell ids within ring distance k
-    (including the center). Fan out with F.explode downstream."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _ring(cell_id: pd.Series) -> pd.Series:
-        rings = grid.kring(cell_id.to_numpy(np.int64), k, spec)
-        return pd.Series(list(rings))
-
-    return _ring
 
 
 def pip_udf(ring_vertices: list[tuple[float, float]]):

@@ -1,9 +1,12 @@
-"""Property-based tests (hypothesis) for the numpy grid kernels."""
+"""Property-based tests (hypothesis) for the numpy grid kernels, and for
+the Column-expression encoders that must match them bit for bit."""
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
+from seraster_spark import expressions as X
 from seraster_spark import grid
 from seraster_spark.grid import GridSpec
 
@@ -180,3 +183,119 @@ def test_kde_sequence_range_cover_complete(p, resolution, bandwidth, origin):
     qc = cand[qual]
     if len(qc):
         assert qc.min() >= lo and qc.max() <= hi
+
+
+# ---------------------------------------------------------------------------
+# Column expressions == numpy kernels, bit for bit (square and hex)
+
+_spark_settings = settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+
+
+@st.composite
+def _grid_pairs(draw):
+    """A square and a hex grid sharing an arbitrary origin and resolution."""
+    xmin = draw(st.floats(min_value=-1e5, max_value=1e5))
+    ymin = draw(st.floats(min_value=-1e5, max_value=1e5))
+    res = draw(resolutions | st.floats(min_value=0.01, max_value=1000.0))
+    ext = dict(xmax=xmin + 40 * res, ymax=ymin + 30 * res, resolution=res)
+    return (
+        GridSpec(xmin, ymin, square=True, **ext),
+        GridSpec(xmin, ymin, square=False, **ext),
+    )
+
+
+def _ulps(v, n):
+    return float(np.nextafter(v, np.inf if n > 0 else -np.inf)) if n else v
+
+
+@st.composite
+def _grid_points(draw, sq, hx):
+    """Free points plus tile-edge floats (±1 ulp): square gridline
+    crossings, and the midpoints / triple points between adjacent hex
+    centres where cube rounding ties."""
+    res = sq.resolution
+    free = st.tuples(
+        st.floats(min_value=sq.xmin - res, max_value=sq.xmax + res),
+        st.floats(min_value=sq.ymin - res, max_value=sq.ymax + res),
+    )
+    pts = draw(st.lists(free, max_size=20))
+    ulp = st.integers(min_value=-1, max_value=1)
+    for _ in range(draw(st.integers(min_value=1, max_value=20))):
+        i, j = draw(st.integers(-2, 42)), draw(st.integers(-2, 32))
+        pts.append((sq.xmin + i * res, sq.ymin + j * res))
+    for _ in range(draw(st.integers(min_value=1, max_value=20))):
+        q, r = draw(st.integers(-2, 42)), draw(st.integers(-2, 32))
+        ring = [(0, 0), (0, 1), (-1, 1)][: draw(st.integers(2, 3))]
+        ids = grid.pack(
+            grid.MODE_HEX, 0,
+            np.array([r + dr for dr, _ in ring]), np.array([q + dq for _, dq in ring]),
+        )
+        cx, cy = grid.centroid(ids, hx)
+        pts.append((float(cx.mean()), float(cy.mean())))
+    return [(_ulps(x, draw(ulp)), _ulps(y, draw(ulp))) for x, y in pts]
+
+
+def _bits(a):
+    return np.asarray(a, dtype=np.float64).view(np.int64)
+
+
+@_spark_settings
+@given(data=st.data(), grids=_grid_pairs())
+def test_cell_id_expr_matches_numpy_encode(spark, data, grids):
+    """expressions.cell_id_expr (the JVM path every raster runs) equals
+    grid.encode bit for bit, square and hex, at tile-edge floats."""
+    sq, hx = grids
+    pts = data.draw(_grid_points(sq, hx))
+    df = spark.createDataFrame(
+        [(i, x, y) for i, (x, y) in enumerate(pts)], "i long, x double, y double"
+    )
+    got = df.select(
+        "i",
+        X.cell_id_expr(F.col("x"), F.col("y"), sq).alias("sq"),
+        X.cell_id_expr(F.col("x"), F.col("y"), hx).alias("hx"),
+    ).orderBy("i").toPandas()
+    x = np.array([p[0] for p in pts])
+    y = np.array([p[1] for p in pts])
+    np.testing.assert_array_equal(got["sq"].to_numpy(np.int64), grid.encode(x, y, sq))
+    np.testing.assert_array_equal(got["hx"].to_numpy(np.int64), grid.encode(x, y, hx))
+
+
+@_spark_settings
+@given(
+    grids=_grid_pairs(),
+    rowcol=st.lists(
+        st.tuples(
+            st.integers(min_value=-(2**26), max_value=2**26),
+            st.integers(min_value=-(2**26), max_value=2**26),
+        )
+        | st.tuples(st.integers(-2, 42), st.integers(-2, 42)),
+        min_size=1,
+        max_size=40,
+    ),
+)
+def test_centroid_expr_matches_numpy_centroid(spark, grids, rowcol):
+    """expressions.centroid_expr equals grid.centroid bit for bit, square
+    and hex, over the full packed axis range."""
+    sq, hx = grids
+    row = np.array([rc[0] for rc in rowcol])
+    col = np.array([rc[1] for rc in rowcol])
+    ids = {
+        spec: grid.pack(spec.mode, spec.level, row, col) for spec in (sq, hx)
+    }
+    df = spark.createDataFrame(
+        [(i, int(a), int(b)) for i, (a, b) in enumerate(zip(ids[sq], ids[hx]))],
+        "i long, sq long, hx long",
+    )
+    cols = []
+    for name, spec in (("sq", sq), ("hx", hx)):
+        cx, cy = X.centroid_expr(F.col(name), spec)
+        cols += [cx.alias(f"{name}_cx"), cy.alias(f"{name}_cy")]
+    got = df.select("i", *cols).orderBy("i").toPandas()
+    for name, spec in (("sq", sq), ("hx", hx)):
+        cx, cy = grid.centroid(ids[spec], spec)
+        np.testing.assert_array_equal(_bits(got[f"{name}_cx"]), _bits(cx))
+        np.testing.assert_array_equal(_bits(got[f"{name}_cy"]), _bits(cy))

@@ -113,3 +113,28 @@ def test_knn_resolution_invariant(spark, docs, queries):
     ).reset_index(drop=True)
     assert (a["doc_id"] == b["doc_id"]).all()
     assert (a["dist"] == b["dist"]).all()
+
+
+def test_candidate_cells_match_numpy_kring(spark, docs):
+    """The ring fan-out knn_join runs (_candidate_cells: broadcast offsets
+    crossJoin, pure Column math) yields exactly grid.kring's cells, square
+    and hex."""
+    from seraster_spark import expressions as X
+    from seraster_spark import grid
+
+    for square in (True, False):
+        spec = grid_spec_for(docs, 100.0, square=square)
+        qdf = (
+            docs.select(F.col("doc_id").alias("_qid"), "x", "y")
+            .limit(50)
+            .withColumn("_qcell", X.cell_id_expr(F.col("x"), F.col("y"), spec))
+            .localCheckpoint()
+        )
+        cells = {r["_qid"]: r["_qcell"] for r in qdf.collect()}
+        got = {}
+        for r in knn._candidate_cells(spark, qdf, spec, 2).collect():
+            got.setdefault(r["_qid"], []).append(r["cell_id"])
+        ids = list(cells)
+        exp = grid.kring(np.array([cells[i] for i in ids], dtype=np.int64), 2, spec)
+        for i, ring in zip(ids, exp):
+            assert sorted(got[i]) == sorted(ring.tolist()), (square, i)

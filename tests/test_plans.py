@@ -37,19 +37,19 @@ def test_scan_is_column_pruned(spark, docs, tmp_path):
 
 
 def test_knn_join_is_broadcast(spark, docs):
+    """The candidate join knn_join builds (ring fan-out via
+    _candidate_cells) broadcasts the query side into the points scan."""
+    from seraster_spark import expressions as X
     from seraster_spark.fixtures import knn_queries_pdf
 
     spec = grid_spec_for(docs, 100.0, square=True)
     q = spark.createDataFrame(knn_queries_pdf(10))
-    out = K.knn_join(docs, q, 3, spec, initial_radius=2)
-    # result correctness is covered elsewhere; here make sure the candidate
-    # join in a fresh single-round plan broadcasts the query side
-    from seraster_spark import expressions as X
-    from seraster_spark.knn import _neighbor_array
-
+    qdf = q.select(
+        F.col("query_id").alias("_qid"), F.col("x").alias("_qx"), F.col("y").alias("_qy")
+    ).withColumn("_qcell", X.cell_id_expr(F.col("_qx"), F.col("_qy"), spec))
+    cand = K._candidate_cells(spark, qdf, spec, 2)
+    assert cand.count() == 10 * 25  # 5x5 square ring per query
     pts = rasterize.assign_tiles(docs.select("doc_id", "x", "y"), spec)
-    qc = rasterize.assign_tiles(q, spec, out_col="_qcell")
-    cand = qc.withColumn("cell_id", F.explode(_neighbor_array(F.col("_qcell"), spec, 2)))
     joined = pts.join(F.broadcast(cand), "cell_id")
     assert "BroadcastHashJoin" in _physical(joined)
 
@@ -66,11 +66,13 @@ def test_rasterize_hot_path_is_codegen(spark, docs):
 
 
 def test_udf_path_is_arrow_not_row(spark, docs):
-    """When the numpy-UDF encoder is requested it must be the Arrow-batched
-    pandas evaluator, never row-at-a-time Python."""
+    """A numpy-UDF kernel (here the WKT polygonizer) must run in the
+    Arrow-batched pandas evaluator, never row-at-a-time Python."""
+    from seraster_spark.udfs import wkt_udf
+
     spec = grid_spec_for(docs, 100.0, square=True)
-    t = rasterize.assign_tiles(docs, spec, use_udf=True)
-    plan = _physical(t.select("cell_id"))
+    t = rasterize.assign_tiles(docs, spec)
+    plan = _physical(t.select(wkt_udf(spec)(F.col("cell_id"))))
     assert "ArrowEvalPython" in plan
     assert "BatchEvalPython" not in plan
 

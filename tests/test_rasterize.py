@@ -327,20 +327,6 @@ def test_salted_equals_unsalted(spark, docs):
     assert top["num_cell"] >= docs.count() * 0.4
 
 
-def test_expr_udf_paths_agree(spark, docs):
-    """JVM Column-math encoder == Arrow numpy UDF encoder, bit for bit,
-    square and hex."""
-    for square in (True, False):
-        spec = grid_spec_for(docs, RES, square=square)
-        a = rasterize.assign_tiles(docs, spec, use_udf=False).select(
-            "doc_id", F.col("cell_id").alias("a")
-        )
-        b = rasterize.assign_tiles(docs, spec, use_udf=True).select(
-            "doc_id", F.col("cell_id").alias("b")
-        )
-        assert a.join(b, "doc_id").filter(F.col("a") != F.col("b")).count() == 0
-
-
 def test_hex_tiles_structural(spark, docs):
     ct = rasterize.rasterize_cell_type(docs, RES, square=False, fun="sum")
     assert ct.filter(F.col("type") != "hexagon").count() == 0

@@ -115,45 +115,41 @@ def test_cosine_near_dup_bucket_cap(spark):
 
 
 def test_arrow_topk_tie_break_deterministic(spark):
-    """Tied cosines at the per-batch cut must keep the smallest ids (the
-    global tie rule) — a bare argpartition splits ties arbitrarily."""
-    import pandas as pd
-
-    from seraster_spark.similarity import brute_force_topk_arrow
-
+    """Tied cosines must keep the smallest ids (the global tie rule), however
+    the items are partitioned."""
     # 30 identical vectors -> all cosines tie; top-3 must be ids 0,1,2
     rows = [(i, [1.0, 0.0]) for i in range(30)]
     items = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = pd.DataFrame({"query_id": ["q"], "embedding": [[1.0, 0.0]]})
+    q = spark.createDataFrame([("q", [1.0, 0.0])], "query_id string, embedding array<double>")
     got = sorted(
-        r["vec_id"]
-        for r in brute_force_topk_arrow(items.repartition(5), q, 3).collect()
+        r["vec_id"] for r in S.brute_force_topk(items.repartition(5), q, 3).collect()
     )
     assert got == [0, 1, 2]
 
 
 def test_arrow_topk_preserves_dtypes_and_empty_queries(spark):
-    import pandas as pd
-
-    from seraster_spark.similarity import brute_force_topk_arrow
-
     items = spark.createDataFrame(
         [("docA", [1.0, 0.0]), ("docB", [0.0, 1.0])],
         "vec_id string, embedding array<double>",
     )
-    q = pd.DataFrame({"query_id": [7], "embedding": [[1.0, 0.0]]})
-    rows = brute_force_topk_arrow(items, q, 1).collect()
+    q = spark.createDataFrame([(7, [1.0, 0.0])], "query_id long, embedding array<double>")
+    out = S.brute_force_topk(items, q, 1)
+    assert out.schema["query_id"].dataType == T.LongType()
+    assert out.schema["vec_id"].dataType == T.StringType()
+    assert out.schema["cosine"].dataType == T.DoubleType()
+    rows = out.collect()
     assert rows[0]["query_id"] == 7          # int preserved, not "7"
     assert rows[0]["vec_id"] == "docA"       # string item ids work
-    empty = brute_force_topk_arrow(items, q.iloc[0:0], 1)
+    empty = S.brute_force_topk(items, q.limit(0), 1)
     assert empty.count() == 0
+    assert empty.schema == out.schema
 
 
 def test_similarity_paths_skip_null_embeddings(spark):
     import pandas as pd
 
     from seraster_spark.similarity import (
-        brute_force_topk_arrow,
+        brute_force_topk,
         cosine_near_duplicates,
         ivf_topk,
     )
@@ -162,8 +158,12 @@ def test_similarity_paths_skip_null_embeddings(spark):
         [(1, [1.0, 0.0]), (2, None), (3, [1.0, 0.0])],
         "vec_id long, embedding array<double>",
     )
+    qdf = spark.createDataFrame([("q", [1.0, 0.0])], "query_id string, embedding array<double>")
+    # the NULL-embedding item scores a NULL cosine, which ranks below every
+    # real one (never NaN at the top of the desc order)
+    top = brute_force_topk(items, qdf, 2).collect()
+    assert {(r["vec_id"], r["cosine"]) for r in top} == {(1, 1.0), (3, 1.0)}
     q = pd.DataFrame({"query_id": ["q"], "embedding": [[1.0, 0.0]]})
-    assert brute_force_topk_arrow(items, q, 2).count() == 2
     got = ivf_topk(items, q, 2, dim=2, n_centroids=1, sample_size=10).collect()
     assert {r["vec_id"] for r in got} == {1, 3}
     pairs = cosine_near_duplicates(items, threshold=0.9, dim=2).collect()
@@ -202,74 +202,70 @@ def test_ivf_training_reproducible_across_partitionings(spark):
     assert np.array_equal(b, c)
 
 
-def test_cosine_arrow_hof_parity(spark):
-    """The Arrow cosine kernel (default verify path) vs the HOF fold:
-    BITWISE equal on integer-valued vectors (every partial sum exact — the
-    oracle regime), ~1e-12 on random floats, and NULL — never NaN — for
-    NULL vectors and zero norms on BOTH impls."""
-    import numpy as np
+def _kernel_cosines(df, threshold=None):
+    out = S._cosine_pairs_map_arrow(df, "a", "b", ["i"], threshold=threshold)
+    return {r["i"]: r["cosine"] for r in out.collect()}
 
-    from seraster_spark.similarity import cosine_expr
 
+def test_as_matrix_rejects_ragged_vectors():
+    """Ragged cells must raise, not be silently re-cut: [[1,2,3],[4]] has 4
+    elements, which reshape(2, -1) would happily turn into a 2x2 matrix."""
+    ok = S._as_matrix(np.array([[1, 2], [3, 4]], dtype=object))
+    np.testing.assert_array_equal(ok, [[1.0, 2.0], [3.0, 4.0]])
+    ragged = np.empty(2, dtype=object)
+    ragged[:] = [[1.0, 2.0, 3.0], [4.0]]
+    with pytest.raises(ValueError, match="expected length 3.*found 1 at row 1"):
+        S._as_matrix(ragged)
+
+
+def test_cosine_kernel_integer_vectors_match_numpy_bitwise(spark):
+    """The one cosine kernel, on integer-valued vectors (every partial sum
+    exact — the oracle regime), equals numpy's cosine BITWISE, in both the
+    plain and the threshold branch; ~1e-12 on random floats."""
     rng = np.random.default_rng(3)
-    rows = []
-    for i in range(200):
-        a = [float(x) for x in rng.integers(1, 97, 16)]
-        b = [float(x) for x in rng.integers(1, 97, 16)]
-        rows.append((i, a, b))
-    rows.append((900, None, [1.0] * 16))
-    rows.append((901, [0.0] * 16, [1.0] * 16))
+    a = rng.integers(-40, 97, (200, 16)).astype(np.float64)
+    b = rng.integers(-40, 97, (200, 16)).astype(np.float64)
     df = spark.createDataFrame(
-        rows, "i long, a array<double>, b array<double>"
-    )
-    got = df.select(
-        "i",
-        cosine_expr(F.col("a"), F.col("b"), "arrow").alias("ar"),
-        cosine_expr(F.col("a"), F.col("b"), "hof").alias("ho"),
-    ).collect()
-    for r in got:
-        if r["i"] >= 900:
-            assert r["ar"] is None and r["ho"] is None, r
-        else:
-            assert r["ar"] == r["ho"], r  # bitwise: integer-valued inputs
-
-    fl = spark.createDataFrame(
-        [(i, [float(x) for x in rng.normal(size=16)],
-          [float(x) for x in rng.normal(size=16)]) for i in range(100)],
+        [(i, a[i].tolist(), b[i].tolist()) for i in range(200)],
         "i long, a array<double>, b array<double>",
     )
-    for r in fl.select(
-        cosine_expr(F.col("a"), F.col("b"), "arrow").alias("ar"),
-        cosine_expr(F.col("a"), F.col("b"), "hof").alias("ho"),
-    ).collect():
-        assert abs(r["ar"] - r["ho"]) < 1e-12
+    exp = {
+        i: float(np.dot(a[i], b[i]) / (np.sqrt(a[i] @ a[i]) * np.sqrt(b[i] @ b[i])))
+        for i in range(200)
+    }
+    assert _kernel_cosines(df) == exp
+    kept = _kernel_cosines(df.repartition(3), threshold=0.25)
+    assert kept == {i: c for i, c in exp.items() if c >= 0.25}
+    assert 0 < len(kept) < 200
 
-    import pytest as _pt
+    fa, fb = rng.normal(size=(100, 16)), rng.normal(size=(100, 16))
+    fl = spark.createDataFrame(
+        [(i, fa[i].tolist(), fb[i].tolist()) for i in range(100)],
+        "i long, a array<double>, b array<double>",
+    )
+    for i, c in _kernel_cosines(fl).items():
+        want = np.dot(fa[i], fb[i]) / (np.linalg.norm(fa[i]) * np.linalg.norm(fb[i]))
+        assert abs(c - want) < 1e-12
 
-    with _pt.raises(ValueError, match="exact_impl"):
-        cosine_expr(F.col("a"), F.col("b"), "nope")
 
-
-def test_cosine_arrow_survives_ragged_and_empty_vectors(spark):
-    """r5 review fix: a truncated/corrupt embedding (mismatched pair
-    lengths) or an empty vector yields NULL — never a task failure
-    (np.stack on ragged input used to abort the whole scan) and never NaN
-    (which would sort above every real cosine in a desc top-k)."""
-    from seraster_spark.similarity import cosine_expr
-
+def test_cosine_kernel_survives_ragged_and_empty_vectors(spark):
+    """Degenerate rows yield a NULL cosine — never a task failure (np.stack
+    on ragged input used to abort the whole scan) and never NaN (which would
+    sort above every real cosine in a desc top-k) — and never pass a
+    threshold."""
+    inf = float("inf")
     rows = [
         (0, [1.0, 2.0, 3.0], [1.0, 2.0, 3.0]),   # clean -> 1.0
-        (1, [1.0, 2.0], [1.0, 2.0, 3.0]),         # ragged -> NULL
+        (1, [1.0, 2.0], [1.0, 2.0, 3.0]),         # mismatched lengths -> NULL
         (2, [], []),                               # empty -> NULL
         (3, [float("nan"), 1.0], [1.0, 1.0]),      # NaN element -> NULL
         (4, None, [1.0]),                          # NULL side -> NULL
+        (5, [0.0, 0.0], [1.0, 1.0]),               # zero norm -> NULL
+        (6, [inf, 1.0], [1.0, 1.0]),               # inf element -> NULL
+        (7, [3.0, 4.0], [4.0, 3.0]),               # clean -> 24/25
     ]
     df = spark.createDataFrame(rows, "i long, a array<double>, b array<double>")
-    got = {
-        r["i"]: r["c"]
-        for r in df.select(
-            "i", cosine_expr(F.col("a"), F.col("b"), "arrow").alias("c")
-        ).collect()
-    }
-    assert got[0] == 1.0
-    assert got[1] is None and got[2] is None and got[3] is None and got[4] is None
+    clean = {0: 1.0, 7: 24.0 / 25.0}
+    assert _kernel_cosines(df) == {**{i: None for i in range(8)}, **clean}
+    assert _kernel_cosines(df, threshold=-1.0) == clean
+    assert _kernel_cosines(df, threshold=0.99) == {0: 1.0}

@@ -1,4 +1,4 @@
-"""Arrow fast-path ANN + IVF: same results as the exact fold / high recall."""
+"""Exact brute-force top-k vs numpy, and IVF recall against it."""
 
 import numpy as np
 import pandas as pd
@@ -40,10 +40,10 @@ def _np_topk(m, qidx, k):
 def test_arrow_topk_matches_numpy(spark, clustered):
     items, m = clustered
     qidx = [0, 7, 42]
-    qpdf = pd.DataFrame(
-        {"query_id": [str(i) for i in qidx], "embedding": [m[i] for i in qidx]}
+    queries = items.filter(F.col("vec_id").isin(qidx)).select(
+        F.col("vec_id").cast("string").alias("query_id"), "embedding"
     )
-    got = S.brute_force_topk_arrow(items, qpdf, 5).toPandas()
+    got = S.brute_force_topk(items, queries, 5).toPandas()
     for i in qidx:
         grp = got[got["query_id"] == str(i)].sort_values("rank")
         assert list(grp["vec_id"]) == _np_topk(m, i, 5)
@@ -90,7 +90,7 @@ def test_ivf_trained_distributed_100k_recall(spark):
             "embedding": [list(r["embedding"]) for r in qrows],
         }
     )
-    exact = S.brute_force_topk_arrow(items, qpdf, 5).toPandas()
+    exact = S.brute_force_topk(items, spark.createDataFrame(qpdf), 5).toPandas()
     got = S.ivf_topk(
         items, qpdf, 5, dim=DIM, n_centroids=8, n_probe=2,
         sample_size=2000, kmeans_iters=4, seed=11,

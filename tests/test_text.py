@@ -80,6 +80,32 @@ def test_minhash_lsh_finds_near_dups(spark, corpus):
     assert all(r["jaccard"] >= 0.3 for r in pairs)
 
 
+def test_minhash_lsh_recalls_planted_near_duplicates(spark):
+    """200 planted pairs at Jaccard 45/47 (a 48-word doc and a copy with only
+    its last word changed) must ALL be candidates: with 8 independent bands
+    of 4 rows the miss rate is (1 - J^4)^8 ~ 4e-7 per pair. A correlated
+    permutation family (modulus far above the hash range) missed ~3.5%."""
+    import random
+
+    rnd = random.Random(5)
+
+    def doc():
+        return [f"w{rnd.randrange(10**6)}" for _ in range(48)]
+
+    rows = []
+    for i in range(200):
+        words = doc()
+        rows.append((2 * i, " ".join(words)))
+        rows.append((2 * i + 1, " ".join(words[:-1] + [f"z{i}"])))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        (r["id_a"], r["id_b"])
+        for r in X.minhash_lsh_candidates(df, verify_threshold=None).collect()
+    }
+    missed = [i for i in range(200) if (2 * i, 2 * i + 1) not in got]
+    assert not missed, f"{len(missed)} of 200 planted pairs missed"
+
+
 def test_ngram_jaccard_oracle(spark, corpus):
     got = {
         (r["id_a"], r["id_b"]): r["jaccard"]
@@ -190,9 +216,11 @@ def test_simhash_md5_oracle(spark, corpus):
 
 def test_arrow_expr_shingle_parity_edge_whitespace(spark):
     """Regression: F.trim removes SPACES only, so a leading tab yields a
-    leading empty token in the expr path — the arrow path must replicate
-    that (str.strip(' ') not str.strip()), or the default dedup results
-    silently change on whitespace-edged texts."""
+    leading empty token in shingles_expr — the Arrow shingler behind
+    minhash_lsh_candidates must replicate that (str.strip(' ') not
+    str.strip()), or dedup results silently change on whitespace-edged
+    texts. Every verified Jaccard must equal the one over the expression
+    shingles."""
     rows = [
         (1, "\thello world foo bar"),
         (2, "hello world foo bar"),
@@ -201,11 +229,19 @@ def test_arrow_expr_shingle_parity_edge_whitespace(spark):
         (5, None),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(map(tuple, X.minhash_lsh_candidates(df, verify_threshold=0.0, impl="arrow").collect()))
-    e = sorted(map(tuple, X.minhash_lsh_candidates(df, verify_threshold=0.0, impl="expr").collect()))
-    assert a == e and len(a) > 0
-    with pytest.raises(ValueError, match="impl"):
-        X.minhash_lsh_candidates(df, impl="Arrow")
+    sh = {
+        r["doc_id"]: set(r["s"] or [])
+        for r in df.select(
+            "doc_id", X.shingles_expr(F.lower(F.col("text")), 3).alias("s")
+        ).collect()
+    }
+    assert " hello world" in sh[1]  # the leading empty token survives trim
+    got = X.minhash_lsh_candidates(df, verify_threshold=0.0).collect()
+    assert len(got) > 0
+    assert (2, 4) in {(r["id_a"], r["id_b"]) for r in got}
+    for r in got:
+        a, b = sh[r["id_a"]], sh[r["id_b"]]
+        assert r["jaccard"] == pytest.approx(len(a & b) / len(a | b)), r
 
 
 def test_simhash_hex_candidates(spark, corpus):
