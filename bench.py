@@ -6,6 +6,9 @@ Env:
   SPARK_GRAFT_CPUS    local[N] parallelism (default 32)
   BENCH_DOCS          synthetic corpus size for the rasterization
                       throughput measurements (default 2_000_000)
+  BENCH_REPEATS       timed repeats per query, min taken (default 3)
+  BENCH_NO_PROBE      "1" skips the throttle probe and the multi-core
+                      window controls (no control_* / throttle_* keys)
 
 The rasterization benchmarks run over a synthetic interleaved-document
 corpus generated DISTRIBUTED via spark.range + column expressions (never
@@ -13,28 +16,43 @@ driver-side pandas), with a 10%-hot-tile skew injection — measuring the
 engine exactly where 100 TB behavior is decided: encode → one shuffle →
 broadcast join. Results are forced with a noop-style full-column hash
 aggregate so column pruning cannot skip work.
+
+``builders`` is the one query registry: ``bench_extra.py`` times, noop-sinks
+and plan-dumps the same leaves through it.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
+import tempfile
 import time
+from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.window import Window
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from seraster_spark import driver_queries as DQ  # noqa: E402
 from seraster_spark import knn as K  # noqa: E402
 from seraster_spark import rasterize as R  # noqa: E402
+from seraster_spark import similarity as S  # noqa: E402
 from seraster_spark import text as TX  # noqa: E402
-from seraster_spark.bbox import BBox  # noqa: E402
 from seraster_spark.grid import GridSpec  # noqa: E402
 from seraster_spark.io import read_table  # noqa: E402
+from seraster_spark.joins import asof_join, asof_join_bucketed  # noqa: E402
 from seraster_spark.permutate import permutate_by_rotation  # noqa: E402
+from seraster_spark.pointpat import kde_raster, nn_stats, pair_stats  # noqa: E402
+from seraster_spark.segments import rasterize_segments  # noqa: E402
 from seraster_spark.session import get_spark  # noqa: E402
+from seraster_spark.sketch import bloom_filter_build  # noqa: E402
+from seraster_spark.vector import (  # noqa: E402
+    rasterize_polygons,
+    spatial_join,
+    spatial_join_corpus,
+)
 
 EXTENT_X, EXTENT_Y = 3000.0, 2000.0
 
@@ -72,76 +90,55 @@ def force(df: DataFrame) -> int:
 
 SPEC_SQ = GridSpec(-50.0, -50.0, 3050.0, 2050.0, 100.0, square=True)
 SPEC_HX = GridSpec(-50.0, -50.0, 3050.0, 2050.0, 100.0, square=False)
-BBOX = BBox(0.0, 0.0, EXTENT_X, EXTENT_Y)
 
 
-def bench_queries(spark, sf_dir: str, n_docs: int):
+def _docs_path(n_docs: int) -> str:
+    return os.path.join(tempfile.gettempdir(), f"bench_docs_{n_docs}")
+
+
+def _staged(spark, path: str, make: Callable[[], DataFrame]) -> DataFrame:
+    """Write ``make()`` to parquet once (untimed, reused across runs) and
+    read it back."""
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        make().write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+def builders(spark, sf_dir: str, n_docs: int) -> dict[str, Callable[[], DataFrame]]:
+    """The bench query registry: leaf name -> zero-arg callable returning
+    the leaf's DataFrame, in timing order. The caller applies the sink
+    (``force`` or a noop write); inputs are staged here, untimed."""
     # Stage the synthetic corpus to parquet (untimed): the benchmarks then
     # measure scan + engine compute, as a real pipeline would — and column
     # pruning per query behaves exactly as it does at 100 TB. Higher-order
     # generator expressions are interpreted (not codegen'd) and would
     # otherwise dominate the timings.
-    import tempfile
-
-    stage = os.path.join(tempfile.gettempdir(), f"bench_docs_{n_docs}")
-    if not os.path.exists(os.path.join(stage, "_SUCCESS")):
-        synth_docs(spark, n_docs).write.mode("overwrite").parquet(stage)
-    docs = spark.read.parquet(stage)
-    # untimed warmup: JIT/codegen/scan-cache so the first timed query isn't
-    # charged one-time session costs
-    force(R.rasterize_cell_type(docs.limit(200_000), 100.0, fun="sum", spec=SPEC_SQ))
-    qs: dict[str, float] = {}
-    extra: dict[str, float] = {}
-
-    # 3 repeats, min taken: the shared host throttles in bursts (observed
-    # 15x wall variance minutes apart) — two repeats can both land throttled
-    repeats = int(os.environ.get("BENCH_REPEATS", "3"))
-
-    def timed(name, fn):
-        # min over repeats: robust to shared-host CPU noise
-        best, out = None, None
-        for _ in range(repeats):
-            t0 = time.time()
-            out = fn()
-            dt = time.time() - t0
-            best = dt if best is None or dt < best else best
-        qs[name] = round(best, 3)
-        return out
+    docs = _staged(spark, _docs_path(n_docs), lambda: synth_docs(spark, n_docs))
+    out: dict[str, Callable[[], DataFrame]] = {}
 
     # q1: cell-type raster, square, sum (the flagship path)
-    n_tiles = timed(
-        "raster_square_kind_sum",
-        lambda: force(R.rasterize_cell_type(docs, 100.0, fun="sum", spec=SPEC_SQ)),
+    out["raster_square_kind_sum"] = lambda: R.rasterize_cell_type(
+        docs, 100.0, fun="sum", spec=SPEC_SQ
     )
-    extra["docs_per_sec_raster_square"] = round(n_docs / qs["raster_square_kind_sum"], 1)
-    extra["tiles_per_sec_raster_square"] = round(n_tiles / qs["raster_square_kind_sum"], 1)
 
     # q2: gene-expression mean (explodes 10 features/doc)
-    timed(
-        "raster_square_value_mean",
-        lambda: force(R.rasterize_gene_expression(docs, 100.0, fun="mean", spec=SPEC_SQ)),
+    out["raster_square_value_mean"] = lambda: R.rasterize_gene_expression(
+        docs, 100.0, fun="mean", spec=SPEC_SQ
     )
-    extra["triplets_per_sec_value_mean"] = round(10 * n_docs / qs["raster_square_value_mean"], 1)
 
     # q3: hex raster
-    timed(
-        "raster_hex_kind_sum",
-        lambda: force(R.rasterize_cell_type(docs, 100.0, fun="sum", spec=SPEC_HX)),
+    out["raster_hex_kind_sum"] = lambda: R.rasterize_cell_type(
+        docs, 100.0, fun="sum", spec=SPEC_HX
     )
 
     # q4: rotation fan-out (4 perms) + common-grid re-raster
     big_spec = GridSpec(-2000.0, -2000.0, 5000.0, 4000.0, 100.0, square=True)
-    timed(
-        "rotation_raster",
-        lambda: force(
-            R.rasterize_cell_type(
-                permutate_by_rotation(docs.drop("values"), n_perm=4, origin=(1500.0, 1000.0)),
-                100.0,
-                fun="sum",
-                group_cols=["perm"],
-                spec=big_spec,
-            )
-        ),
+    out["rotation_raster"] = lambda: R.rasterize_cell_type(
+        permutate_by_rotation(docs.drop("values"), n_perm=4, origin=(1500.0, 1000.0)),
+        100.0,
+        fun="sum",
+        group_cols=["perm"],
+        spec=big_spec,
     )
 
     # q4b: tile pyramid — two rollup levels derived from tiles (no re-scan)
@@ -151,21 +148,15 @@ def bench_queries(spark, sf_dir: str, n_docs: int):
         ).agg(F.count(F.lit(1)).cast("double").alias("pixelval"))
         l1, s1 = R.rollup_tiles(base, SPEC_SQ, factor=2)
         l2, _ = R.rollup_tiles(l1.select("cell_id", "pixelval"), s1, factor=2)
-        return force(l2)
+        return l2
 
-    timed("tile_pyramid", pyramid)
+    out["tile_pyramid"] = pyramid
 
     # q5: salted roster aggregation on the skewed corpus
-    timed(
-        "salted_roster",
-        lambda: force(
-            R.tile_meta(
-                R.assign_tiles(docs.select("doc_id", "x", "y"), SPEC_SQ),
-                SPEC_SQ,
-                salt_buckets=16,
-            ).drop("cellID_list")
-        ),
-    )
+    out["salted_roster"] = lambda: R.tile_meta(
+        R.assign_tiles(docs.select("doc_id", "x", "y"), SPEC_SQ),
+        salt_buckets=16,
+    ).drop("cellID_list")
 
     # q5c: segment (trajectory) rasterization — per-kind doc polylines
     # (lead over a kind-partitioned window) clipped to tiles by the
@@ -174,11 +165,9 @@ def bench_queries(spark, sf_dir: str, n_docs: int):
     # to a few partitions and the explode would run on those few cores
     # (measured 51 s vs 21 s). Arrow kernel vs pure-Column pair, same
     # plan otherwise (measured ~5x: no per-candidate JVM row copies).
-    def seg_input():
-        from pyspark.sql.window import Window
-
+    def seg_raster(impl):
         w = Window.partitionBy("kind").orderBy("doc_id")
-        return (
+        segs = (
             docs.select(
                 "kind",
                 "doc_id",
@@ -192,56 +181,44 @@ def bench_queries(spark, sf_dir: str, n_docs: int):
             .drop("kind", "doc_id")
             .repartition(2 * spark.sparkContext.defaultParallelism)
         )
+        return rasterize_segments(segs, SPEC_SQ, value_cols=("val",), impl=impl)
 
-    def seg_raster(impl):
-        from seraster_spark.segments import rasterize_segments
+    out["seg_raster"] = lambda: seg_raster("arrow")
+    out["seg_raster_column"] = lambda: seg_raster("column")
 
-        return force(
-            rasterize_segments(seg_input(), SPEC_SQ, value_cols=("val",), impl=impl)
-        )
-
-    timed("seg_raster", lambda: seg_raster("arrow"))
-    timed("seg_raster_column", lambda: seg_raster("column"))
+    # n_docs/40 (at least 1000) synthetic axis-aligned rects; each width
+    # and height is 1-8 times ``side``
+    def rects(side: float, *extra):
+        xa = F.pmod(F.xxhash64(F.col("id"), F.lit(11)), F.lit(2800)).cast("double") + 0.5
+        ya = F.pmod(F.xxhash64(F.col("id"), F.lit(12)), F.lit(1800)).cast("double") + 0.5
+        wdt = (F.pmod(F.xxhash64(F.col("id"), F.lit(13)), F.lit(8)) + 1).cast("double") * side
+        hgt = (F.pmod(F.xxhash64(F.col("id"), F.lit(14)), F.lit(8)) + 1).cast("double") * side
+        return spark.range(0, max(1000, n_docs // 40)).select(
+            F.col("id").alias("poly_id"),
+            F.array(xa, xa + wdt, xa + wdt, xa).alias("xs"),
+            F.array(ya, ya, ya + hgt, ya + hgt).alias("ys"),
+            *extra,
+        ).repartition(spark.sparkContext.defaultParallelism)
 
     # q5d: polygon-corpus coverage raster — 50k synthetic rects (DATA, not
     # driver literals) burned onto the doc grid via the fused-partials
     # kernel; rects take the vectorized closed-form path, so this measures
     # candidate generation + bincount partials + the one tiny shuffle
-    def poly_raster():
-        from seraster_spark.vector import rasterize_polygons
-
-        n_polys = max(1000, n_docs // 40)
-        base = spark.range(0, n_polys)
-        xa = F.pmod(F.xxhash64(F.col("id"), F.lit(11)), F.lit(2800)).cast("double") + 0.5
-        ya = F.pmod(F.xxhash64(F.col("id"), F.lit(12)), F.lit(1800)).cast("double") + 0.5
-        wdt = (F.pmod(F.xxhash64(F.col("id"), F.lit(13)), F.lit(8)) + 1).cast("double") * 50.0
-        hgt = (F.pmod(F.xxhash64(F.col("id"), F.lit(14)), F.lit(8)) + 1).cast("double") * 50.0
-        polys = base.select(
-            F.col("id").alias("poly_id"),
-            F.array(xa, xa + wdt, xa + wdt, xa).alias("xs"),
-            F.array(ya, ya, ya + hgt, ya + hgt).alias("ys"),
-            F.pmod(F.col("id"), F.lit(100)).cast("double").alias("burn"),
-        ).repartition(spark.sparkContext.defaultParallelism)
-        return force(rasterize_polygons(polys, SPEC_SQ, ("burn",)))
-
-    timed("poly_raster", poly_raster)
+    out["poly_raster"] = lambda: rasterize_polygons(
+        rects(50.0, F.pmod(F.col("id"), F.lit(100)).cast("double").alias("burn")),
+        SPEC_SQ,
+        ("burn",),
+    )
 
     # q5b: polygon containment spatial join (north-rule flagship): docs ×
     # 2 overlapping polygons via covering-cell equi-join + Arrow PIP
-    from seraster_spark.vector import spatial_join
-
     polys = {
         "A": [(300.0, 200.0), (2600.0, 400.0), (2500.0, 1800.0), (500.0, 1700.0)],
         "B": [(1400.0, 100.0), (2900.0, 900.0), (1500.0, 1900.0)],
     }
-    timed(
-        "spatial_join",
-        lambda: force(
-            spatial_join(
-                R.assign_tiles(docs.select("doc_id", "x", "y"), SPEC_SQ), polys, SPEC_SQ
-            ).select("doc_id", "poly_id")
-        ),
-    )
+    out["spatial_join"] = lambda: spatial_join(
+        R.assign_tiles(docs.select("doc_id", "x", "y"), SPEC_SQ), polys, SPEC_SQ
+    ).select("doc_id", "poly_id")
 
     # q5c: corpus↔corpus containment join (the 100 TB parcels×points
     # shape): 500k docs × 50k PARCEL-sized rects (5-40 units) as DATA
@@ -254,33 +231,20 @@ def bench_queries(spark, sf_dir: str, n_docs: int):
     SPEC_SJ = GridSpec(-50.0, -50.0, 3050.0, 2050.0, 12.5, square=True)
 
     def sj_corpus(bc):
-        from seraster_spark.vector import spatial_join_corpus
-
-        n_polys = max(1000, n_docs // 40)
-        base = spark.range(0, n_polys)
-        xa = F.pmod(F.xxhash64(F.col("id"), F.lit(11)), F.lit(2800)).cast("double") + 0.5
-        ya = F.pmod(F.xxhash64(F.col("id"), F.lit(12)), F.lit(1800)).cast("double") + 0.5
-        wdt = (F.pmod(F.xxhash64(F.col("id"), F.lit(13)), F.lit(8)) + 1).cast("double") * 5.0
-        hgt = (F.pmod(F.xxhash64(F.col("id"), F.lit(14)), F.lit(8)) + 1).cast("double") * 5.0
-        pl = base.select(
-            F.col("id").alias("poly_id"),
-            F.array(xa, xa + wdt, xa + wdt, xa).alias("xs"),
-            F.array(ya, ya, ya + hgt, ya + hgt).alias("ys"),
-        ).repartition(spark.sparkContext.defaultParallelism)
         docs_sj = (
             docs.select("doc_id", "x", "y")
             .limit(500_000)
             .repartition(spark.sparkContext.defaultParallelism)
         )
         wc = R.assign_tiles(docs_sj, SPEC_SJ)
-        return force(
-            spatial_join_corpus(wc, pl, SPEC_SJ, broadcast_cover=bc)
+        return (
+            spatial_join_corpus(wc, rects(5.0), SPEC_SJ, broadcast_cover=bc)
             .groupBy("poly_id")
             .agg(F.count(F.lit(1)).alias("n"))
         )
 
-    timed("sj_corpus_bcast", lambda: sj_corpus(True))
-    timed("sj_corpus_shuffle", lambda: sj_corpus(False))
+    out["sj_corpus_bcast"] = lambda: sj_corpus(True)
+    out["sj_corpus_shuffle"] = lambda: sj_corpus(False)
 
     # q5d: point-pattern pair statistics (Ripley-K counts + semivariogram)
     # over the full corpus — bucketed 9-neighbor candidate join + one
@@ -288,46 +252,29 @@ def bench_queries(spark, sf_dir: str, n_docs: int):
     # 80x80 box -> ~31 pts/unit^2 at sf0.1): r_max=1 keeps true pairs
     # ~20M and candidates ~60M, dominated by the skewed buckets (the AQE
     # skew-split shape, not the plan's overhead).
-    def pair_stats_q():
-        from seraster_spark.pointpat import pair_stats
-
-        pts = docs.select(
-            "doc_id", "x", "y", F.pmod(F.col("doc_id"), F.lit(997)).alias("val")
-        )
-        return force(
-            pair_stats(pts, [0.5, 1.0], value_col="val", exact_int=False)
-        )
-
-    timed("pair_stats", pair_stats_q)
+    out["pair_stats"] = lambda: pair_stats(
+        docs.select("doc_id", "x", "y", F.pmod(F.col("doc_id"), F.lit(997)).alias("val")),
+        [0.5, 1.0],
+        value_col="val",
+        exact_int=False,
+    )
 
     # q5d2: per-point nearest-neighbor stats (empirical G) — same bucket
     # cover as pair_stats but adds the groupBy(id) min: 2M per-point
     # states (one BIGINT each) through a map-side-combining shuffle.
-    def nn_stats_q():
-        from seraster_spark.pointpat import nn_stats
-
-        return force(
-            nn_stats(docs.select("doc_id", "x", "y"), [0.5, 1.0], exact_int=False)
-        )
-
-    timed("nn_stats", nn_stats_q)
+    out["nn_stats"] = lambda: nn_stats(
+        docs.select("doc_id", "x", "y"), [0.5, 1.0], exact_int=False
+    )
 
     # q5e: quartic KDE density surface over the full corpus, res-20 grid,
     # h=30 -> fan-out (2h/res+2)^2 = 25 candidates/point (~50M at sf0.1)
     # streaming through map-side partial aggregation into a ~15k-tile
     # shuffle. The hot 80x80 box is NOT a shuffle skew problem: partial
     # agg reduces each task's fan-out to tile cardinality pre-exchange.
-    def kde_q():
-        from seraster_spark.pointpat import kde_raster
-
-        return force(
-            kde_raster(
-                docs.select("x", "y"), 20, 30, -50, -50,
-                nrows=105, ncols=155, exact_int=False,
-            )
-        )
-
-    timed("kde", kde_q)
+    out["kde"] = lambda: kde_raster(
+        docs.select("x", "y"), 20, 30, -50, -50,
+        nrows=105, ncols=155, exact_int=False,
+    )
 
     # q6: kNN, 500 queries against the full corpus. The kNN grid is
     # DENSITY-MATCHED: res chosen so a tile holds ~4k docs, making the
@@ -337,8 +284,6 @@ def bench_queries(spark, sf_dir: str, n_docs: int):
     # input at 2M docs; measured ~2.7× faster). Exactness is independent of
     # resolution: the completeness bound + doubling loop guarantees the
     # true top-k at ANY grid.
-    import math
-
     res_knn = max(5.0, round(math.sqrt(4 * 10 * EXTENT_X * EXTENT_Y / n_docs), 1))
     spec_knn = GridSpec(-50.0, -50.0, 3050.0, 2050.0, res_knn, square=True)
     queries = (
@@ -349,40 +294,30 @@ def bench_queries(spark, sf_dir: str, n_docs: int):
             (F.pmod(F.xxhash64("id", F.lit(9)), F.lit(2000000)) / 1000.0).alias("y"),
         )
     )
-    timed(
-        "knn_500q",
-        lambda: force(K.knn_join(docs.select("doc_id", "x", "y"), queries, 10, spec_knn)),
+    out["knn_500q"] = lambda: K.knn_join(
+        docs.select("doc_id", "x", "y"), queries, 10, spec_knn
     )
 
     # q6b: as-of join at corpus scale — every sampled doc (10%) matched to
     # the latest earlier doc (by id-as-timestamp) of its kind among a 1/3
     # subset: 2.2M rows through the ONE union+window shuffle on 16 keys
     # (deliberately coarse keys: stresses the per-key window sort)
-    from seraster_spark.joins import asof_join
-
-    timed(
-        "asof_join",
-        lambda: force(
-            asof_join(
-                docs.filter(F.col("doc_id") % 10 == 0).select("doc_id", "kind", "x"),
-                docs.filter(F.col("doc_id") % 3 == 0).select(
-                    "kind", "doc_id",
-                    F.col("doc_id").alias("rid"), F.col("y").alias("v"),
-                ),
-                on=["kind"],
-                ts_col="doc_id",
-                right_cols=["rid", "v"],
-                tiebreak="rid",
-            ).select("doc_id", "kind", "asof_rid", "asof_v")
+    out["asof_join"] = lambda: asof_join(
+        docs.filter(F.col("doc_id") % 10 == 0).select("doc_id", "kind", "x"),
+        docs.filter(F.col("doc_id") % 3 == 0).select(
+            "kind", "doc_id",
+            F.col("doc_id").alias("rid"), F.col("y").alias("v"),
         ),
-    )
+        on=["kind"],
+        ts_col="doc_id",
+        right_cols=["rid", "v"],
+        tiebreak="rid",
+    ).select("doc_id", "kind", "asof_rid", "asof_v")
 
     # q6c: as-of hot-key escape — 50% of both sides on ONE key. The plain
     # operator serializes the hot key through a single window-sort task;
     # asof_join_bucketed splits it across ~40 time buckets with
     # carry-forward seeds (identical rows, see test_joins parity)
-    from seraster_spark.joins import asof_join_bucketed
-
     hot_kind = (
         F.when(F.col("doc_id") % 2 == 0, F.lit("hot"))
         .otherwise(F.col("kind"))
@@ -392,48 +327,36 @@ def bench_queries(spark, sf_dir: str, n_docs: int):
     hot_r = docs.filter(F.col("doc_id") % 3 == 0).select(
         hot_kind, "doc_id", F.col("doc_id").alias("rid"), F.col("y").alias("v")
     )
-    timed(
-        "asof_hot_plain",
-        lambda: force(
-            asof_join(
-                hot_l, hot_r, on=["kind"], ts_col="doc_id",
-                right_cols=["rid", "v"], tiebreak="rid",
-            ).select("doc_id", "kind", "asof_rid", "asof_v")
-        ),
-    )
-    timed(
-        "asof_hot_bucketed",
-        lambda: force(
-            asof_join_bucketed(
-                hot_l, hot_r, on=["kind"], ts_col="doc_id",
-                right_cols=["rid", "v"], bucket=float(max(n_docs // 40, 1)),
-                tiebreak="rid",
-            ).select("doc_id", "kind", "asof_rid", "asof_v")
-        ),
-    )
+    out["asof_hot_plain"] = lambda: asof_join(
+        hot_l, hot_r, on=["kind"], ts_col="doc_id",
+        right_cols=["rid", "v"], tiebreak="rid",
+    ).select("doc_id", "kind", "asof_rid", "asof_v")
+    out["asof_hot_bucketed"] = lambda: asof_join_bucketed(
+        hot_l, hot_r, on=["kind"], ts_col="doc_id",
+        right_cols=["rid", "v"], bucket=float(max(n_docs // 40, 1)),
+        tiebreak="rid",
+    ).select("doc_id", "kind", "asof_rid", "asof_v")
 
     # table-backed ops at sf_dir
     d = read_table(spark, sf_dir, "documents")
-    timed("dedup_exact", lambda: force(TX.exact_dedup(d).select("doc_id", "dup_group_size", "is_canonical")))
+    out["dedup_exact"] = lambda: TX.exact_dedup(d).select(
+        "doc_id", "dup_group_size", "is_canonical"
+    )
     # cap on: the production-default safe configuration (degenerate-bucket
     # guard costs one slim agg + join on the band key)
-    timed(
-        "minhash_lsh",
-        lambda: force(
-            TX.minhash_lsh_candidates(d, verify_threshold=0.3, max_bucket_size=100_000)
-        ),
+    out["minhash_lsh"] = lambda: TX.minhash_lsh_candidates(
+        d, verify_threshold=0.3, max_bucket_size=100_000
     )
-    timed("simhash", lambda: force(TX.simhash(d)))
-    timed("token_quality", lambda: force(TX.quality_score(TX.token_count(d)).select(
-        "doc_id", "n_tokens", "quality_score")))
-
-    from seraster_spark import similarity as S
+    out["simhash"] = lambda: TX.simhash(d)
+    out["token_quality"] = lambda: TX.quality_score(TX.token_count(d)).select(
+        "doc_id", "n_tokens", "quality_score"
+    )
 
     e = read_table(spark, sf_dir, "embeddings")
     eq = e.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    timed("ann_bruteforce", lambda: force(S.brute_force_topk(e, eq, 10)))
+    out["ann_bruteforce"] = lambda: S.brute_force_topk(e, eq, 10)
 
     # q8: ANN at corpus scale — 200k×64 synthetic vectors (staged untimed,
     # like the doc corpus; ~1% exact-duplicate pairs seeded so near-dup has
@@ -444,8 +367,8 @@ def bench_queries(spark, sf_dir: str, n_docs: int):
     #                    a measured cost, not just a pytest
     #   cosine_neardup   LSH self-join + Arrow exact-cosine verify
     n_vec, dim = 200_000, 64
-    vstage = os.path.join(tempfile.gettempdir(), f"bench_vecs_{n_vec}_{dim}")
-    if not os.path.exists(os.path.join(vstage, "_SUCCESS")):
+
+    def synth_vecs():
         seed_id = F.when(
             (F.pmod(F.col("id"), F.lit(97)) == 0) & (F.col("id") > 0),
             F.col("id") - 1,
@@ -455,10 +378,15 @@ def bench_queries(spark, sf_dir: str, n_docs: int):
             lambda j: (F.pmod(F.xxhash64(seed_id, j), F.lit(2001)) - 1000.0)
             / 1000.0,
         )
-        spark.range(0, n_vec).select(
+        return spark.range(0, n_vec).select(
             F.col("id").alias("vec_id"), vec.alias("embedding")
-        ).write.mode("overwrite").parquet(vstage)
-    vecs = spark.read.parquet(vstage)
+        )
+
+    vecs = _staged(
+        spark,
+        os.path.join(tempfile.gettempdir(), f"bench_vecs_{n_vec}_{dim}"),
+        synth_vecs,
+    )
     vq = vecs.filter(F.pmod(F.col("vec_id"), F.lit(200)) == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -481,58 +409,88 @@ def bench_queries(spark, sf_dir: str, n_docs: int):
         ).otherwise(F.concat(F.lit("new"), F.col("id").cast("string"))).alias("text"),
     )
     bloom_bits, bloom_hashes = 1 << 25, 5  # ~16x bits/key at 2M keys
-    wstage = os.path.join(
-        tempfile.gettempdir(), f"bench_bloom_{n_docs}_{bloom_bits}_{bloom_hashes}"
-    )
-    if not os.path.exists(os.path.join(wstage, "_SUCCESS")):
-        from seraster_spark.sketch import bloom_filter_build
-
-        hh = TX.content_hash_expr("text")
-        bloom_filter_build(
-            hist_txt.select(hh.alias("content_hash")).distinct(),
+    bloom_words = _staged(
+        spark,
+        os.path.join(
+            tempfile.gettempdir(), f"bench_bloom_{n_docs}_{bloom_bits}_{bloom_hashes}"
+        ),
+        lambda: bloom_filter_build(
+            hist_txt.select(TX.content_hash_expr("text").alias("content_hash")).distinct(),
             F.col("content_hash"),
             bloom_bits,
             bloom_hashes,
-        ).write.mode("overwrite").parquet(wstage)
-    bloom_words = spark.read.parquet(wstage)
-    timed(
-        "incr_dedup_antijoin",
-        lambda: force(TX.new_documents(inc_txt, hist_txt).select("doc_id", "content_hash")),
-    )
-    timed(
-        "incr_dedup_bloom",
-        lambda: force(
-            TX.new_documents(
-                inc_txt,
-                hist_txt,
-                method="bloom",
-                bloom_words=bloom_words,
-                bloom_bits=bloom_bits,
-                bloom_hashes=bloom_hashes,
-            ).select("doc_id", "content_hash")
         ),
     )
+    out["incr_dedup_antijoin"] = lambda: TX.new_documents(inc_txt, hist_txt).select(
+        "doc_id", "content_hash"
+    )
+    out["incr_dedup_bloom"] = lambda: TX.new_documents(
+        inc_txt,
+        hist_txt,
+        method="bloom",
+        bloom_words=bloom_words,
+        bloom_bits=bloom_bits,
+        bloom_hashes=bloom_hashes,
+    ).select("doc_id", "content_hash")
 
-    timed("ann_lsh_bcast", lambda: force(S.lsh_topk(vecs, vq, 10, dim)))
-    timed(
-        "ann_lsh_shuffle",
-        lambda: force(S.lsh_topk(vecs, vq, 10, dim, broadcast_queries=False)),
+    out["ann_lsh_bcast"] = lambda: S.lsh_topk(vecs, vq, 10, dim)
+    out["ann_lsh_shuffle"] = lambda: S.lsh_topk(vecs, vq, 10, dim, broadcast_queries=False)
+    out["cosine_neardup"] = lambda: S.cosine_near_duplicates(
+        vecs,
+        threshold=0.95,
+        dim=dim,
+        # planes scale with the corpus: 16 planes = 65k buckets keeps
+        # candidate pairs ~linear (~300k) at 200k vectors; the
+        # default 12 would make 4.8M pairs here
+        n_planes=16,
+        max_bucket_size=100_000,
     )
-    timed(
-        "cosine_neardup",
-        lambda: force(
-            S.cosine_near_duplicates(
-                vecs,
-                threshold=0.95,
-                dim=dim,
-                # planes scale with the corpus: 16 planes = 65k buckets keeps
-                # candidate pairs ~linear (~300k) at 200k vectors; the
-                # default 12 would make 4.8M pairs here
-                n_planes=16,
-                max_bucket_size=100_000,
-            )
-        ),
-    )
+    return out
+
+
+def warm_up(spark, n_docs: int) -> None:
+    """Untimed warmup over the staged corpus: JIT/codegen/scan-cache so the
+    first timed query isn't charged one-time session costs."""
+    docs = spark.read.parquet(_docs_path(n_docs))
+    force(R.rasterize_cell_type(docs.limit(200_000), 100.0, fun="sum", spec=SPEC_SQ))
+
+
+def time_leaves(
+    spark,
+    bs: dict[str, Callable[[], DataFrame]],
+    names: Iterable[str],
+    sink: Callable[[DataFrame], object],
+) -> Iterator[tuple[str, float, object]]:
+    """Yield (name, best seconds, sink result) per leaf: the min over
+    BENCH_REPEATS runs of ``sink(build())``, DataFrame construction
+    included."""
+    # 3 repeats, min taken: the shared host throttles in bursts (observed
+    # 15x wall variance minutes apart) — two repeats can both land throttled
+    repeats = int(os.environ.get("BENCH_REPEATS", "3"))
+    for name in names:
+        best, out = None, None
+        for _ in range(repeats):
+            spark.sparkContext.setJobDescription(f"bench:{name}")
+            t0 = time.time()
+            out = sink(bs[name]())
+            dt = time.time() - t0
+            best = dt if best is None or dt < best else best
+        yield name, round(best, 3), out
+
+
+def bench_queries(spark, sf_dir: str, n_docs: int):
+    bs = builders(spark, sf_dir, n_docs)
+    warm_up(spark, n_docs)
+    qs: dict[str, float] = {}
+    rows: dict[str, object] = {}
+    for name, best, n in time_leaves(spark, bs, bs, force):
+        qs[name], rows[name] = best, n
+    q1, q2 = qs["raster_square_kind_sum"], qs["raster_square_value_mean"]
+    extra = {
+        "docs_per_sec_raster_square": round(n_docs / q1, 1),
+        "tiles_per_sec_raster_square": round(rows["raster_square_kind_sum"] / q1, 1),
+        "triplets_per_sec_value_mean": round(10 * n_docs / q2, 1),
+    }
     return qs, extra
 
 

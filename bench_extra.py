@@ -1,14 +1,16 @@
-"""Optimization-round measurement harness (guide §1): isolates individual
-bench queries with a noop-style sink, prints per-query wall seconds, and can
+"""Optimization-round measurement harness: times single leaves of
+bench.py's query registry (``bench.builders``) in isolation, with bench.py's
+warm-up and min-of-N loop, optionally through a noop-write sink, and can
 dump ``.explain("formatted")`` plans to files.
 
-NOT the driver contract — ``bench.py`` is frozen for measurement; this file
-exists so plan shapes and per-stage costs can be measured without touching
-it. Query constructions below mirror bench.py's closures 1:1.
+NOT the driver contract — ``bench.py`` prints the driver's JSON line; this
+file exists so plan shapes and per-stage costs can be measured leaf by leaf.
 
 Usage:
-  python bench_extra.py time  q1 [q2 ...]      # min-of-N wall seconds
+  python bench_extra.py time  q1 [q2 ...]      # min-of-N wall seconds (force sink)
+  python bench_extra.py noop  q1 [q2 ...]      # same, noop-write sink
   python bench_extra.py plan  q1 [q2 ...]      # write plans to $PLAN_DIR
+  python bench_extra.py planx q1 [q2 ...]      # execute, append final adaptive plan
   python bench_extra.py list
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, BENCH_DOCS, BENCH_REPEATS,
      PLAN_DIR (default plans/r06), PLAN_SUFFIX (default "before").
@@ -17,328 +19,19 @@ Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, BENCH_DOCS, BENCH_REPEATS,
 from __future__ import annotations
 
 import json
-import math
 import os
 import sys
-import time
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import bench as B  # noqa: E402  (reuses synth corpus staging + specs)
-from seraster_spark import knn as K  # noqa: E402
-from seraster_spark import rasterize as R  # noqa: E402
-from seraster_spark import text as TX  # noqa: E402
-from seraster_spark.grid import GridSpec  # noqa: E402
-from seraster_spark.io import read_table  # noqa: E402
+import bench as B  # noqa: E402  (the query registry, sink and timing loop)
 from seraster_spark.session import get_spark  # noqa: E402
 
 
 def noop(df: DataFrame) -> None:
     df.write.format("noop").mode("overwrite").save()
-
-
-def builders(spark, sf_dir: str, n_docs: int):
-    """name -> zero-arg callable returning the query DataFrame (mirrors
-    bench.py's closures; the force()/noop sink is applied by the caller)."""
-    import tempfile
-
-    stage = os.path.join(tempfile.gettempdir(), f"bench_docs_{n_docs}")
-    if not os.path.exists(os.path.join(stage, "_SUCCESS")):
-        B.synth_docs(spark, n_docs).write.mode("overwrite").parquet(stage)
-    docs = spark.read.parquet(stage)
-    SPEC_SQ, SPEC_HX = B.SPEC_SQ, B.SPEC_HX
-
-    out: dict = {}
-
-    out["raster_square_kind_sum"] = lambda: R.rasterize_cell_type(
-        docs, 100.0, fun="sum", spec=SPEC_SQ
-    )
-    out["raster_square_value_mean"] = lambda: R.rasterize_gene_expression(
-        docs, 100.0, fun="mean", spec=SPEC_SQ
-    )
-    out["raster_hex_kind_sum"] = lambda: R.rasterize_cell_type(
-        docs, 100.0, fun="sum", spec=SPEC_HX
-    )
-
-    big_spec = GridSpec(-2000.0, -2000.0, 5000.0, 4000.0, 100.0, square=True)
-
-    def rotation():
-        from seraster_spark.permutate import permutate_by_rotation
-
-        return R.rasterize_cell_type(
-            permutate_by_rotation(docs.drop("values"), n_perm=4, origin=(1500.0, 1000.0)),
-            100.0,
-            fun="sum",
-            group_cols=["perm"],
-            spec=big_spec,
-        )
-
-    out["rotation_raster"] = rotation
-
-    def pyramid():
-        base = R.assign_tiles(docs.select("doc_id", "x", "y"), SPEC_SQ).groupBy(
-            "cell_id"
-        ).agg(F.count(F.lit(1)).cast("double").alias("pixelval"))
-        l1, s1 = R.rollup_tiles(base, SPEC_SQ, factor=2)
-        l2, _ = R.rollup_tiles(l1.select("cell_id", "pixelval"), s1, factor=2)
-        return l2
-
-    out["tile_pyramid"] = pyramid
-
-    out["salted_roster"] = lambda: R.tile_meta(
-        R.assign_tiles(docs.select("doc_id", "x", "y"), SPEC_SQ),
-        SPEC_SQ,
-        salt_buckets=16,
-    ).drop("cellID_list")
-
-    def seg_input():
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("kind").orderBy("doc_id")
-        return (
-            docs.select(
-                "kind",
-                "doc_id",
-                F.col("x").alias("x0"),
-                F.col("y").alias("y0"),
-                F.lead("x").over(w).alias("x1"),
-                F.lead("y").over(w).alias("y1"),
-                F.pmod(F.col("doc_id"), F.lit(1000)).cast("double").alias("val"),
-            )
-            .filter(F.col("x1").isNotNull())
-            .drop("kind", "doc_id")
-            .repartition(2 * spark.sparkContext.defaultParallelism)
-        )
-
-    def seg_raster(impl):
-        from seraster_spark.segments import rasterize_segments
-
-        return rasterize_segments(seg_input(), SPEC_SQ, value_cols=("val",), impl=impl)
-
-    out["seg_raster"] = lambda: seg_raster("arrow")
-    out["seg_raster_column"] = lambda: seg_raster("column")
-
-    def poly_raster():
-        from seraster_spark.vector import rasterize_polygons
-
-        n_polys = max(1000, n_docs // 40)
-        base = spark.range(0, n_polys)
-        xa = F.pmod(F.xxhash64(F.col("id"), F.lit(11)), F.lit(2800)).cast("double") + 0.5
-        ya = F.pmod(F.xxhash64(F.col("id"), F.lit(12)), F.lit(1800)).cast("double") + 0.5
-        wdt = (F.pmod(F.xxhash64(F.col("id"), F.lit(13)), F.lit(8)) + 1).cast("double") * 50.0
-        hgt = (F.pmod(F.xxhash64(F.col("id"), F.lit(14)), F.lit(8)) + 1).cast("double") * 50.0
-        polys = base.select(
-            F.col("id").alias("poly_id"),
-            F.array(xa, xa + wdt, xa + wdt, xa).alias("xs"),
-            F.array(ya, ya, ya + hgt, ya + hgt).alias("ys"),
-            F.pmod(F.col("id"), F.lit(100)).cast("double").alias("burn"),
-        ).repartition(spark.sparkContext.defaultParallelism)
-        return rasterize_polygons(polys, SPEC_SQ, ("burn",))
-
-    out["poly_raster"] = poly_raster
-
-    from seraster_spark.vector import spatial_join
-
-    polys_d = {
-        "A": [(300.0, 200.0), (2600.0, 400.0), (2500.0, 1800.0), (500.0, 1700.0)],
-        "B": [(1400.0, 100.0), (2900.0, 900.0), (1500.0, 1900.0)],
-    }
-    out["spatial_join"] = lambda: spatial_join(
-        R.assign_tiles(docs.select("doc_id", "x", "y"), SPEC_SQ), polys_d, SPEC_SQ
-    ).select("doc_id", "poly_id")
-
-    SPEC_SJ = GridSpec(-50.0, -50.0, 3050.0, 2050.0, 12.5, square=True)
-
-    def sj_corpus(bc):
-        from seraster_spark.vector import spatial_join_corpus
-
-        n_polys = max(1000, n_docs // 40)
-        base = spark.range(0, n_polys)
-        xa = F.pmod(F.xxhash64(F.col("id"), F.lit(11)), F.lit(2800)).cast("double") + 0.5
-        ya = F.pmod(F.xxhash64(F.col("id"), F.lit(12)), F.lit(1800)).cast("double") + 0.5
-        wdt = (F.pmod(F.xxhash64(F.col("id"), F.lit(13)), F.lit(8)) + 1).cast("double") * 5.0
-        hgt = (F.pmod(F.xxhash64(F.col("id"), F.lit(14)), F.lit(8)) + 1).cast("double") * 5.0
-        pl = base.select(
-            F.col("id").alias("poly_id"),
-            F.array(xa, xa + wdt, xa + wdt, xa).alias("xs"),
-            F.array(ya, ya, ya + hgt, ya + hgt).alias("ys"),
-        ).repartition(spark.sparkContext.defaultParallelism)
-        docs_sj = (
-            docs.select("doc_id", "x", "y")
-            .limit(500_000)
-            .repartition(spark.sparkContext.defaultParallelism)
-        )
-        wc = R.assign_tiles(docs_sj, SPEC_SJ)
-        return (
-            spatial_join_corpus(wc, pl, SPEC_SJ, broadcast_cover=bc)
-            .groupBy("poly_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-
-    out["sj_corpus_bcast"] = lambda: sj_corpus(True)
-    out["sj_corpus_shuffle"] = lambda: sj_corpus(False)
-
-    def pair_stats_q():
-        from seraster_spark.pointpat import pair_stats
-
-        pts = docs.select(
-            "doc_id", "x", "y", F.pmod(F.col("doc_id"), F.lit(997)).alias("val")
-        )
-        return pair_stats(pts, [0.5, 1.0], value_col="val", exact_int=False)
-
-    out["pair_stats"] = pair_stats_q
-
-    def nn_stats_q():
-        from seraster_spark.pointpat import nn_stats
-
-        return nn_stats(docs.select("doc_id", "x", "y"), [0.5, 1.0], exact_int=False)
-
-    out["nn_stats"] = nn_stats_q
-
-    def kde_q():
-        from seraster_spark.pointpat import kde_raster
-
-        return kde_raster(
-            docs.select("x", "y"), 20, 30, -50, -50,
-            nrows=105, ncols=155, exact_int=False,
-        )
-
-    out["kde"] = kde_q
-
-    res_knn = max(5.0, round(math.sqrt(4 * 10 * B.EXTENT_X * B.EXTENT_Y / n_docs), 1))
-    spec_knn = GridSpec(-50.0, -50.0, 3050.0, 2050.0, res_knn, square=True)
-    queries = (
-        spark.range(0, 500)
-        .select(
-            F.col("id").cast("string").alias("query_id"),
-            (F.pmod(F.xxhash64("id"), F.lit(3000000)) / 1000.0).alias("x"),
-            (F.pmod(F.xxhash64("id", F.lit(9)), F.lit(2000000)) / 1000.0).alias("y"),
-        )
-    )
-    out["knn_500q"] = lambda: K.knn_join(
-        docs.select("doc_id", "x", "y"), queries, 10, spec_knn
-    )
-
-    from seraster_spark.joins import asof_join, asof_join_bucketed
-
-    out["asof_join"] = lambda: asof_join(
-        docs.filter(F.col("doc_id") % 10 == 0).select("doc_id", "kind", "x"),
-        docs.filter(F.col("doc_id") % 3 == 0).select(
-            "kind", "doc_id", F.col("doc_id").alias("rid"), F.col("y").alias("v")
-        ),
-        on=["kind"],
-        ts_col="doc_id",
-        right_cols=["rid", "v"],
-        tiebreak="rid",
-    ).select("doc_id", "kind", "asof_rid", "asof_v")
-
-    hot_kind = (
-        F.when(F.col("doc_id") % 2 == 0, F.lit("hot"))
-        .otherwise(F.col("kind"))
-        .alias("kind")
-    )
-    hot_l = docs.select("doc_id", hot_kind, "x")
-    hot_r = docs.filter(F.col("doc_id") % 3 == 0).select(
-        hot_kind, "doc_id", F.col("doc_id").alias("rid"), F.col("y").alias("v")
-    )
-    out["asof_hot_plain"] = lambda: asof_join(
-        hot_l, hot_r, on=["kind"], ts_col="doc_id",
-        right_cols=["rid", "v"], tiebreak="rid",
-    ).select("doc_id", "kind", "asof_rid", "asof_v")
-    out["asof_hot_bucketed"] = lambda: asof_join_bucketed(
-        hot_l, hot_r, on=["kind"], ts_col="doc_id",
-        right_cols=["rid", "v"], bucket=float(max(n_docs // 40, 1)),
-        tiebreak="rid",
-    ).select("doc_id", "kind", "asof_rid", "asof_v")
-
-    d = read_table(spark, sf_dir, "documents")
-    out["dedup_exact"] = lambda: TX.exact_dedup(d).select(
-        "doc_id", "dup_group_size", "is_canonical"
-    )
-    out["minhash_lsh"] = lambda: TX.minhash_lsh_candidates(
-        d, verify_threshold=0.3, max_bucket_size=100_000
-    )
-    out["simhash"] = lambda: TX.simhash(d)
-    out["token_quality"] = lambda: TX.quality_score(TX.token_count(d)).select(
-        "doc_id", "n_tokens", "quality_score"
-    )
-
-    from seraster_spark import similarity as S
-
-    e = read_table(spark, sf_dir, "embeddings")
-    eq = e.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out["ann_bruteforce"] = lambda: S.brute_force_topk(e, eq, 10)
-
-    import tempfile
-
-    n_vec, dim = 200_000, 64
-    vstage = os.path.join(tempfile.gettempdir(), f"bench_vecs_{n_vec}_{dim}")
-    if not os.path.exists(os.path.join(vstage, "_SUCCESS")):
-        seed_id = F.when(
-            (F.pmod(F.col("id"), F.lit(97)) == 0) & (F.col("id") > 0),
-            F.col("id") - 1,
-        ).otherwise(F.col("id"))
-        vec = F.transform(
-            F.sequence(F.lit(0), F.lit(dim - 1)),
-            lambda j: (F.pmod(F.xxhash64(seed_id, j), F.lit(2001)) - 1000.0) / 1000.0,
-        )
-        spark.range(0, n_vec).select(
-            F.col("id").alias("vec_id"), vec.alias("embedding")
-        ).write.mode("overwrite").parquet(vstage)
-    vecs = spark.read.parquet(vstage)
-    vq = vecs.filter(F.pmod(F.col("vec_id"), F.lit(200)) == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-
-    hist_txt = docs.select(
-        "doc_id", F.concat(F.lit("t"), F.col("doc_id").cast("string")).alias("text")
-    )
-    inc_txt = spark.range(0, 200_000).select(
-        (F.col("id") + 10_000_000).alias("doc_id"),
-        F.when(
-            F.col("id") % 2 == 0,
-            F.concat(F.lit("t"), (F.col("id") * 7 % n_docs).cast("string")),
-        ).otherwise(F.concat(F.lit("new"), F.col("id").cast("string"))).alias("text"),
-    )
-    bloom_bits, bloom_hashes = 1 << 25, 5
-    wstage = os.path.join(
-        tempfile.gettempdir(), f"bench_bloom_{n_docs}_{bloom_bits}_{bloom_hashes}"
-    )
-    if not os.path.exists(os.path.join(wstage, "_SUCCESS")):
-        from seraster_spark.sketch import bloom_filter_build
-
-        hh = TX.content_hash_expr("text")
-        bloom_filter_build(
-            hist_txt.select(hh.alias("content_hash")).distinct(),
-            F.col("content_hash"),
-            bloom_bits,
-            bloom_hashes,
-        ).write.mode("overwrite").parquet(wstage)
-    bloom_words = spark.read.parquet(wstage)
-    out["incr_dedup_antijoin"] = lambda: TX.new_documents(inc_txt, hist_txt).select(
-        "doc_id", "content_hash"
-    )
-    out["incr_dedup_bloom"] = lambda: TX.new_documents(
-        inc_txt,
-        hist_txt,
-        method="bloom",
-        bloom_words=bloom_words,
-        bloom_bits=bloom_bits,
-        bloom_hashes=bloom_hashes,
-    ).select("doc_id", "content_hash")
-
-    out["ann_lsh_bcast"] = lambda: S.lsh_topk(vecs, vq, 10, dim)
-    out["ann_lsh_shuffle"] = lambda: S.lsh_topk(
-        vecs, vq, 10, dim, broadcast_queries=False
-    )
-    out["cosine_neardup"] = lambda: S.cosine_near_duplicates(
-        vecs, threshold=0.95, dim=dim, n_planes=16, max_bucket_size=100_000
-    )
-    return out
 
 
 def main() -> None:
@@ -347,11 +40,10 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n_docs = int(os.environ.get("BENCH_DOCS", "2000000"))
-    repeats = int(os.environ.get("BENCH_REPEATS", "3"))
     spark = get_spark(
         "bench_extra", master=f"local[{cpus}]", shuffle_partitions=max(cpus, 16)
     )
-    bs = builders(spark, sf_dir, n_docs)
+    bs = B.builders(spark, sf_dir, n_docs)
     if mode == "list":
         print("\n".join(bs))
         return
@@ -386,26 +78,12 @@ def main() -> None:
             print(f"wrote {path} ({len(p)} chars)")
         spark.stop()
         return
-    # warmup (mirrors bench.py: one small rasterize so first timing isn't
-    # charged session costs)
-    docs = spark.read.parquet(
-        os.path.join(__import__("tempfile").gettempdir(), f"bench_docs_{n_docs}")
-    )
-    B.force(R.rasterize_cell_type(docs.limit(200_000), 100.0, fun="sum", spec=B.SPEC_SQ))
+    B.warm_up(spark, n_docs)
     res = {}
-    for nme in names:
-        best = None
-        for _ in range(repeats):
-            spark.sparkContext.setJobDescription(f"bench_extra:{nme}")
-            t0 = time.time()
-            if mode == "noop":
-                noop(bs[nme]())
-            else:
-                B.force(bs[nme]())
-            dt = time.time() - t0
-            best = dt if best is None or dt < best else best
-        res[nme] = round(best, 3)
-        print(f"{nme}: {res[nme]}", flush=True)
+    sink = noop if mode == "noop" else B.force
+    for nme, best, _ in B.time_leaves(spark, bs, names, sink):
+        res[nme] = best
+        print(f"{nme}: {best}", flush=True)
     print(json.dumps(res))
     spark.stop()
 

@@ -246,7 +246,7 @@ def q_raster_square_roster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spec = grid_spec_for(d, RES, square=True)
     with_cell = R.assign_tiles(d, spec)
-    meta = R.tile_meta(with_cell, spec, id_col="doc_id", salt_buckets=4)
+    meta = R.tile_meta(with_cell, id_col="doc_id", salt_buckets=4)
     row, col = X.unpack_rowcol(F.col("cell_id"))
     return meta.select(
         row.cast("long").alias("row_i"),

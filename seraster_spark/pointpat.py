@@ -48,11 +48,13 @@ independent: no bucketing).  With ``exact_int=False`` all per-pair
 arithmetic is correctly-rounded double ops in a fixed order — still
 deterministic per pair, but the Σ(vᵢ−vⱼ)² aggregate is order-sensitive
 for non-integer values (documented; counts stay exact).
+``pair_stats``/``nn_stats`` with ``exact_int=True`` fail the query on a
+finite fractional coordinate or value rather than truncate it to BIGINT.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 
 def _rlabel(r: float) -> str:
@@ -78,6 +80,20 @@ def _cover_divisor(r_max: float) -> float:
     ``test_pointpat_bucket_cover_complete`` Hypothesis fuzz, which replays
     this exact arithmetic.)"""
     return r_max * (1.0 + 2.0**-20)
+
+
+def _integral(col: str, name: str, fn: str) -> Column:
+    """``exact_int`` contract guard on a slim per-point column: the BIGINT
+    casts downstream would silently truncate a finite fractional value, so
+    one fails the query instead (row-local ``raise_error`` in the
+    projection, no extra job). ±inf passes through unchanged."""
+    c = F.col(col)
+    return F.when((c % 1 == 0) | (F.abs(c) == F.lit(float("inf"))), c).otherwise(
+        F.raise_error(
+            f"{fn}: exact_int=True needs integral values, but column {name!r} "
+            "has a fractional one; pass exact_int=False for non-integer input"
+        )
+    ).alias(col)
 
 
 def _bucket_candidates(
@@ -226,10 +242,12 @@ def pair_stats(
     value-difference sum), ``gamma_<r>`` (DOUBLE, NULL when no pairs),
     and ``khat_<r>`` (DOUBLE) when ``area`` is given.
 
-    Rows with NULL/non-finite coordinates or NULL value are dropped
-    (both sides of every pair must be well-defined); duplicate
-    coordinates are fine. Self-pairs are excluded by ``id_col``
-    inequality, so ids must be unique for exact semantics.
+    Rows with NULL/NaN coordinates or NULL value are dropped (both
+    sides of every pair must be well-defined). With ``exact_int=True``
+    a finite fractional coordinate or value fails the query (it would
+    otherwise be truncated to BIGINT). Duplicate coordinates are fine.
+    Self-pairs are excluded by ``id_col`` inequality, so ids must be
+    unique for exact semantics.
 
     ``split_axes=True`` adds the DIRECTIONAL (anisotropic) variogram:
     per radius, ``pc_ew_<r>``/``sv_ew_<r>`` over pairs with |dx| > |dy|
@@ -261,17 +279,26 @@ def pair_stats(
     r_max = radii[-1]
 
     def _slim(df: DataFrame) -> DataFrame:
-        return df.select(
+        v = F.col(value_col)
+        slim = df.select(
             F.col(id_col).alias("_pid"),
             F.col(x_col).cast("double").alias("_x"),
             F.col(y_col).cast("double").alias("_y"),
-            F.col(value_col).cast("long" if exact_int else "double").alias("_v"),
+            (v if exact_int else v.cast("double")).alias("_v"),
         ).where(
             F.col("_x").isNotNull()
             & F.col("_y").isNotNull()
             & ~F.isnan("_x")
             & ~F.isnan("_y")
             & F.col("_v").isNotNull()
+        )
+        if not exact_int:
+            return slim
+        return slim.select(
+            "_pid",
+            _integral("_x", x_col, "pair_stats"),
+            _integral("_y", y_col, "pair_stats"),
+            _integral("_v", value_col, "pair_stats").cast("long").alias("_v"),
         )
 
     slim = _slim(points)
@@ -408,7 +435,8 @@ def nn_stats(
 
     Output (1 row):
 
-    - ``n_pts``       points with finite coords,
+    - ``n_pts``       points with non-NULL, non-NaN coords (with
+      ``exact_int=True`` a finite fractional coord fails the query),
     - ``nn_found``    points whose NN is within r_max (BIGINT),
     - ``nn_d2_sum``   Σ min-d² (exact BIGINT when ``exact_int``),
     - ``nn_q20_sum``  Σ floor(√min-d² · 2²⁰) (BIGINT — see ``_Q20``),
@@ -435,7 +463,7 @@ def nn_stats(
     r_max = radii[-1]
 
     def _slim(df: DataFrame) -> DataFrame:
-        return df.select(
+        slim = df.select(
             F.col(id_col).alias("_pid"),
             F.col(x_col).cast("double").alias("_x"),
             F.col(y_col).cast("double").alias("_y"),
@@ -444,6 +472,13 @@ def nn_stats(
             & F.col("_y").isNotNull()
             & ~F.isnan("_x")
             & ~F.isnan("_y")
+        )
+        if not exact_int:
+            return slim
+        return slim.select(
+            "_pid",
+            _integral("_x", x_col, "nn_stats"),
+            _integral("_y", y_col, "nn_stats"),
         )
 
     slim = _slim(points)
@@ -540,10 +575,10 @@ def knox(
 
     Both covers stream through single global aggregates; nothing
     materializes. With ``exact_int`` every d², |dt| and count is exact
-    BIGINT (``t`` is truncated to integer — like the coordinate
-    contract of :func:`pair_stats`; NaN times are dropped with the NaN
-    coordinates); the thresholds are compared as the TRUE
-    ``radius²``/``tau`` doubles, so fractional radii stay complete
+    BIGINT (coordinates and ``t`` are truncated to integer, unchecked —
+    unlike :func:`pair_stats`, which rejects fractional input; NaN
+    times are dropped with the NaN coordinates); the thresholds are
+    compared as the TRUE ``radius²``/``tau`` doubles, so fractional radii stay complete
     against their same-sized bucket covers (a rounded-up threshold
     would admit pairs the cover never joins) — exact while
     d² < 2⁵³. ``knox_expected`` (two exact counts multiplied then

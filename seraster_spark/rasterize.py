@@ -131,7 +131,6 @@ def _with_tile_decor(tiles: DataFrame, spec: GridSpec) -> DataFrame:
 
 def tile_meta(
     docs_with_cell: DataFrame,
-    spec: GridSpec,
     group_cols: list[str] | None = None,
     id_col: str = "doc_id",
     collect_roster: bool = True,
@@ -199,7 +198,7 @@ def rasterize_cell_type(
     if collect_roster:
         # roster needs the doc ids → second aggregate + broadcast join
         meta = tile_meta(
-            with_cell, spec, gcols, collect_roster=True, salt_buckets=salt_buckets
+            with_cell, gcols, collect_roster=True, salt_buckets=salt_buckets
         )
         meta_j = F.broadcast(meta) if broadcast_meta else meta
         joined = counts.join(meta_j, on=keys, how="inner")
@@ -280,7 +279,7 @@ def rasterize_gene_expression(
     keys = gcols + ["cell_id"]
 
     meta = tile_meta(
-        with_cell, spec, gcols, collect_roster=collect_roster, salt_buckets=salt_buckets
+        with_cell, gcols, collect_roster=collect_roster, salt_buckets=salt_buckets
     )
 
     triplets = with_cell.select(
@@ -440,7 +439,7 @@ def rasterize_matrix(
     spec = spec or grid_spec_for(pos, resolution, square=square, bbox=bbox)
     with_cell = assign_tiles(pos.select(id_col, "x", "y"), spec)
     meta = tile_meta(
-        with_cell, spec, id_col=id_col, collect_roster=True, salt_buckets=salt_buckets
+        with_cell, id_col=id_col, collect_roster=True, salt_buckets=salt_buckets
     )
     meta = _with_tile_decor(meta, spec)
     from .vector import tiles_with_wkt

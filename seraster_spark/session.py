@@ -32,10 +32,14 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         # Let the planner pick shuffled-hash join when its size conditions
-        # hold (it still falls back to sort-merge when the build side is too
-        # big to hash per partition): the pointpat bucket self-joins flipped
-        # SortMergeJoin -> ShuffledHashJoin and stopped paying two 10M-row
-        # sorts. Size-guarded by the planner, so safe at cluster scale.
+        # hold: the pointpat bucket self-joins flipped SortMergeJoin ->
+        # ShuffledHashJoin and stopped paying two 10M-row sorts. The choice
+        # is made once, at planning, from the optimizer's size ESTIMATE of
+        # the build side (small enough to hash per partition, and much
+        # smaller than the other side); it is not re-checked at run time.
+        # A ShuffledHashJoin build side cannot spill, so when the estimate
+        # is low or one key is hot, a task's hash table can outgrow its
+        # memory and fail with OOM instead of falling back to sort-merge.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -113,6 +113,31 @@ def test_pair_stats_rejects_bad_radii(spark):
         pointpat.pair_stats(df, [0.0, 10.0])
 
 
+def test_exact_int_rejects_fractional_input(spark):
+    """exact_int=True must not truncate fractional input to BIGINT: two
+    points 0.9 apart would land on one integer point (d=0) and count as a
+    pair within r=0.5. The query fails naming the column; exact_int=False
+    gives the true answer (no pair)."""
+    df = _df(spark, np.array([0.0, 0.9]), np.array([0.0, 0.0]), np.array([1, 2]))
+    with pytest.raises(Exception, match="column 'x' has a fractional"):
+        pointpat.pair_stats(df, [0.5]).collect()
+    with pytest.raises(Exception, match="column 'x' has a fractional"):
+        pointpat.nn_stats(df, [0.5]).collect()
+    got = pointpat.pair_stats(df, [0.5], exact_int=False).collect()[0]
+    assert got["pc_0p5"] == 0
+    got = pointpat.nn_stats(df, [0.5], exact_int=False).collect()[0]
+    assert (got["nn_found"], got["g_0p5"]) == (0, 0)
+    # a fractional VALUE is truncated the same way (sv would be 0, not 0.25)
+    schema = "doc_id long, x double, y double, val double"
+    vals = spark.createDataFrame([(0, 0.0, 0.0, 1.0), (1, 3.0, 4.0, 1.5)], schema)
+    with pytest.raises(Exception, match="column 'val' has a fractional"):
+        pointpat.pair_stats(vals, [10.0]).collect()
+    # integral doubles still pass
+    ok = spark.createDataFrame([(0, 0.0, 0.0, 1.0), (1, 3.0, 4.0, 3.0)], schema)
+    got = pointpat.pair_stats(ok, [10.0]).collect()[0]
+    assert (got["pc_10"], got["sv_10"]) == (2, 8)
+
+
 def test_pair_stats_no_python_in_plan(spark):
     """Pure Column plan — no Arrow/Python eval nodes."""
     df = _df(spark, np.array([0.0, 1.0]), np.array([0.0, 1.0]), np.array([1, 2]))
