@@ -46,7 +46,7 @@ def main() -> None:
     # 1. square count raster (the only doc-cardinality stage)
     d = docs_with_coords(spark, sf_dir)
     spec = grid_spec_for(d, 100.0, square=True)
-    row, col = unpack_rowcol(F.col("cell_id"))
+    row, col = unpack_rowcol("cell_id")
     raster = (
         assign_tiles(d, spec)
         .withColumn("row_i", row.cast("long"))
@@ -79,10 +79,10 @@ def main() -> None:
     # 6. distributed GeoJSONL export of the scored surface (tile polygon +
     # count + z per line; a GIS tool can stream it straight from the sink)
     from seraster_spark import write_geojson_lines
-    from seraster_spark.expressions import _pack
+    from seraster_spark.expressions import pack_sql
 
     scored = gi.select(
-        _pack(spec.mode, spec.level, F.col("row_i"), F.col("col_i")).alias("cell_id"),
+        F.expr(pack_sql(spec.mode, spec.level, "`row_i`", "`col_i`")).alias("cell_id"),
         "n_docs",
         F.round("gi_star", 4).alias("gi_star"),
     )

@@ -111,7 +111,7 @@ def main() -> None:
     ]
 
     # 4. where the autocorrelation lives: LISA over the binned counts
-    row, col = unpack_rowcol(F.col("cell_id"))
+    row, col = unpack_rowcol("cell_id")
     raster = (
         assign_tiles(d, spec)
         .withColumn("row_i", row.cast("long"))

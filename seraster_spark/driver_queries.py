@@ -90,7 +90,7 @@ def _sq_tiles(spark: SparkSession, sf_dir: str, res: float = RES) -> tuple[DataF
 
     spec = grid_spec_for(d, res, square=True)
     with_cell = R.assign_tiles(d, spec)
-    row, col = X.unpack_rowcol(F.col("cell_id"))
+    row, col = X.unpack_rowcol("cell_id")
     return (
         with_cell.withColumn("row_i", row.cast("long")).withColumn("col_i", col.cast("long")),
         spec,
@@ -147,7 +147,7 @@ def q_raster_square_kind_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spec = grid_spec_for(d, RES, square=True)
     t = R.rasterize_cell_type(d, RES, fun="sum", spec=spec)
-    row, col = X.unpack_rowcol(F.col("cell_id"))
+    row, col = X.unpack_rowcol("cell_id")
     return t.select(
         row.cast("long").alias("row_i"),
         col.cast("long").alias("col_i"),
@@ -190,7 +190,7 @@ def q_raster_square_kind_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spec = grid_spec_for(d, RES, square=True)
     t = R.rasterize_cell_type(d, RES, fun="mean", spec=spec)
-    row, col = X.unpack_rowcol(F.col("cell_id"))
+    row, col = X.unpack_rowcol("cell_id")
     return t.select(
         row.cast("long").alias("row_i"),
         col.cast("long").alias("col_i"),
@@ -221,7 +221,7 @@ def q_raster_square_value_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spec = grid_spec_for(d, RES, square=True)
     t = R.rasterize_gene_expression(d, RES, fun="mean", spec=spec)
-    row, col = X.unpack_rowcol(F.col("cell_id"))
+    row, col = X.unpack_rowcol("cell_id")
     return t.select(
         row.cast("long").alias("row_i"),
         col.cast("long").alias("col_i"),
@@ -247,7 +247,7 @@ def q_raster_square_roster(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec = grid_spec_for(d, RES, square=True)
     with_cell = R.assign_tiles(d, spec)
     meta = R.tile_meta(with_cell, id_col="doc_id", salt_buckets=4)
-    row, col = X.unpack_rowcol(F.col("cell_id"))
+    row, col = X.unpack_rowcol("cell_id")
     return meta.select(
         row.cast("long").alias("row_i"),
         col.cast("long").alias("col_i"),
@@ -305,7 +305,7 @@ def q_raster_hex_kind_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spec = grid_spec_for(d, RES, square=False)
     t = R.rasterize_cell_type(d, RES, fun="sum", spec=spec)
-    row, col = X.unpack_rowcol(F.col("cell_id"))
+    row, col = X.unpack_rowcol("cell_id")
     return t.select(
         col.cast("long").alias("q"),
         row.cast("long").alias("r"),
@@ -342,7 +342,7 @@ def q_rotation_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spec = grid_spec_for(fan, RES, square=True)
     with_cell = R.assign_tiles(fan, spec)
-    row, col = X.unpack_rowcol(F.col("cell_id"))
+    row, col = X.unpack_rowcol("cell_id")
     return (
         with_cell.withColumn("row_i", row.cast("long"))
         .withColumn("col_i", col.cast("long"))
@@ -466,7 +466,7 @@ def q_relative_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec = grid_spec_for(d, RES, square=True)
     ct = R.rasterize_cell_type(d, RES, fun="sum", spec=spec)
     re = R.relative_enrichment(ct)
-    row, col = X.unpack_rowcol(F.col("cell_id"))
+    row, col = X.unpack_rowcol("cell_id")
     return re.select(
         row.cast("long").alias("row_i"),
         col.cast("long").alias("col_i"),
@@ -560,7 +560,7 @@ def q_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
     wc, spec = _sq_tiles(spark, sf_dir)
     base = wc.groupBy("cell_id").agg(F.count(F.lit(1)).cast("double").alias("pixelval"))
     rolled, pspec = R.rollup_tiles(base, spec, factor=2)
-    row, col = X.unpack_rowcol(F.col("cell_id"))
+    row, col = X.unpack_rowcol("cell_id")
     return rolled.select(
         row.cast("long").alias("prow"),
         col.cast("long").alias("pcol"),
@@ -597,7 +597,7 @@ def q_raster_assay(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = R.rasterize_gene_expression(
         d, RES, fun="sum", spec=spec, assay_col="assay", assay_name="a1"
     )
-    row, col = X.unpack_rowcol(F.col("cell_id"))
+    row, col = X.unpack_rowcol("cell_id")
     return t.select(
         row.cast("long").alias("row_i"),
         col.cast("long").alias("col_i"),
@@ -713,7 +713,7 @@ def q_tile_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
     wc = R.assign_tiles(d, spec)
     tiles = wc.groupBy("cell_id").agg(F.count(F.lit(1)).alias("num_cell"))
     wkt = tiles_with_wkt(tiles, spec)
-    row, col = X.unpack_rowcol(F.col("cell_id"))
+    row, col = X.unpack_rowcol("cell_id")
     base = wkt.select(
         row.cast("long").alias("row_i"),
         col.cast("long").alias("col_i"),
@@ -728,7 +728,7 @@ def q_tile_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
         "poly_id long, xs array<double>, ys array<double>, burn double",
     )
     cov = rasterize_polygons(polys, spec, ("burn",))
-    crow, ccol = X.unpack_rowcol(F.col("cell_id"))
+    crow, ccol = X.unpack_rowcol("cell_id")
     cov = cov.select(
         crow.cast("long").alias("row_i"),
         ccol.cast("long").alias("col_i"),
@@ -990,7 +990,7 @@ def q_raster_restricted(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec = grid_spec_for(d, RES, square=True)  # grid from the FULL data
     sub = d.filter(F.col("kind") == "ct3")
     t = R.rasterize_cell_type(sub, RES, fun="sum", spec=spec)
-    row, col = X.unpack_rowcol(F.col("cell_id"))
+    row, col = X.unpack_rowcol("cell_id")
     return t.select(
         row.cast("long").alias("row_i"),
         col.cast("long").alias("col_i"),
@@ -1052,7 +1052,7 @@ def q_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spec = grid_spec_for(d, RES, square=True)
     out = batch_replay_running_totals(d, spec)
-    row, col = X.unpack_rowcol(F.col("cell_id"))
+    row, col = X.unpack_rowcol("cell_id")
     return out.select(
         row.cast("long").alias("row_i"),
         col.cast("long").alias("col_i"),
@@ -1925,7 +1925,7 @@ def q_raster_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = raster_algebra(
         ct.filter(F.col("kind") == "ct3"), ct.filter(F.col("kind") == "ct5"), op="diff"
     )
-    row, col = X.unpack_rowcol(F.col("cell_id"))
+    row, col = X.unpack_rowcol("cell_id")
     alg = out.select(
         row.cast("long").alias("row_i"), col.cast("long").alias("col_i"), "diff"
     )
@@ -1944,7 +1944,7 @@ def q_raster_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("x1").isNotNull())
     )
     sr = rasterize_segments(segs, spec, value_cols=("val",), quantize_bits=20)
-    srow, scol = X.unpack_rowcol(F.col("cell_id"))
+    srow, scol = X.unpack_rowcol("cell_id")
     seg_raster = sr.select(
         srow.cast("long").alias("row_i"),
         scol.cast("long").alias("col_i"),
@@ -2269,7 +2269,7 @@ SQL_SIMHASH_PAIRS = _sql_simhash_pairs()
 
 
 def _sql_morton(row: str, col: str, bits: int = 16) -> str:
-    """DuckDB twin of expressions.morton_expr — generated from the same
+    """DuckDB twin of expressions.morton_sql — generated from the same
     interleave loop so both engines evaluate identical shift/mask terms."""
     terms = []
     for i in range(bits):
@@ -2281,8 +2281,7 @@ def _sql_morton(row: str, col: str, bits: int = 16) -> str:
 def q_tile_morton(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) clustering key per occupied tile — the sort /
     range-partition key that makes parquet min/max skipping effective for
-    2D predicates at corpus scale (see expressions.morton_expr)."""
-    from .expressions import morton_expr
+    2D predicates at corpus scale (see expressions.morton_sql)."""
 
     t, _ = _sq_tiles(spark, sf_dir)
     raster = t.groupBy("row_i", "col_i").agg(
@@ -2292,7 +2291,7 @@ def q_tile_morton(spark: SparkSession, sf_dir: str) -> DataFrame:
         "row_i",
         "col_i",
         "n_docs",
-        morton_expr(F.col("row_i"), F.col("col_i"), bits=16).alias("morton"),
+        F.expr(X.morton_sql("`row_i`", "`col_i`", bits=16)).alias("morton"),
     )
 
 
@@ -2357,11 +2356,11 @@ def q_regrid_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec_to = GS(spec.xmin, spec.ymin, spec.xmax, spec.ymax, 250.0, square=True)
     # re-pack the plain (row_i, col_i) raster into cell ids for regrid
     packed = raster.select(
-        X._pack(spec.mode, spec.level, F.col("row_i"), F.col("col_i")).alias("cell_id"),
+        F.expr(X.pack_sql(spec.mode, spec.level, "`row_i`", "`col_i`")).alias("cell_id"),
         "n_docs",
     )
     out = R.regrid(packed, spec, spec_to, value_cols=("n_docs",), fun="sum")
-    row, col = X.unpack_rowcol(F.col("cell_id"))
+    row, col = X.unpack_rowcol("cell_id")
     return out.select(
         row.cast("long").alias("row2_i"),
         col.cast("long").alias("col2_i"),
@@ -3499,7 +3498,7 @@ def q_raster_empty_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = R.rasterize_gene_expression(
         d, RES, fun="mean", spec=spec, keep_empty_feature_tiles=True
     )
-    row, col = X.unpack_rowcol(F.col("cell_id"))
+    row, col = X.unpack_rowcol("cell_id")
     return t.select(
         row.cast("long").alias("row_i"),
         col.cast("long").alias("col_i"),

@@ -14,6 +14,13 @@ kill-and-restart safe because a unit's directory is rewritten wholesale
 
 Lineage + metrics: one JSON record per stage with input snapshot ids, config,
 row counts (from Spark-observed metrics, not extra jobs where possible).
+
+No bookkeeping jobs. A bare ``spark.read.parquet`` runs one schema-inference
+job (80–90 ms at benchmark sizes) before any query job; :func:`read_parquet`
+reads the same schema from one data file's footer on the driver instead.
+:func:`checkpointed_write` takes its per-unit row counts from an
+``Observation`` on the write job itself, where it used to read the written
+root back in two more jobs.
 """
 
 from __future__ import annotations
@@ -23,18 +30,83 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
 
+#: footer key under which Spark's parquet writer stores the row schema as JSON
+_SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
+
+
+def _hidden(name: str) -> bool:
+    """File names Spark's file index skips (InMemoryFileIndex)."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema Spark's parquet inference returns for a Spark-written
+    table, read on the driver from the row-schema footer key of one
+    top-level data file (inference reads the same key of one file when
+    schemas are not merged). None when that shortcut does not apply:
+    schema merging on, partition subdirectories (their columns are
+    inferred from the directory names), no data file, or no key (a file
+    written by another library)."""
+    if spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true":
+        return None
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    try:
+        root = jvm.org.apache.hadoop.fs.Path(path)
+        fs = root.getFileSystem(conf)
+        data = None
+        for st in fs.listStatus(root):
+            name = st.getPath().getName()
+            if _hidden(name):
+                continue
+            if st.isDirectory():
+                return None
+            if data is None or name < data[0]:
+                data = (name, st)
+        if data is None:
+            return None
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(data[1], conf)
+        )
+        try:
+            text = reader.getFooter().getFileMetaData().getKeyValueMetaData().get(
+                _SPARK_SCHEMA_KEY
+            )
+        finally:
+            reader.close()
+    except Py4JJavaError:
+        return None  # unreadable here: let spark.read.parquet report it
+    return None if text is None else StructType.fromJson(json.loads(text))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job when
+    the table was written by Spark: the footer schema is passed as the
+    read schema, so building the DataFrame runs no job. Other tables fall
+    back to the plain (inferring) read."""
+    schema = _footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet (or Iceberg if `sf_dir` is a catalog ref like 'iceberg:db')."""
     if sf_dir.startswith("iceberg:"):
         return spark.read.format("iceberg").load(f"{sf_dir.split(':', 1)[1]}.{name}")
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def write_tiles(
@@ -59,15 +131,19 @@ def write_tiles(
     if zorder:
         from . import expressions as X
 
-        row, col = X.unpack_rowcol(F.col("cell_id"))
+        row, col = X.unpack_sql("`cell_id`")
         # offset to the non-negative packed plane before interleaving:
         # hex axial q/r are signed, and two's-complement low bits of a
         # negative coordinate interleave to the FAR end of the z-curve,
-        # scattering adjacent tiles across files (morton_expr precondition)
-        off = F.lit(1 << 27)
-        df = df.withColumn("_z", X.morton_expr(row + off, col + off)).withColumn(
-            "row_i", row.cast("long")
-        ).withColumn("col_i", col.cast("long"))
+        # scattering adjacent tiles across files (morton_sql precondition)
+        off = 1 << 27
+        df = df.withColumns(
+            {
+                "_z": F.expr(X.morton_sql(f"{row} + {off}", f"{col} + {off}")),
+                "row_i": F.expr(f"CAST({row} AS BIGINT)"),
+                "col_i": F.expr(f"CAST({col} AS BIGINT)"),
+            }
+        )
         if n_files:
             df = df.repartitionByRange(n_files, "_z")
         else:
@@ -157,6 +233,11 @@ def checkpointed_write(
     job succeeds; a crash mid-write leaves no manifest rows, and the next
     run redoes exactly the pending partitions (dynamic overwrite is
     idempotent per partition directory).
+
+    Per-unit row counts come from an ``Observation`` on the write itself
+    (one ``count_if`` per pending unit), not from reading the output back.
+    The observed node sits directly under the write, in the stage that
+    runs the write tasks, so each written row is counted once.
     """
     job_id = job_id or uuid.uuid4().hex[:12]
     os.makedirs(_manifest_path(out_dir), exist_ok=True)
@@ -169,7 +250,7 @@ def checkpointed_write(
         # a pending unit may have data on disk from a run that crashed
         # between the parquet write and its manifest row; if the unit is
         # EMPTY in the current df, dynamic overwrite would never touch the
-        # stale directory and the count below would resurrect phantom rows
+        # stale directory and its rows would survive as phantom output
         # — remove un-manifested unit directories first (local-fs layout;
         # an object-store deployment would issue the equivalent deletes)
         import shutil
@@ -180,7 +261,11 @@ def checkpointed_write(
             )
             if os.path.isdir(stale):
                 shutil.rmtree(stale)
-        pending_df = df.filter(F.col(unit_col).cast("string").isin(pending))
+        unit = F.col(unit_col).cast("string")
+        obs = Observation()
+        pending_df = df.filter(unit.isin(pending)).observe(
+            obs, *[F.count_if(unit == u).alias(f"_n{i}") for i, u in enumerate(pending)]
+        )
         prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
@@ -188,38 +273,10 @@ def checkpointed_write(
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         wall = round(time.time() - t0, 3)
-        # per-unit row counts in ONE grouped job over the written root
-        # (a per-unit read+count loop is one job per unit — thousands of
-        # scheduler round-trips at scale); underscore-prefixed manifest/
-        # lineage files are ignored by the parquet reader. Partition-type
-        # inference is disabled for the read-back so unit strings like
-        # '01' don't re-infer as integers and mis-key the counts.
         finished = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        inf_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        prev_inf = spark.conf.get(inf_key, "true")
-        spark.conf.set(inf_key, "false")
-        try:
-            counts = {
-                r["_u"]: r["_n"]
-                for r in spark.read.parquet(out_dir)
-                .filter(F.col(unit_col).cast("string").isin(pending))
-                .groupBy(F.col(unit_col).cast("string").alias("_u"))
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .collect()
-            }
-        except Exception as e:
-            # only the nothing-written-at-all case (every pending unit
-            # empty) may proceed with zero counts; a real read failure must
-            # NOT silently mark units complete with rows=0
-            msg = str(e)
-            if "PATH_NOT_FOUND" in msg or "UNABLE_TO_INFER_SCHEMA" in msg:
-                counts = {}
-            else:
-                raise
-        finally:
-            spark.conf.set(inf_key, prev_inf)
-        for u in pending:
-            rows = int(counts.get(u, 0))
+        observed = obs.get
+        for i, u in enumerate(pending):
+            rows = int(observed[f"_n{i}"])
             rec = {
                 "job_id": job_id,
                 "unit": u,

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from . import expressions as X
 from . import rasterize as R
 from .bbox import grid_spec_for
-from .io import checkpointed_write, write_lineage
+from .io import checkpointed_write, read_parquet, write_lineage
 from .session import get_spark
 
 
@@ -41,7 +41,7 @@ def run(argv: list[str] | None = None) -> dict:
 
     spark = get_spark("rasterize_job")
     t0 = time.time()
-    docs = spark.read.parquet(args.input)
+    docs = read_parquet(spark, args.input)
     spec = grid_spec_for(docs, args.resolution, square=args.mode == "square")
     tiles = R.rasterize_cell_type(
         docs,
@@ -53,10 +53,9 @@ def run(argv: list[str] | None = None) -> dict:
         collect_roster=args.roster,
         salt_buckets=args.salt_buckets,
     )
-    row, _col = X.unpack_rowcol(F.col("cell_id"))
+    row, _col = X.unpack_sql("`cell_id`")
     n_units = max(1, args.units)
-    band = F.pmod(row, F.lit(n_units)).cast("string")
-    tiles = tiles.withColumn("unit", band)
+    tiles = tiles.withColumn("unit", F.expr(f"CAST(pmod({row}, {n_units}) AS STRING)"))
     units = [str(u) for u in range(n_units)]
     lineage = checkpointed_write(tiles, args.output, "unit", units)
     metrics = {

@@ -30,9 +30,6 @@ from pyspark.sql import DataFrame, Window as W, functions as F
 from . import expressions as X
 from .grid import SQRT3, GridSpec
 
-_OFF = 1 << 27
-_AXIS_BITS = 28
-
 
 def _ring_offsets(radius: int, square: bool) -> list[tuple[int, int]]:
     if square:
@@ -55,20 +52,14 @@ def _candidate_cells(spark, qdf, spec: GridSpec, radius: int):
     offs = spark.createDataFrame(
         _ring_offsets(radius, spec.square), "dr long, dc long"
     )
-    row, col = X.unpack_rowcol(F.col("_qcell"))
-    mode = 0 if spec.square else 1
-    head = F.lit((mode << 62) | ((spec.level & 0x3F) << 56)).cast("long")
-    # mask to the axis field like expressions._pack — unmasked, a ring cell
-    # near the +-2^27 coordinate edge bleeds into the level/mode bits and
-    # can never equal the masked ids on the points side
-    mask = F.lit((1 << _AXIS_BITS) - 1)
-    r = (row + F.col("dr") + F.lit(_OFF)).cast("long").bitwiseAND(mask)
-    c = (col + F.col("dc") + F.lit(_OFF)).cast("long").bitwiseAND(mask)
+    row, col = X.unpack_sql("`_qcell`")
+    # pack_sql masks to the axis field — unmasked, a ring cell near the
+    # +-2^27 coordinate edge bleeds into the level/mode bits and can never
+    # equal the masked ids on the points side
+    ring = X.pack_sql(spec.mode, spec.level, f"{row} + `dr`", f"{col} + `dc`")
     return (
         qdf.crossJoin(F.broadcast(offs))
-        .withColumn(
-            "cell_id", head.bitwiseOR(F.shiftleft(r, _AXIS_BITS)).bitwiseOR(c)
-        )
+        .withColumn("cell_id", F.expr(ring))
         .drop("dr", "dc", "_qcell")
     )
 
@@ -133,7 +124,7 @@ def knn_join(
     pts = points.select(
         F.col(point_id).alias("_pid"), F.col("x").alias("_px"), F.col("y").alias("_py")
     )
-    pts = pts.withColumn("cell_id", X.cell_id_expr(F.col("_px"), F.col("_py"), spec))
+    pts = pts.withColumn("cell_id", F.expr(X.cell_id_sql("`_px`", "`_py`", spec)))
 
     pending = queries.select(
         F.col(query_id).alias("_qid"), F.col("x").alias("_qx"), F.col("y").alias("_qy")
@@ -142,9 +133,7 @@ def knn_join(
     done_frames: list[DataFrame] = []
     radius = max(1, initial_radius)
     while radius <= max_radius and pending_n > 0:
-        qdf = pending.withColumn(
-            "_qcell", X.cell_id_expr(F.col("_qx"), F.col("_qy"), spec)
-        )
+        qdf = pending.withColumn("_qcell", F.expr(X.cell_id_sql("`_qx`", "`_qy`", spec)))
         cand_cells = _candidate_cells(spark, qdf, spec, radius)
         cand_side = F.broadcast(cand_cells) if broadcast_queries else cand_cells
         joined = pts.join(cand_side, on="cell_id", how="inner")

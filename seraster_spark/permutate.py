@@ -12,9 +12,11 @@
   (``R/main.R:659-663``) — this is exactly the span-sequence invariant.
 
 The fan-out is ``explode`` over a literal angle array — n_perm copies in one
-narrow map stage, no UDF, no shuffle. Feeding the result into rasterize_*
-with ``group_cols=["perm"]`` reproduces the reference's list path on one
-common grid (``R/main.R:294-308``).
+narrow map stage, no UDF, no shuffle. The rotation math is SQL text in one
+projection after the explode (see :mod:`seraster_spark.expressions` for why
+text). Feeding the result into rasterize_* with ``group_cols=["perm"]``
+reproduces the reference's list path on one common grid
+(``R/main.R:294-308``).
 """
 
 from __future__ import annotations
@@ -22,6 +24,8 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import DataFrame, functions as F
+
+from . import expressions as X
 
 
 def angle_schedule(n_perm: int) -> list[float]:
@@ -54,45 +58,34 @@ def permutate_by_rotation(
     x' = (x-ox)·cos θ − (y-oy)·sin θ + ox
     y' = (x-ox)·sin θ + (y-oy)·cos θ + oy   (θ in radians, CCW)
     """
-    if x_col not in df.columns or y_col not in df.columns:
+    cols = df.columns
+    if x_col not in cols or y_col not in cols:
         raise ValueError(f"expected coordinate columns '{x_col}','{y_col}' (R/main.R:648,682)")
-    import math
 
     ox, oy = origin or midrange_origin(df, x_col, y_col)
-    angles = angle_schedule(n_perm)
     # cos/sin precomputed per ANGLE and exploded as struct literals: after
-    # the explode `angle` is data, so F.cos/F.sin would run per ROW (4 trig
+    # the explode `angle` is data, so cos/sin would run per ROW (4 trig
     # calls × every fanned row). math.radians/cos/sin are the same
     # double-precision arithmetic (libm) the numpy replay and the DuckDB
     # twin use — the parity/oracle gates pin the values bit-for-bit.
-    fanned = df.withColumn(
-        "_rot",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(a).alias("a"),
-                        F.lit(math.cos(math.radians(a))).alias("c"),
-                        F.lit(math.sin(math.radians(a))).alias("s"),
-                    )
-                    for a in angles
-                ]
-            )
-        ),
-    ).withColumn("angle", F.col("_rot.a"))
-    cosc, sinc = F.col("_rot.c"), F.col("_rot.s")
-    dx = F.col(x_col) - F.lit(ox)
-    dy = F.col(y_col) - F.lit(oy)
-    x_rot = dx * cosc - dy * sinc + F.lit(ox)
-    y_rot = dx * sinc + dy * cosc + F.lit(oy)
-    label = F.format_string(
-        "rotated_%s",
-        F.when(F.col("angle") == F.floor(F.col("angle")).cast("double"),
-               F.col("angle").cast("long").cast("string"))
-        .otherwise(F.col("angle").cast("string")),
+    rots = ", ".join(
+        f"named_struct('a', {a!r}D, 'c', {math.cos(math.radians(a))!r}D, "
+        f"'s', {math.sin(math.radians(a))!r}D)"
+        for a in angle_schedule(n_perm)
     )
-    # single withColumns: x_rot and y_rot both read the ORIGINAL coords
-    # (sequential withColumn would feed rotated x into y's expression)
-    return fanned.withColumns({x_col: x_rot, y_col: y_rot, "perm": label}).drop(
-        "_rot"
+    fanned = df.withColumn("_rot", F.expr(f"explode(array({rots}))"))
+    o_x, o_y = f"{float(ox)!r}D", f"{float(oy)!r}D"
+    dx = f"({X.ident(x_col)} - {o_x})"
+    dy = f"({X.ident(y_col)} - {o_y})"
+    a = "`_rot`.`a`"
+    # one projection, and both rotated coords read the ORIGINAL x/y; a
+    # clashing input column is replaced in place, as withColumn would
+    out = {c: X.quote(c) for c in cols}
+    out[x_col] = f"{dx} * `_rot`.`c` - {dy} * `_rot`.`s` + {o_x}"
+    out[y_col] = f"{dx} * `_rot`.`s` + {dy} * `_rot`.`c` + {o_y}"
+    out["angle"] = a
+    out["perm"] = (
+        f"format_string('rotated_%s', CASE WHEN {a} = CAST(FLOOR({a}) AS DOUBLE)"
+        f" THEN CAST(CAST({a} AS BIGINT) AS STRING) ELSE CAST({a} AS STRING) END)"
     )
+    return fanned.selectExpr(*[f"{v} AS {X.quote(k)}" for k, v in out.items()])

@@ -48,8 +48,9 @@ independent: no bucketing).  With ``exact_int=False`` all per-pair
 arithmetic is correctly-rounded double ops in a fixed order — still
 deterministic per pair, but the Σ(vᵢ−vⱼ)² aggregate is order-sensitive
 for non-integer values (documented; counts stay exact).
-``pair_stats``/``nn_stats`` with ``exact_int=True`` fail the query on a
-finite fractional coordinate or value rather than truncate it to BIGINT.
+``pair_stats``/``nn_stats``/``knox``/``kde_raster`` with ``exact_int=True``
+fail the query on a finite fractional coordinate, time or value rather
+than truncate it to BIGINT.
 """
 
 from __future__ import annotations
@@ -575,9 +576,9 @@ def knox(
 
     Both covers stream through single global aggregates; nothing
     materializes. With ``exact_int`` every d², |dt| and count is exact
-    BIGINT (coordinates and ``t`` are truncated to integer, unchecked —
-    unlike :func:`pair_stats`, which rejects fractional input; NaN
-    times are dropped with the NaN coordinates); the thresholds are
+    BIGINT (a finite fractional coordinate or ``t`` fails the query, as
+    in :func:`pair_stats`; NaN times are dropped with the NaN
+    coordinates); the thresholds are
     compared as the TRUE ``radius²``/``tau`` doubles, so fractional radii stay complete
     against their same-sized bucket covers (a rounded-up threshold
     would admit pairs the cover never joins) — exact while
@@ -609,9 +610,15 @@ def knox(
         )
         .select(
             "_pid",
-            "_x",
-            "_y",
-            F.col("_td").cast("long" if exact_int else "double").alias("_t"),
+            *(
+                [
+                    _integral("_x", x_col, "knox"),
+                    _integral("_y", y_col, "knox"),
+                    _integral("_td", t_col, "knox").cast("long").alias("_t"),
+                ]
+                if exact_int
+                else ["_x", "_y", F.col("_td").alias("_t")]
+            ),
         )
     )
 
@@ -764,6 +771,10 @@ def kde_raster(
     100 TB the knob is the fan-out ratio h/res: the work is
     n·(2h/res)², independent of corpus extent.
 
+    With ``exact_int`` a doubled coordinate or a value that is finite but
+    not integral (x = 0.25, v = 1.5) fails the query rather than being
+    truncated to BIGINT; half-integer coordinates are exact and pass.
+
     Overflow (exact_int): per-term w ≤ 16h⁴, so Σ needs
     ``16h⁴·n_in_range < 2⁶³`` — ANSI mode raises loudly rather than
     wrapping. h ≤ 30000 keeps the per-term safe; value-weighted sums
@@ -786,9 +797,8 @@ def kde_raster(
         F.col(y_col).cast("double").alias("_y"),
     ]
     if value_col is not None:
-        cols.append(
-            F.col(value_col).cast("long" if exact_int else "double").alias("_v")
-        )
+        v = F.col(value_col)
+        cols.append((v if exact_int else v.cast("double")).alias("_v"))
     slim = points.select(*cols).where(
         F.col("_x").isNotNull()
         & F.col("_y").isNotNull()
@@ -796,6 +806,21 @@ def kde_raster(
         & ~F.isnan("_y")
         & (F.col("_v").isNotNull() if value_col is not None else F.lit(True))
     )
+    if exact_int:
+        # the doubled coordinates and the values feed BIGINT casts below
+        slim = slim.select(
+            "*", (F.col("_x") * 2).alias("_x2"), (F.col("_y") * 2).alias("_y2")
+        ).select(
+            "_x",
+            "_y",
+            _integral("_x2", f"2*{x_col}", "kde_raster"),
+            _integral("_y2", f"2*{y_col}", "kde_raster"),
+            *(
+                [_integral("_v", value_col, "kde_raster").cast("long").alias("_v")]
+                if value_col is not None
+                else []
+            ),
+        )
 
     res, h = F.lit(resolution), F.lit(bandwidth)
 
@@ -820,10 +845,10 @@ def kde_raster(
     ).select("*", F.explode("_rseq").alias("row_i"))
 
     if exact_int:
-        dx2 = (F.col("_x") * 2).cast("long") - (
+        dx2 = F.col("_x2").cast("long") - (
             F.lit(2 * int(xmin)) + (F.col("col_i") * 2 + 1) * res
         )
-        dy2 = (F.col("_y") * 2).cast("long") - (
+        dy2 = F.col("_y2").cast("long") - (
             F.lit(2 * int(ymin)) + (F.col("row_i") * 2 + 1) * res
         )
         h2sq = F.lit(4 * bandwidth * bandwidth)

@@ -27,6 +27,13 @@ Semantics preserved from the reference:
 * Output carries ``type`` ∈ {square,hexagon} and ``resolution`` literals
   (``R/main.R:183-189``).
 
+Driver cost: each operator is planned with one projection per step, and
+every tile expression is SQL text from :mod:`seraster_spark.expressions`
+wrapped in one ``F.expr``. Built from ``Column`` operators and
+``withColumn`` chains, ``rasterize_cell_type`` made 1328 py4j round trips
+(1707 for hex) before any job ran; the analyzed plans are the same either
+way, so only that fixed driver cost changes.
+
 Scale notes (100 TB design):
 
 * The heavy ``spans`` payload NEVER enters the shuffle: aggregation runs on a
@@ -98,6 +105,10 @@ def _resolve_assay(
     return docs.filter(F.col(assay_col) == assay_name)
 
 
+def _cell_id(spec: GridSpec, x_col: str = "x", y_col: str = "y") -> str:
+    return X.cell_id_sql(X.ident(x_col), X.ident(y_col), spec)
+
+
 def assign_tiles(
     df: DataFrame,
     spec: GridSpec,
@@ -105,27 +116,48 @@ def assign_tiles(
     y_col: str = "y",
     out_col: str = "cell_id",
 ) -> DataFrame:
-    """Attach the closed-form tile id as pure Column math (whole-stage
+    """Attach the closed-form tile id as JVM expression math (whole-stage
     codegen, no Python boundary); bit-identical to :func:`seraster_spark.grid.encode`."""
-    return df.withColumn(out_col, X.cell_id_expr(F.col(x_col), F.col(y_col), spec))
+    return df.withColumn(out_col, F.expr(_cell_id(spec, x_col, y_col)))
+
+
+def _tile_decor(spec: GridSpec) -> dict[str, str]:
+    """Centroid, grid index, pixel name, type, resolution of the
+    ``cell_id`` column as SQL text (R/main.R:127-129,183-189)."""
+    cid = "`cell_id`"
+    cx, cy = X.centroid_sql(cid, spec)
+    idx = X.grid_index_sql(cid, spec)
+    if spec.square:
+        name = f"format_string('pixel%d', CAST(({idx} + 1) AS BIGINT))"
+    else:
+        row, col = X.unpack_sql(cid)
+        name = f"format_string('hex_%d_%d', CAST({row} AS BIGINT), CAST({col} AS BIGINT))"
+    return {
+        "cx": cx,
+        "cy": cy,
+        "grid_index": f"CAST({idx} AS BIGINT)",
+        "pixel_name": name,
+        "type": "'square'" if spec.square else "'hexagon'",
+        "resolution": f"{float(spec.resolution)!r}D",
+    }
 
 
 def _with_tile_decor(tiles: DataFrame, spec: GridSpec) -> DataFrame:
-    """Add centroid, pixel name, type, resolution (R/main.R:127-129,183-189)."""
-    cx, cy = X.centroid_expr(F.col("cell_id"), spec)
-    idx = X.grid_index_expr(F.col("cell_id"), spec)
-    if spec.square:
-        name = F.format_string("pixel%d", (idx + 1).cast("long"))
-    else:
-        row, col = X.unpack_rowcol(F.col("cell_id"))
-        name = F.format_string("hex_%d_%d", row.cast("long"), col.cast("long"))
-    return (
-        tiles.withColumn("cx", cx)
-        .withColumn("cy", cy)
-        .withColumn("grid_index", idx.cast("long"))
-        .withColumn("pixel_name", name)
-        .withColumn("type", F.lit("square" if spec.square else "hexagon"))
-        .withColumn("resolution", F.lit(float(spec.resolution)))
+    """Add the tile decoration columns in one projection."""
+    return tiles.withColumns({k: F.expr(v) for k, v in _tile_decor(spec).items()})
+
+
+def _decorated(
+    df: DataFrame, items: list[str], fun: str, total: str, num_cell: str, spec: GridSpec
+) -> DataFrame:
+    """One projection: the SQL select ``items``, then ``pixelval`` (the
+    ``total``, divided by ``num_cell`` for fun="mean") and the tile
+    decoration."""
+    pixelval = total if fun == "sum" else f"({total} / CAST({num_cell} AS DOUBLE))"
+    return df.selectExpr(
+        *items,
+        f"{pixelval} AS pixelval",
+        *[f"{v} AS {k}" for k, v in _tile_decor(spec).items()],
     )
 
 
@@ -140,23 +172,23 @@ def tile_meta(
     (``R/main.R:153-155``). ``salt_buckets > 0`` enables the two-phase salted
     aggregate for hot tiles (SURVEY.md §4.3.1)."""
     keys = list(group_cols or []) + ["cell_id"]
+    count = F.expr("count(1) AS num_cell")
     if not collect_roster:
-        return docs_with_cell.groupBy(*keys).agg(F.count(F.lit(1)).alias("num_cell"))
+        return docs_with_cell.groupBy(*keys).agg(count)
+    ids = X.ident(id_col)
     if salt_buckets and salt_buckets > 1:
         salted = docs_with_cell.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets))
+            "_salt", F.expr(f"pmod(xxhash64({ids}), {int(salt_buckets)})")
         )
         partial = salted.groupBy(*keys, "_salt").agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.collect_list(id_col).alias("_ids"),
+            F.expr("count(1) AS _n"), F.expr(f"collect_list({ids}) AS _ids")
         )
         return partial.groupBy(*keys).agg(
-            F.sum("_n").cast("long").alias("num_cell"),
-            F.sort_array(F.flatten(F.collect_list("_ids"))).alias("cellID_list"),
+            F.expr("CAST(sum(_n) AS BIGINT) AS num_cell"),
+            F.expr("sort_array(flatten(collect_list(_ids))) AS cellID_list"),
         )
     return docs_with_cell.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("num_cell"),
-        F.sort_array(F.collect_list(id_col)).alias("cellID_list"),
+        count, F.expr(f"sort_array(collect_list({ids})) AS cellID_list")
     )
 
 
@@ -188,13 +220,16 @@ def rasterize_cell_type(
         raise ValueError(f"fun must be one of {VALID_FUNS} (R/main.R:33-36)")
     gcols = list(group_cols or [])
     spec = spec or grid_spec_for(docs, resolution, square=square, bbox=bbox)
-    slim = docs.select(*gcols, "doc_id", "x", "y", label_col)
-    with_cell = assign_tiles(slim, spec)
+    with_cell = docs.selectExpr(
+        *[X.ident(c) for c in (*gcols, "doc_id", label_col)],
+        f"{_cell_id(spec)} AS cell_id",
+    )
     keys = gcols + ["cell_id"]
 
     counts = with_cell.groupBy(*keys, label_col).agg(
-        F.count(F.lit(1)).cast("double").alias("_cnt")
+        F.expr("CAST(count(1) AS DOUBLE) AS _cnt")
     )
+    items = [X.ident(c) for c in keys + [label_col]]
     if collect_roster:
         # roster needs the doc ids → second aggregate + broadcast join
         meta = tile_meta(
@@ -202,20 +237,20 @@ def rasterize_cell_type(
         )
         meta_j = F.broadcast(meta) if broadcast_meta else meta
         joined = counts.join(meta_j, on=keys, how="inner")
-    else:
-        # every doc has exactly one label, so num_cell = Σ_label counts — a
-        # window over the ALREADY-AGGREGATED tiles replaces a second full
-        # scan + join (the window exchange moves tiles×labels rows, not docs)
-        from pyspark.sql import Window as W
-
-        joined = counts.withColumn(
-            "num_cell", F.sum("_cnt").over(W.partitionBy(*keys)).cast("long")
-        )
-    pixelval = (
-        F.col("_cnt") if fun == "sum" else F.col("_cnt") / F.col("num_cell").cast("double")
+        items += ["`num_cell`", "`cellID_list`"]
+        return _decorated(joined, items, fun, "`_cnt`", "`num_cell`", spec)
+    # every doc has exactly one label, so num_cell = Σ_label counts — a
+    # window over the ALREADY-AGGREGATED tiles replaces a second full
+    # scan + join (the window exchange moves tiles×labels rows, not docs).
+    # The window gets its own projection: in one select with pixelval and
+    # the decoration, the analyzer computes those BELOW the window, and the
+    # window exchange would carry them (+64% shuffle bytes)
+    part = ", ".join(X.ident(k) for k in keys)
+    with_n = counts.selectExpr(
+        *items, "`_cnt`", f"CAST(sum(`_cnt`) OVER (PARTITION BY {part}) AS BIGINT) AS num_cell"
     )
-    out = joined.withColumn("pixelval", pixelval).drop("_cnt")
-    return _with_tile_decor(out, spec)
+    items.append("`num_cell`")
+    return _decorated(with_n, items, fun, "`_cnt`", "`num_cell`", spec)
 
 
 def rasterize_gene_expression(
@@ -274,19 +309,22 @@ def rasterize_gene_expression(
     # assay filter applies only after the grid is fixed
     spec = spec or grid_spec_for(docs, resolution, square=square, bbox=bbox)
     docs = _resolve_assay(docs, assay_col, assay_name, validate=validate_assay)
-    slim = docs.select(*gcols, "doc_id", "x", "y", values_col)
-    with_cell = assign_tiles(slim, spec)
     keys = gcols + ["cell_id"]
+    qkeys = [X.ident(k) for k in keys]
+    with_cell = docs.selectExpr(
+        *[X.ident(c) for c in (*gcols, "doc_id", values_col)],
+        f"{_cell_id(spec)} AS cell_id",
+    )
 
     meta = tile_meta(
         with_cell, gcols, collect_roster=collect_roster, salt_buckets=salt_buckets
     )
 
-    triplets = with_cell.select(
-        *keys, F.explode(values_col).alias("_kv")
-    ).select(*keys, F.col("_kv.feature").alias("feature"), F.col("_kv.value").alias("value"))
+    triplets = with_cell.selectExpr(
+        *qkeys, f"explode({X.ident(values_col)}) AS _kv"
+    ).selectExpr(*qkeys, "_kv.feature AS feature", "_kv.value AS value")
 
-    sums = triplets.groupBy(*keys, "feature").agg(F.sum("value").alias("_sum"))
+    sums = triplets.groupBy(*keys, "feature").agg(F.expr("sum(value) AS _sum"))
     meta_j = F.broadcast(meta) if broadcast_meta else meta
     joined = sums.join(meta_j, on=keys, how="inner")
     if keep_empty_feature_tiles:
@@ -309,11 +347,8 @@ def rasterize_gene_expression(
             }
         )
         joined = joined.unionByName(empty)
-    pixelval = (
-        F.col("_sum") if fun == "sum" else F.col("_sum") / F.col("num_cell").cast("double")
-    )
-    out = joined.withColumn("pixelval", pixelval).drop("_sum")
-    return _with_tile_decor(out, spec)
+    items = [*qkeys, "`feature`", "`num_cell`"] + (["`cellID_list`"] if collect_roster else [])
+    return _decorated(joined, items, fun, "`_sum`", "`num_cell`", spec)
 
 
 def rasterize_gene_expression_deterministic(
@@ -500,9 +535,8 @@ def rollup_tiles(
             f"(spec.level={spec.level}, max parent level is 63)"
         )
     ks = list(keys or [])
-    row, col = X.unpack_rowcol(F.col("cell_id"))
-    prow = F.floor(row / F.lit(float(factor))).cast("long")
-    pcol = F.floor(col / F.lit(float(factor))).cast("long")
+    row, col = X.unpack_sql("`cell_id`")
+    f = f"{float(factor)!r}D"
     parent_spec = GridSpec(
         spec.xmin,
         spec.ymin,
@@ -512,11 +546,16 @@ def rollup_tiles(
         square=True,
         level=spec.level + 1,
     )
-    parent_id = X._pack(parent_spec.mode, parent_spec.level, prow, pcol)
+    parent_id = X.pack_sql(
+        parent_spec.mode,
+        parent_spec.level,
+        f"CAST(FLOOR({row} / {f}) AS BIGINT)",
+        f"CAST(FLOOR({col} / {f}) AS BIGINT)",
+    )
     rolled = (
-        tiles.withColumn("cell_id", parent_id)
+        tiles.selectExpr(f"{parent_id} AS cell_id", *[X.ident(c) for c in (*ks, *sum_cols)])
         .groupBy("cell_id", *ks)
-        .agg(*[F.sum(c).alias(c) for c in sum_cols])
+        .agg(*[F.expr(f"sum({X.ident(c)}) AS {X.quote(c)}") for c in sum_cols])
     )
     return _with_tile_decor(rolled, parent_spec), parent_spec
 
@@ -551,10 +590,9 @@ def regrid(
     if fun not in funs:
         raise ValueError(f"fun must be one of {sorted(funs)}, got {fun!r}")
     ks = list(keys or [])
-    cx, cy = X.centroid_expr(F.col("cell_id"), spec_from)
-    new_id = X.cell_id_expr(cx, cy, spec_to)
+    cx, cy = X.centroid_sql("`cell_id`", spec_from)
     out = (
-        tiles.withColumn("cell_id", new_id)
+        tiles.withColumn("cell_id", F.expr(X.cell_id_sql(cx, cy, spec_to)))
         .groupBy("cell_id", *ks)
         .agg(*[funs[fun](c).alias(c) for c in value_cols])
     )

@@ -44,7 +44,7 @@ Conventions (consistent with :mod:`seraster_spark.grid`):
   cell) wherever the measure itself is ambiguous: an axis-parallel
   segment lying exactly ON an interior gridline, and a degenerate
   (point) segment on a tile corner, are assigned via the SAME
-  ``square_rowcol_expr`` tie-break the point encoder uses. For
+  ``square_rowcol_sql`` tie-break the point encoder uses. For
   non-degenerate crossings the measure is unambiguous (the boundary
   overlap has measure zero) and no tie-break is needed.
 * ``quantize_bits=b`` rounds each per-(segment, tile) fraction to the
@@ -66,7 +66,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from .expressions import _pack, square_rowcol_expr
+from .expressions import ident, pack_sql, square_rowcol_sql
 from .grid import GridSpec, pack, square_rowcol
 
 
@@ -321,7 +321,9 @@ def segment_tile_fractions(
     sdx = px1 - px0
     sdy = py1 - py0
     # point-rule tie-break cells for the axis-degenerate branches
-    tie_row, tie_col = square_rowcol_expr(px0, py0, spec)
+    tie_row, tie_col = (
+        F.expr(e) for e in square_rowcol_sql(ident(x0), ident(y0), spec)
+    )
 
     bxmin = F.least(px0, px1)
     bxmax = F.greatest(px0, px1)
@@ -414,7 +416,7 @@ def segment_tile_fractions(
         .withColumn("frac", _quantized(F.col("_frac_raw"), quantize_bits))
         # sub-quantum crossings round to 0 — drop them so frac > 0 holds
         .filter(F.col("frac") > 0.0)
-        .withColumn("cell_id", _pack(0, spec.level, F.col("_ri"), F.col("_ci")))
+        .withColumn("cell_id", F.expr(pack_sql(0, spec.level, "`_ri`", "`_ci`")))
     )
     return out.drop("_c_lo", "_c_hi", "_u0", "_u1", "_r_lo", "_r_hi", "_frac_raw")
 

@@ -19,7 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from ..expressions import cell_id_expr, centroid_expr
+from ..expressions import centroid_sql
+from ..rasterize import assign_tiles
 from ..grid import GridSpec
 
 
@@ -40,23 +41,21 @@ def stream_rasterize_cell_type(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     docs = reader.parquet(input_path)
-    with_cell = docs.withColumn(
-        "cell_id", cell_id_expr(F.col("x"), F.col("y"), spec)
-    )
+    with_cell = assign_tiles(docs, spec)
     agg = (
         with_cell.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window_duration), "cell_id", label_col)
         .agg(F.count(F.lit(1)).alias("pixelval"))
     )
-    cx, cy = centroid_expr(F.col("cell_id"), spec)
+    cx, cy = centroid_sql("`cell_id`", spec)
     return agg.select(
         F.col("window.start").alias("window_start"),
         F.col("window.end").alias("window_end"),
         "cell_id",
         label_col,
         F.col("pixelval").cast("double").alias("pixelval"),
-        cx.alias("cx"),
-        cy.alias("cy"),
+        F.expr(cx).alias("cx"),
+        F.expr(cy).alias("cy"),
     )
 
 

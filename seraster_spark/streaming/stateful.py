@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..expressions import cell_id_expr
+from ..rasterize import assign_tiles
 from ..grid import GridSpec
 
 OUTPUT_SCHEMA = T.StructType(
@@ -61,7 +61,7 @@ def stream_running_tile_totals(
 ) -> DataFrame:
     """Streaming DF of running per-tile totals (update mode)."""
     docs = spark.readStream.schema(schema).parquet(input_path)
-    with_cell = docs.withColumn("cell_id", cell_id_expr(F.col("x"), F.col("y"), spec))
+    with_cell = assign_tiles(docs, spec)
     return (
         with_cell.groupBy("cell_id")
         .applyInPandasWithState(
@@ -92,7 +92,7 @@ def batch_replay_running_totals(
     cumulative window is O(rows)."""
     from pyspark.sql import Window as W
 
-    with_cell = docs.withColumn("cell_id", cell_id_expr(F.col("x"), F.col("y"), spec))
+    with_cell = assign_tiles(docs, spec)
     per = with_cell.groupBy("cell_id", batch_col).agg(
         F.count(F.lit(1)).alias("batch_docs"),
         F.collect_set("kind").alias("_ks"),

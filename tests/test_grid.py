@@ -171,7 +171,7 @@ def test_morton_expr_interleaves_and_clusters(spark):
     far smaller than under a row-major sort of a wide grid."""
     from pyspark.sql import functions as F
 
-    from seraster_spark.expressions import morton_expr
+    from seraster_spark.expressions import morton_sql
 
     def py_morton(r, c, bits=16):
         out = 0
@@ -181,7 +181,7 @@ def test_morton_expr_interleaves_and_clusters(spark):
 
     cells = [(r, c) for r in range(32) for c in range(64)]
     df = spark.createDataFrame(cells, "row_i long, col_i long").withColumn(
-        "m", morton_expr(F.col("row_i"), F.col("col_i"), bits=16)
+        "m", F.expr(morton_sql("`row_i`", "`col_i`", bits=16))
     )
     rows = df.collect()
     for r in rows:
@@ -217,7 +217,7 @@ def test_pack_column_matches_numpy_out_of_range(spark):
 
     vals = [(0, 0), (5, -3), ((1 << 27) + 7, 11), (-(1 << 27) - 2, (1 << 28) + 9)]
     df = spark.createDataFrame(vals, "r long, c long").withColumn(
-        "cid", X._pack(1, 3, F.col("r"), F.col("c"))
+        "cid", F.expr(X.pack_sql(1, 3, "`r`", "`c`"))
     )
     got = {(x["r"], x["c"]): x["cid"] for x in df.collect()}
     for (r, c), cid in got.items():

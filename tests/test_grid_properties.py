@@ -246,7 +246,7 @@ def _bits(a):
 @_spark_settings
 @given(data=st.data(), grids=_grid_pairs())
 def test_cell_id_expr_matches_numpy_encode(spark, data, grids):
-    """expressions.cell_id_expr (the JVM path every raster runs) equals
+    """expressions.cell_id_sql (the JVM path every raster runs) equals
     grid.encode bit for bit, square and hex, at tile-edge floats."""
     sq, hx = grids
     pts = data.draw(_grid_points(sq, hx))
@@ -255,8 +255,8 @@ def test_cell_id_expr_matches_numpy_encode(spark, data, grids):
     )
     got = df.select(
         "i",
-        X.cell_id_expr(F.col("x"), F.col("y"), sq).alias("sq"),
-        X.cell_id_expr(F.col("x"), F.col("y"), hx).alias("hx"),
+        F.expr(X.cell_id_sql("`x`", "`y`", sq)).alias("sq"),
+        F.expr(X.cell_id_sql("`x`", "`y`", hx)).alias("hx"),
     ).orderBy("i").toPandas()
     x = np.array([p[0] for p in pts])
     y = np.array([p[1] for p in pts])
@@ -278,7 +278,7 @@ def test_cell_id_expr_matches_numpy_encode(spark, data, grids):
     ),
 )
 def test_centroid_expr_matches_numpy_centroid(spark, grids, rowcol):
-    """expressions.centroid_expr equals grid.centroid bit for bit, square
+    """expressions.centroid_sql equals grid.centroid bit for bit, square
     and hex, over the full packed axis range."""
     sq, hx = grids
     row = np.array([rc[0] for rc in rowcol])
@@ -292,8 +292,8 @@ def test_centroid_expr_matches_numpy_centroid(spark, grids, rowcol):
     )
     cols = []
     for name, spec in (("sq", sq), ("hx", hx)):
-        cx, cy = X.centroid_expr(F.col(name), spec)
-        cols += [cx.alias(f"{name}_cx"), cy.alias(f"{name}_cy")]
+        cx, cy = X.centroid_sql(X.ident(name), spec)
+        cols += [F.expr(cx).alias(f"{name}_cx"), F.expr(cy).alias(f"{name}_cy")]
     got = df.select("i", *cols).orderBy("i").toPandas()
     for name, spec in (("sq", sq), ("hx", hx)):
         cx, cy = grid.centroid(ids[spec], spec)

@@ -55,6 +55,61 @@ def test_read_table(spark):
     assert "doc_id" in df.columns
 
 
+def test_read_table_schema_equals_inferred(spark, docs, tmp_path):
+    """read_table's schema is the one spark.read.parquet infers: for every
+    testdata table (pandas-written, so inference runs) and for a
+    Spark-written table with nested spans and values (footer schema)."""
+    import pytest
+
+    sf_dir = "/root/testdata/sf0.001"
+    if not os.path.isdir(sf_dir):
+        pytest.skip("driver testdata not present")
+    for name in sio.TABLES:
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        if os.path.exists(path):
+            got = sio.read_table(spark, sf_dir, name)
+            assert got.schema == spark.read.parquet(path).schema, name
+    root = str(tmp_path / "spark_written")
+    docs.write.parquet(os.path.join(root, "documents.parquet"))
+    got = sio.read_table(spark, root, "documents")
+    want = spark.read.parquet(os.path.join(root, "documents.parquet"))
+    assert got.schema == want.schema
+    assert {"spans", "values"} <= set(got.columns)
+    assert got.count() == want.count() == docs.count()
+
+
+def test_read_table_sees_overwritten_schema(spark, tmp_path):
+    """Overwriting a table with a different schema between two reads: the
+    second read returns the new columns and their values, not NULLs."""
+    root = str(tmp_path / "rw")
+    path = os.path.join(root, "t.parquet")
+    spark.createDataFrame([(1, "a")], "k long, a string").write.parquet(path)
+    assert sio.read_table(spark, root, "t").columns == ["k", "a"]
+    spark.createDataFrame([(2, 2.5)], "k long, b double").write.mode("overwrite").parquet(path)
+    back = sio.read_table(spark, root, "t")
+    assert back.columns == ["k", "b"]
+    assert [tuple(r) for r in back.collect()] == [(2, 2.5)]
+
+
+def test_assign_tiles_quoted_column_names(spark):
+    """Coordinate names F.col accepts — with a space, or a dotted path into
+    a struct — resolve to the same columns in the SQL-text encoder."""
+    import numpy as np
+
+    from seraster_spark import grid
+    from seraster_spark.grid import GridSpec
+
+    spec = GridSpec(0.0, 0.0, 100.0, 100.0, 10.0, square=True)
+    pts = [(1.0, 2.0), (55.0, 70.0), (99.0, 0.5)]
+    df = spark.createDataFrame(pts, "`pos x` double, `pos y` double")
+    got = [r["cell_id"] for r in rasterize.assign_tiles(df, spec, "pos x", "pos y").collect()]
+    want = grid.encode(np.array([p[0] for p in pts]), np.array([p[1] for p in pts]), spec)
+    assert got == [int(c) for c in want]
+    nested = df.select(F.struct(F.col("pos x").alias("x"), F.col("pos y").alias("y")).alias("p"))
+    got = [r["cell_id"] for r in rasterize.assign_tiles(nested, spec, "p.x", "p.y").collect()]
+    assert got == [int(c) for c in want]
+
+
 def test_write_tiles_partitioned(spark, docs, tmp_path):
     tiles = _tiles(spark, docs)
     out = str(tmp_path / "part_out")
@@ -65,9 +120,9 @@ def test_write_tiles_partitioned(spark, docs, tmp_path):
 
 
 def test_checkpointed_write_counts_in_one_job(spark, docs, tmp_path):
-    """Manifest row counts come from ONE grouped job over the written root,
-    not one read+count job per unit (per-unit jobs are thousands of
-    scheduler round-trips at scale)."""
+    """Manifest row counts are observed on the write job itself: no
+    read-back job, and not one read+count job per unit (per-unit jobs are
+    thousands of scheduler round-trips at scale)."""
     n_units = 8
     tiles = (
         _tiles(spark, docs)
@@ -84,10 +139,11 @@ def test_checkpointed_write_counts_in_one_job(spark, docs, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert rec["units_written"] == n_units
     assert sum(r["rows"] for r in rec["records"]) == tiles.count()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
     ids = sc.statusTracker().getJobIdsForGroup("cw_jobcount")
-    # write job + one grouped count (+AQE stage-materialization slack) —
-    # the old per-unit count loop was 1 + n_units = 9 jobs here
-    assert 0 < len(ids) <= 5, f"expected <=5 jobs, saw {len(ids)}"
+    # the write job only — a read-back was 2 more jobs, and the old
+    # per-unit count loop 1 + n_units = 9 jobs here
+    assert len(ids) == 1, f"expected 1 job, saw {len(ids)}"
 
 
 def test_write_tiles_zorder_files_cover_compact_bboxes(spark, tmp_path):
@@ -102,7 +158,7 @@ def test_write_tiles_zorder_files_cover_compact_bboxes(spark, tmp_path):
 
     cells = [(r, c, 1.0) for r in range(64) for c in range(64)]
     tiles = spark.createDataFrame(cells, "row_i long, col_i long, pixelval double").select(
-        X._pack(0, 0, F.col("row_i"), F.col("col_i")).alias("cell_id"), "pixelval"
+        F.expr(X.pack_sql(0, 0, "`row_i`", "`col_i`")).alias("cell_id"), "pixelval"
     )
 
     def mean_file_max_side(path):
@@ -123,7 +179,7 @@ def test_write_tiles_zorder_files_cover_compact_bboxes(spark, tmp_path):
 
     # baseline: same file count, sorted by packed cell_id (row-major)
     pdir = str(tmp_path / "plain")
-    row, col = X.unpack_rowcol(F.col("cell_id"))
+    row, col = X.unpack_rowcol("cell_id")
     tiles.withColumn("row_i", row.cast("long")).withColumn(
         "col_i", col.cast("long")
     ).repartitionByRange(16, "cell_id").sortWithinPartitions("cell_id").write.mode(
@@ -145,7 +201,7 @@ def test_write_tiles_zorder_hex_negative_axials(spark, tmp_path):
 
     cells = [(r, c, 1.0) for r in range(64) for c in range(-32, 32)]
     tiles = spark.createDataFrame(cells, "row_i long, col_i long, pixelval double").select(
-        X._pack(1, 0, F.col("row_i"), F.col("col_i")).alias("cell_id"), "pixelval"
+        F.expr(X.pack_sql(1, 0, "`row_i`", "`col_i`")).alias("cell_id"), "pixelval"
     )
     zdir = str(tmp_path / "zhex")
     write_tiles(tiles, zdir, zorder=True, n_files=16)

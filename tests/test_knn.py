@@ -127,7 +127,7 @@ def test_candidate_cells_match_numpy_kring(spark, docs):
         qdf = (
             docs.select(F.col("doc_id").alias("_qid"), "x", "y")
             .limit(50)
-            .withColumn("_qcell", X.cell_id_expr(F.col("x"), F.col("y"), spec))
+            .withColumn("_qcell", F.expr(X.cell_id_sql("`x`", "`y`", spec)))
             .localCheckpoint()
         )
         cells = {r["_qid"]: r["_qcell"] for r in qdf.collect()}

@@ -496,6 +496,22 @@ def test_knox_nan_time_dropped(spark):
     assert got["s_pairs"] == 2 and got["t_pairs"] == 2 and got["st_pairs"] == 2
 
 
+def test_knox_exact_int_rejects_fractional_input(spark):
+    """exact_int=True must not truncate fractional coordinates or times:
+    points 0.9 apart would both land on x=0 and count as a space pair
+    within r=0.5. The query fails naming the column; exact_int=False gives
+    the true answer (no pair)."""
+    schema = "doc_id long, x double, y double, t double"
+    df = spark.createDataFrame([(0, 0.0, 0.0, 0.0), (1, 0.9, 0.0, 0.0)], schema)
+    with pytest.raises(Exception, match="column 'x' has a fractional"):
+        pointpat.knox(df, 0.5, 1.0).collect()
+    got = pointpat.knox(df, 0.5, 1.0, exact_int=False).collect()[0]
+    assert (got["s_pairs"], got["t_pairs"]) == (0, 2)
+    times = spark.createDataFrame([(0, 0.0, 0.0, 0.6), (1, 5.0, 0.0, 1.4)], schema)
+    with pytest.raises(Exception, match="column 't' has a fractional"):
+        pointpat.knox(times, 1.0, 0.5).collect()
+
+
 def test_knox_no_python_in_plan(spark):
     df = _df_t(spark, np.array([0.0, 1.0]), np.array([0.0, 1.0]), np.array([1, 2]))
     plan = pointpat.knox(df, 10.0, 5.0)._jdf.queryExecution().executedPlan().toString()
@@ -610,6 +626,29 @@ def test_kde_raster_fanout_guard_and_bad_args(spark):
         pointpat.kde_raster(df, 1, 1000, 0, 0)
     with pytest.raises(ValueError, match="positive"):
         pointpat.kde_raster(df, 0, 10, 0, 0)
+
+
+def test_kde_raster_exact_int_rejects_fractional_input(spark):
+    """exact_int=True must not truncate a doubled coordinate or a value to
+    BIGINT: x = 0.25 doubles to 0.5 and v = 1.5 would sum as 1. Both fail
+    the query naming the column; a half-integer coordinate doubles to an
+    integer and matches the exact_int=False surface."""
+    schema = "doc_id long, x double, y double, val double"
+    quarter = spark.createDataFrame([(0, 0.25, 5.0, 1.0)], schema)
+    with pytest.raises(Exception, match="column '2\\*x' has a fractional"):
+        pointpat.kde_raster(quarter, 10, 20, 0, 0).collect()
+    frac_v = spark.createDataFrame([(0, 5.0, 5.0, 1.5)], schema)
+    with pytest.raises(Exception, match="column 'val' has a fractional"):
+        pointpat.kde_raster(frac_v, 10, 20, 0, 0, value_col="val").collect()
+    half = spark.createDataFrame([(0, 2.5, 5.0, 3.0)], schema)
+
+    def surface(exact_int):
+        rows = pointpat.kde_raster(
+            half, 10, 20, 0, 0, value_col="val", exact_int=exact_int
+        ).collect()
+        return {(r["row_i"], r["col_i"]): (r["kde_n"], float(r["kde_w"])) for r in rows}
+
+    assert surface(True) == surface(False)
 
 
 def test_kde_raster_no_python_in_plan(spark):

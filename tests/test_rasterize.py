@@ -222,7 +222,7 @@ def test_rollup_tiles_pyramid(spark, docs):
     # level tags differ (level 2 vs 1) but (row,col,value) must agree
     from seraster_spark import expressions as X
 
-    row, col = X.unpack_rowcol(F.col("cell_id"))
+    row, col = X.unpack_rowcol("cell_id")
     key = lambda df: {  # noqa: E731
         (r["r"], r["c"]): r["pixelval"]
         for r in df.select(row.alias("r"), col.alias("c"), "pixelval").collect()
@@ -407,7 +407,7 @@ def test_regrid_square_matches_direct_binning(spark):
     d = spark.createDataFrame(pts, "doc_id long, x double, y double")
     s_from = GridSpec(0.0, 0.0, 100.0, 80.0, 10.0, square=True)
     s_to = GridSpec(0.0, 0.0, 100.0, 80.0, 25.0, square=True)
-    base = d.select(X.cell_id_expr(F.col("x"), F.col("y"), s_from).alias("cell_id")).groupBy(
+    base = d.select(F.expr(X.cell_id_sql("`x`", "`y`", s_from)).alias("cell_id")).groupBy(
         "cell_id"
     ).agg(F.count(F.lit(1)).cast("long").alias("n"))
     got = {
@@ -438,7 +438,7 @@ def test_regrid_hex_to_square(spark):
     d = spark.createDataFrame(pts, "doc_id long, x double, y double")
     s_hex = GridSpec(0.0, 0.0, 100.0, 80.0, 12.0, square=False)
     s_sq = GridSpec(-20.0, -20.0, 120.0, 100.0, 20.0, square=True)
-    base = d.select(X.cell_id_expr(F.col("x"), F.col("y"), s_hex).alias("cell_id")).groupBy(
+    base = d.select(F.expr(X.cell_id_sql("`x`", "`y`", s_hex)).alias("cell_id")).groupBy(
         "cell_id"
     ).agg(F.count(F.lit(1)).cast("long").alias("n"))
     out = regrid(base, s_hex, s_sq, value_cols=("n",), fun="sum").collect()
@@ -458,7 +458,7 @@ def test_regrid_mean_vs_sum(spark):
         [(0, 0, 4.0), (0, 1, 6.0), (0, 2, 10.0), (0, 3, 30.0)],
         "row_i long, col_i long, v double",
     ).select(
-        X._pack(0, 0, F.col("row_i"), F.col("col_i")).alias("cell_id"), "v"
+        F.expr(X.pack_sql(0, 0, "`row_i`", "`col_i`")).alias("cell_id"), "v"
     )
     s = {r["cell_id"]: r["v"] for r in regrid(tiles, s_from, s_to, ("v",), fun="sum").collect()}
     m = {r["cell_id"]: r["v"] for r in regrid(tiles, s_from, s_to, ("v",), fun="mean").collect()}

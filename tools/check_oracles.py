@@ -4,6 +4,9 @@ names, and order-insensitive values (exact for non-floats; bitwise for
 floats since our oracles are designed deterministic).
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
+
+The Spark master is ``$SPARK_GRAFT_MASTER`` when set (for example
+``local-cluster[2,1,2048]``), else ``local[8]``.
 """
 
 from __future__ import annotations
@@ -70,7 +73,8 @@ def compare(name: str, a: pd.DataFrame, b: pd.DataFrame) -> list[str]:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("check_oracles", master="local[8]", shuffle_partitions=8)
+    master = os.environ.get("SPARK_GRAFT_MASTER") or "local[8]"
+    spark = get_spark("check_oracles", master=master, shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
