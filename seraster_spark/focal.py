@@ -32,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .session import materialize, release
+
 
 def neighbor_offsets(radius: int = 1, queen: bool = True, include_center: bool = False):
     """(dr, dc) offsets of the focal window. ``queen`` = full square window;
@@ -706,31 +708,6 @@ def local_morans_i(
     )
 
 
-def _checkpoint_tracked(df: DataFrame):
-    """``localCheckpoint(eager=True)`` plus a release handle. Spark's public
-    API offers no way to free a local checkpoint's storage blocks (the
-    Dataset returned by ``localCheckpoint`` is a LogicalRDD; ``unpersist``
-    on it only touches the cacheManager), so iterative algorithms that
-    checkpoint per round leak blocks until driver GC. We diff the
-    persistent-RDD registry around the checkpoint call and return a
-    ``release()`` that unpersists exactly the RDDs the call created —
-    deterministic reclamation for superseded rounds. Single-threaded driver
-    loops only (a concurrent checkpoint would land in the diff)."""
-    jsc = df.sparkSession.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
-    out = df.localCheckpoint(eager=True)
-    new_ids = [i for i in jsc.getPersistentRDDs().keySet().toArray() if i not in before]
-
-    def release() -> None:
-        reg = jsc.getPersistentRDDs()
-        for i in new_ids:
-            rdd = reg.get(i)
-            if rdd is not None:
-                rdd.unpersist(False)
-
-    return out, release
-
-
 def grid_distance(
     tiles: DataFrame,
     sources: DataFrame,
@@ -760,7 +737,7 @@ def grid_distance(
     is small by definition) so lineage stays flat; every ``compact_every``
     rounds the accumulated labels are COMPACTED into one fresh checkpoint
     and the superseded round checkpoints are explicitly released
-    (:func:`_checkpoint_tracked`), so executor storage holds the labeled
+    (``session.release``), so executor storage holds the labeled
     set once plus ≤ ``compact_every`` frontiers — NOT one block set per
     hop of diameter. The returned frame is a single flat checkpoint; every
     intermediate is already freed when this function returns.
@@ -777,19 +754,20 @@ def grid_distance(
         raise ValueError(f"compact_every must be >= 1, got {compact_every}")
     offs = offsets if offsets is not None else neighbor_offsets(1, queen=queen)
     keys = [row_col, col_col]
-    to_free: list = []  # release handles for everything superseded
+    to_free: list[DataFrame] = []  # checkpoints superseded once compacted
     # materialize the occupied set ONCE: it is joined in every round, and
     # without the checkpoint each round's job would re-execute the raster's
     # full upstream lineage (at corpus scale: one doc-table aggregation per
     # BFS hop instead of one total)
-    occ, occ_release = _checkpoint_tracked(tiles.select(*keys).distinct())
-    dist, dist_release = _checkpoint_tracked(
+    occ, _ = materialize(tiles.select(*keys).distinct(), "grid_distance: occupied")
+    dist, _ = materialize(
         sources.select(*keys)
         .distinct()
         .join(occ, keys, "inner")  # sources must be occupied tiles
-        .withColumn("grid_dist", F.lit(0).cast("long"))
+        .withColumn("grid_dist", F.lit(0).cast("long")),
+        "grid_distance: sources",
     )
-    to_free.append(dist_release)
+    to_free.append(dist)
     frontier = dist
     off_arr = F.array(
         *[
@@ -802,13 +780,12 @@ def grid_distance(
         # one fresh checkpoint of everything labeled so far, then free the
         # per-round pieces it replaces (safe: eager=True materialized first)
         nonlocal to_free
-        d2, rel = _checkpoint_tracked(d)
+        d2, _ = materialize(d, "grid_distance: labels")
         for f in to_free:
-            f()
-        to_free = [rel]
+            release(f)
+        to_free = [d2]
         return d2
 
-    exhausted = True
     try:
         for r in range(1, max_rounds + 1):
             neigh = (
@@ -820,15 +797,16 @@ def grid_distance(
                 .distinct()
                 .join(occ, keys, "inner")
             )
-            new, new_release = _checkpoint_tracked(
+            new, c = materialize(
                 neigh.join(dist.select(*keys), keys, "left_anti")
-                .withColumn("grid_dist", F.lit(r).cast("long"))
+                .withColumn("grid_dist", F.lit(r).cast("long")),
+                f"grid_distance: round {r}",
+                n=F.count(F.lit(1)),
             )
-            if new.isEmpty():
-                new_release()  # empty, never referenced again
-                exhausted = False
+            if c["n"] == 0:
+                release(new)  # empty, never referenced again
                 break
-            to_free.append(new_release)
+            to_free.append(new)
             # both sides are already checkpointed — a lazy union keeps
             # lineage flat without re-materializing labels every round
             dist = dist.unionByName(new)
@@ -836,7 +814,7 @@ def grid_distance(
             if r % compact_every == 0:
                 dist = compact(dist)
                 frontier = dist.filter(F.col("grid_dist") == r)
-        if exhausted:
+        else:
             # truncated distances would be indistinguishable from the
             # documented unreachable-NULL semantics — fail loudly instead
             raise ValueError(
@@ -847,14 +825,13 @@ def grid_distance(
         return compact(dist)
     except BaseException:
         # error path (max_rounds exhaustion or any mid-loop failure): drain
-        # every tracked round checkpoint too — otherwise each failed attempt
-        # leaks its block sets until driver GC (the no-leaked-persists rule)
+        # every round checkpoint too — otherwise each failed attempt leaks
+        # its block sets until driver GC (the no-leaked-persists rule)
         for f in to_free:
-            f()
-        to_free = []
+            release(f)
         raise
     finally:
-        occ_release()
+        release(occ)
 
 
 def grid_distance_coarse(

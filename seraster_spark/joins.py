@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .session import materialize
+
 
 def interval_join(
     points: DataFrame,
@@ -98,9 +100,10 @@ def interval_join(
         # looping over many left interval joins should checkpoint upstream
         # themselves and pass how='inner' + their own key when that job
         # matters.
-        points = points.withColumn(
-            "_pid", F.monotonically_increasing_id()
-        ).localCheckpoint(eager=True)
+        points, _ = materialize(
+            points.withColumn("_pid", F.monotonically_increasing_id()),
+            "interval_join: stable row key",
+        )
     pb = points.withColumn("_bkt", F.floor(F.col(ts_col).cast("double") / bucket))
     # empty/inverted intervals match nothing under half-open semantics; drop
     # them BEFORE the explode (F.sequence would otherwise step backwards)

@@ -25,10 +25,13 @@ Algorithm (exact, provably complete):
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 from . import expressions as X
 from .grid import SQRT3, GridSpec
+from .session import materialize, release
 
 
 def _ring_offsets(radius: int, square: bool) -> list[tuple[int, int]]:
@@ -94,7 +97,6 @@ def knn_join(
     query_id: str = "query_id",
     initial_radius: int = 1,
     max_radius: int = 64,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Exact k nearest `points` for each query point.
 
@@ -105,20 +107,15 @@ def knn_join(
     data → raise max_radius or coarsen the grid).
 
     Fully distributed rounds: the pending query set, per-round ranked
-    candidates, and accumulated results all stay as DataFrames —
-    ``localCheckpoint`` materializes each round's slim (qid, pid, dist,
-    rank, done) output (ONE job over the big points table per round,
-    lineage cut so rounds never re-trigger earlier joins) and the driver
-    only ever sees per-round counts, so Q can be arbitrarily large (doc↔doc
-    kNN). The per-query completeness flag is computed INSIDE the same
-    window pass as the ranking (count/max windows over the identical
-    partition key — no extra shuffle, no extra job), so a round costs
-    exactly two jobs: the candidate join + one trivial aggregate over the
-    checkpointed output.
-    ``broadcast_queries=True`` (default) broadcast-hash-joins the exploded
-    query rings into the points scan — right while pending×ring rows fit a
-    broadcast; pass False to fall back to a shuffled equi-join on cell_id
-    for very large Q.
+    candidates, and accumulated results all stay as DataFrames. Each round
+    is ONE :func:`~seraster_spark.session.materialize` checkpoint over the
+    big points table (lineage cut, so rounds never re-trigger earlier joins)
+    that also observes how many queries it resolved; the completeness flag
+    comes from the ranking's own window pass (no extra shuffle). A round
+    that leaves queries unresolved adds one checkpoint of the smaller
+    pending set and releases the old one, so Q can be arbitrarily large
+    (doc↔doc kNN). The query rings are broadcast-hash-joined into the
+    points scan, which holds while pending×ring rows fit a broadcast.
     """
     spark = points.sparkSession
     pts = points.select(
@@ -126,24 +123,30 @@ def knn_join(
     )
     pts = pts.withColumn("cell_id", F.expr(X.cell_id_sql("`_px`", "`_py`", spec)))
 
-    pending = queries.select(
-        F.col(query_id).alias("_qid"), F.col("x").alias("_qx"), F.col("y").alias("_qy")
-    ).localCheckpoint(eager=True)
-    pending_n = pending.count()
-    done_frames: list[DataFrame] = []
+    pending, c = materialize(
+        queries.select(
+            F.col(query_id).alias("_qid"), F.col("x").alias("_qx"), F.col("y").alias("_qy")
+        ),
+        "knn_join: queries",
+        n=F.count(F.lit(1)),
+    )
+    pending_n = c["n"]
+    rounds: list[DataFrame] = []
+    # one row per resolved query: its rank-1 neighbor
+    first_done = F.col("_done") & (F.col("rank") == 1)
     radius = max(1, initial_radius)
-    while radius <= max_radius and pending_n > 0:
+    # an empty query set still runs one (empty) round, which types the result
+    while radius <= max_radius:
         qdf = pending.withColumn("_qcell", F.expr(X.cell_id_sql("`_qx`", "`_qy`", spec)))
         cand_cells = _candidate_cells(spark, qdf, spec, radius)
-        cand_side = F.broadcast(cand_cells) if broadcast_queries else cand_cells
-        joined = pts.join(cand_side, on="cell_id", how="inner")
+        joined = pts.join(F.broadcast(cand_cells), on="cell_id", how="inner")
         ddx = F.col("_px") - F.col("_qx")
         ddy = F.col("_py") - F.col("_qy")
         # explicit products (not **2): bit-identical to the SQL oracle's x*x
         dist = F.sqrt(ddx * ddx + ddy * ddy)
         bound = _complete_bound(spec, radius)
         w_q = W.partitionBy("_qid")
-        ranked = (
+        ranked, c = materialize(  # the one big job this round
             joined.withColumn("dist", dist)
             .withColumn(
                 "rank",
@@ -158,35 +161,27 @@ def knn_join(
                 "_done",
                 (F.count(F.lit(1)).over(w_q) >= k) & (F.max("dist").over(w_q) <= bound),
             )
-            .select("_qid", "_pid", "dist", "rank", "_done")
-            .localCheckpoint(eager=True)  # the one big job this round
+            .select("_qid", "_pid", "dist", "rank", "_done"),
+            f"knn_join: radius {radius}",
+            done=F.count_if(first_done),
         )
-        done_frames.append(ranked.filter(F.col("_done")).drop("_done"))
-        # one trivial aggregate over the checkpointed slim output
-        n_done = (
-            ranked.filter(F.col("_done")).select("_qid").distinct().count()
-        )
-        if n_done == pending_n:  # common case: one round resolves everything —
-            pending_n = 0        # skip building/checkpointing an empty pending set
+        rounds.append(ranked)
+        pending_n -= c["done"]
+        if pending_n == 0:  # skip checkpointing an empty pending set
             break
-        done_q = ranked.filter(F.col("_done")).select("_qid").distinct()
-        pending = pending.join(done_q, "_qid", "left_anti").localCheckpoint(eager=True)
-        pending_n -= n_done
+        superseded = pending
+        pending, _ = materialize(
+            pending.join(ranked.filter(first_done).select("_qid"), "_qid", "left_anti"),
+            f"knn_join: pending {pending_n}",
+        )
+        release(superseded)
         radius *= 2
-    if pending_n > 0:
+    release(pending)
+    if pending_n > 0 or not rounds:
         raise RuntimeError(
             f"kNN incomplete at max_radius={max_radius}; raise max_radius or coarsen the grid"
         )
-    if not done_frames:  # empty query set → empty result with correct types
-        done_frames = [
-            pending.select("_qid")
-            .limit(0)
-            .crossJoin(pts.select("_pid").limit(0))
-            .select("_qid", "_pid", F.lit(0.0).alias("dist"), F.lit(0).alias("rank"))
-        ]
-    out = done_frames[0]
-    for f in done_frames[1:]:
-        out = out.unionByName(f)
+    out = reduce(DataFrame.unionByName, rounds).filter(F.col("_done"))
     return out.select(
         F.col("_qid").alias(query_id),
         F.col("_pid").alias(point_id),

@@ -45,8 +45,7 @@ Scale notes (100 TB design):
   builds partial lists, stage 2 flattens; AQE skew-join splitting covers the
   join side.
 * num_cell side-table is broadcast (tiles ≪ docs — the premise of
-  rasterization); at extreme tile cardinality pass broadcast_meta=False to
-  fall back to a shuffled join co-partitioned on cell_id.
+  rasterization).
 """
 
 from __future__ import annotations
@@ -203,7 +202,6 @@ def rasterize_cell_type(
     spec: GridSpec | None = None,
     collect_roster: bool = False,
     salt_buckets: int = 0,
-    broadcast_meta: bool = True,
 ) -> DataFrame:
     """Categorical rasterization (reference ``rasterizeCellType``,
     ``R/main.R:466-559``; default fun="sum", R/main.R:466).
@@ -235,8 +233,7 @@ def rasterize_cell_type(
         meta = tile_meta(
             with_cell, gcols, collect_roster=True, salt_buckets=salt_buckets
         )
-        meta_j = F.broadcast(meta) if broadcast_meta else meta
-        joined = counts.join(meta_j, on=keys, how="inner")
+        joined = counts.join(F.broadcast(meta), on=keys, how="inner")
         items += ["`num_cell`", "`cellID_list`"]
         return _decorated(joined, items, fun, "`_cnt`", "`num_cell`", spec)
     # every doc has exactly one label, so num_cell = Σ_label counts — a
@@ -264,7 +261,6 @@ def rasterize_gene_expression(
     spec: GridSpec | None = None,
     collect_roster: bool = False,
     salt_buckets: int = 0,
-    broadcast_meta: bool = True,
     assay_col: str | None = None,
     assay_name: str | None = None,
     validate_assay: bool = True,
@@ -325,8 +321,7 @@ def rasterize_gene_expression(
     ).selectExpr(*qkeys, "_kv.feature AS feature", "_kv.value AS value")
 
     sums = triplets.groupBy(*keys, "feature").agg(F.expr("sum(value) AS _sum"))
-    meta_j = F.broadcast(meta) if broadcast_meta else meta
-    joined = sums.join(meta_j, on=keys, how="inner")
+    joined = sums.join(F.broadcast(meta), on=keys, how="inner")
     if keep_empty_feature_tiles:
         # tiles present in meta but absent from the sparse sums: all member
         # docs had empty `values`. Both sides of this anti-join are
@@ -452,7 +447,6 @@ def rasterize_matrix(
     feature_col: str = "feature",
     value_col: str = "value",
     salt_buckets: int = 0,
-    broadcast_meta: bool = True,
 ) -> RasterizedMatrix:
     """The reference's 5th export, ``rasterizeMatrix`` (NAMESPACE:7,
     ``R/main.R:98-197``): rasterize a feature×cell matrix given separate
@@ -485,13 +479,12 @@ def rasterize_matrix(
         F.col(id_col), F.col(feature_col).alias("feature"), F.col(value_col).alias("value")
     ).join(with_cell.select(id_col, "cell_id"), id_col)
     sums = triplets.groupBy("cell_id", "feature").agg(F.sum("value").alias("_sum"))
-    meta_slim = meta.select("cell_id", "num_cell", "pixel_name")
-    meta_j = F.broadcast(meta_slim) if broadcast_meta else meta_slim
+    meta_slim = F.broadcast(meta.select("cell_id", "num_cell", "pixel_name"))
     pixelval = (
         F.col("_sum") if fun == "sum" else F.col("_sum") / F.col("num_cell").cast("double")
     )
     data_rast = (
-        sums.join(meta_j, "cell_id")
+        sums.join(meta_slim, "cell_id")
         .select("cell_id", "pixel_name", "feature", pixelval.alias("pixelval"))
     )
     pos_rast = meta.select(

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 
 def get_spark(
@@ -62,3 +62,28 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def materialize(df: DataFrame, name: str, **counts: Column) -> tuple[DataFrame, dict[str, int]]:
+    """Eagerly ``localCheckpoint`` ``df`` in one job described as ``name``;
+    return the checkpoint and ``counts`` (aggregates over its rows, e.g.
+    ``n=F.count(F.lit(1))``) observed on that same job, 0 when it is empty.
+    Free the blocks with :func:`release` once nothing references it."""
+    sc = df.sparkSession.sparkContext
+    obs = Observation()
+    if counts:
+        df = df.observe(obs, *[c.alias(k) for k, c in counts.items()])
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(name)
+    try:
+        out = df.localCheckpoint(eager=True)
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+    return out, (obs.get if counts else {})
+
+
+def release(frame: DataFrame) -> None:
+    """Unpersist the RDD under a :func:`materialize` frame's LogicalRDD (a
+    checkpointed Dataset's ``unpersist`` only touches the cache manager).
+    Any later action on ``frame``, or on a frame built from it, fails."""
+    frame._jdf.queryExecution().logical().rdd().unpersist(False)

@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F
 from pyspark.sql import types as T
 
+from .session import materialize, release
+
 
 def _as_matrix(cells: np.ndarray) -> np.ndarray:
     """(n, dim) float64 matrix from an object array of equal-length numeric
@@ -188,7 +190,7 @@ def train_ivf_centroids(
     100 TB shape: the training set is a SEEDED UNIFORM Bernoulli sample
     (``df.sample`` — per-row, unlike ``limit()`` which takes whole leading
     partitions and is not a uniform draw), materialized once
-    (localCheckpoint) so every iteration re-reads the small sample, not the
+    (``materialize``) so every iteration re-reads the small sample, not the
     corpus. Each k-means iteration is ONE job: an Arrow ``mapInPandas``
     kernel emits per-batch partial sums ``(centroid, count, sum_vec)`` —
     at most n_centroids rows per Arrow batch — and the driver combines
@@ -205,17 +207,15 @@ def train_ivf_centroids(
     # hash-threshold sample, NOT df.sample: Spark's Bernoulli sample derives
     # per-partition seeds from the partition index, so membership (and the
     # trained centroids) would change with the input's partitioning
-    if frac >= 1.0:
-        train = vecs.localCheckpoint(eager=True)
-    else:
-        u = (
-            F.pmod(F.xxhash64(F.col("_v"), F.lit(int(seed))), F.lit(1_000_000))
-            .cast("double")
-            / 1_000_000.0
-        )
-        train = vecs.filter(u < frac).localCheckpoint(eager=True)
-    if train.isEmpty():  # pathological tiny input + low fraction
-        train = vecs.localCheckpoint(eager=True)
+    u = F.pmod(F.xxhash64(F.col("_v"), F.lit(int(seed))), F.lit(1_000_000)) / 1_000_000.0
+    train, sampled = materialize(
+        vecs if frac >= 1.0 else vecs.filter(u < frac),
+        "train_ivf_centroids: sample",
+        n=F.count(F.lit(1)),
+    )
+    if sampled["n"] == 0:  # pathological tiny input + low fraction
+        release(train)
+        train, _ = materialize(vecs, "train_ivf_centroids: sample")
     init = train.dropDuplicates().orderBy("_v").limit(n_centroids).collect()
     cent = np.stack([np.asarray(r["_v"], dtype=np.float64) for r in init])
 
@@ -252,6 +252,7 @@ def train_ivf_centroids(
                 # sort partials lexicographically before the fold
                 arr = arr[np.lexsort(arr.T[::-1])]
                 cent[c] = arr.sum(axis=0) / float(sub["n"].sum())
+    release(train)
     return cent
 
 
@@ -478,7 +479,7 @@ def cosine_near_duplicates(
 
     100 TB shape (mirrors the MinHash band join): the bucket self-join
     shuffles ONLY (id, bucket) — embedding vectors never ride the (skewed)
-    bucket exchange. Candidate ids materialize eagerly (localCheckpoint,
+    bucket exchange. Candidate ids materialize eagerly (:func:`materialize`,
     size-known → AQE broadcasts them), and vectors re-attach map-side for
     the exact cosine verification. ``max_bucket_size`` drops degenerate hot
     buckets (e.g. a mass of zero/constant vectors all hashing to one
@@ -493,21 +494,19 @@ def cosine_near_duplicates(
     # materialize the slim (_id, bucket) frame ONCE: the cap sizes pass and
     # both sides of the self-join would otherwise each re-run the scan +
     # bucket kernel (3 passes over the vectors for one signature)
-    slim = (
-        it.withColumn("bucket", bucket(F.col("_vec")))
-        .select("_id", "bucket")
-        .localCheckpoint(eager=True)
+    slim, _ = materialize(
+        it.withColumn("bucket", bucket(F.col("_vec"))).select("_id", "bucket"),
+        "cosine_near_duplicates: buckets",
     )
     slim = cap_buckets(slim, ["bucket"], max_bucket_size, "cosine_near_duplicates")
     l, r = slim.alias("l"), slim.alias("r")
     # no dedup pass: each item owns exactly ONE bucket row, so an (a, b)
     # pair can match in at most one bucket
-    pairs = (
+    pairs, _ = materialize(
         l.join(
             r, (F.col("l.bucket") == F.col("r.bucket")) & (F.col("l._id") < F.col("r._id"))
-        )
-        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-        .localCheckpoint(eager=True)
+        ).select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b")),
+        "cosine_near_duplicates: candidate pairs",
     )
     j = (
         pairs.join(it.select(F.col("_id").alias("id_a"), F.col("_vec").alias("_va")), "id_a")

@@ -37,6 +37,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .session import materialize
+
 TWO_60 = float(1 << 60)  # max of a 15-hex-char hash + 1; exact double
 TWO_32 = float(1 << 32)
 
@@ -225,7 +227,7 @@ def heavy_hitters(
     # dependent MG pass would execute twice with potentially DIFFERENT
     # decrements, breaking the est <= true <= est + D invariant that is
     # the op's whole contract (and doubling the scan)
-    partials = slim.mapInPandas(mg, out_schema).localCheckpoint(eager=True)
+    partials, _ = materialize(slim.mapInPandas(mg, out_schema), "heavy_hitters: summaries")
     merged = partials.filter(F.col("_k").isNotNull()).groupBy("_k").agg(
         F.sum("est").alias("est_count")
     )

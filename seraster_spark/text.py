@@ -26,6 +26,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
+from .session import materialize, release
+
 _log = logging.getLogger("seraster_spark")
 
 # ---------------------------------------------------------------------------
@@ -75,24 +77,23 @@ def cap_buckets(
     Cost: one slim aggregation over the already-slim banded rows (map-side
     combine collapses each bucket to one cell per mapper) plus an equi-join
     on the band key — the same key the self-join shuffles on. The sizes
-    frame is localCheckpoint'd so the dropped-count job and the kept-join
-    share one materialization.
+    frame is materialized once; the dropped-bucket count is an observed
+    count on that same job, so the warning costs no job of its own.
     """
     if max_bucket_size is None:
         return banded
     if max_bucket_size < 2:
         raise ValueError("max_bucket_size must be >= 2 (a pair needs 2 members)")
-    sizes = (
-        banded.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_bn"))
-        .localCheckpoint(eager=True)
+    sizes, c = materialize(
+        banded.groupBy(*keys).agg(F.count(F.lit(1)).alias("_bn")),
+        f"{op}: bucket sizes",
+        dropped=F.count_if(F.col("_bn") > max_bucket_size),
     )
-    n_dropped = sizes.filter(F.col("_bn") > max_bucket_size).count()
-    if n_dropped:
+    if c["dropped"]:
         _log.warning(
             "%s: dropped %d degenerate LSH bucket(s) larger than %d members",
             op,
-            n_dropped,
+            c["dropped"],
             max_bucket_size,
         )
     kept = sizes.filter(F.col("_bn") <= max_bucket_size).drop("_bn")
@@ -579,7 +580,7 @@ def minhash_lsh_candidates(
 
     100 TB shape: the band self-join shuffles ONLY (_id, band, bhash) — the
     shingle sets stay out of every exchange. Candidate ids are materialized
-    eagerly (``localCheckpoint``), the signature cache is unpersisted before
+    eagerly (``materialize``), the signature cache is unpersisted before
     returning (no cache leak; checkpoint blocks are GC-cleaned), and the
     Jaccard verification re-derives shingle sets ONLY for candidate docs: a
     broadcast semi-join on the (small, checkpointed) candidate id set sits
@@ -660,7 +661,8 @@ def minhash_lsh_candidates(
         banded = cap_buckets(banded, ["band", "bhash"], max_bucket_size, "minhash_lsh")
         left = banded.alias("l")
         right = banded.alias("r")
-        pairs = (
+        # one slim job; cuts lineage to sig
+        pairs, _ = materialize(
             left.join(
                 right,
                 (F.col("l.band") == F.col("r.band"))
@@ -668,8 +670,8 @@ def minhash_lsh_candidates(
                 & (F.col("l._id") < F.col("r._id")),
             )
             .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-            .localCheckpoint(eager=True)  # one slim job; cuts lineage to sig
+            .dropDuplicates(["id_a", "id_b"]),
+            "minhash_lsh: candidate pairs",
         )
     finally:
         sig.unpersist()
@@ -786,52 +788,50 @@ def connected_components(
     round a node takes the min label among itself and its neighbors; stop
     when a round changes nothing. Rounds = graph diameter — tiny for dup
     clusters (near-clique, typically 2-4). Each round is two slim shuffles
-    (labels⋈edges groupBy-min, then a label-update join), materialized via
-    ``localCheckpoint`` so lineage never stacks across rounds and the driver
-    sees only a changed-count. For web-scale graphs with giant HIGH-DIAMETER
-    components, use :func:`connected_components_star` (implemented below) —
-    O(log n) rounds regardless of diameter.
+    (labels⋈edges groupBy-min, then a label-update join) in one materialize
+    job that also observes the changed-label count ending the loop; the
+    superseded round is released. For web-scale graphs with giant
+    HIGH-DIAMETER components, use :func:`connected_components_star`
+    (implemented below) — O(log n) rounds regardless of diameter.
 
     Returns (node, component) with component = min node id of the cluster;
     only nodes present in `pairs` appear (singletons are trivially their
     own component and typically not materialized at scale).
     """
-    edges = (
+    edges, _ = materialize(
         pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .unionByName(pairs.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
+        .dropDuplicates(),
+        "connected_components: edges",
     )
-    labels = (
+    labels, _ = materialize(
         edges.select(F.col("s").alias("node"))
         .dropDuplicates()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint(eager=True)
+        .withColumn("component", F.col("node")),
+        "connected_components: labels 0",
     )
-    for _ in range(max_iter):
+    for i in range(1, max_iter + 1):
         # min label among each node's neighbors (edges carry only ids)
         nbr_min = (
             edges.join(labels, edges["d"] == labels["node"])
             .groupBy("s")
             .agg(F.min("component").alias("_nbr"))
         )
-        updated = (
-            labels.join(nbr_min, labels["node"] == nbr_min["s"], "left")
-            .select(
+        nbr = F.coalesce(F.col("_nbr"), F.col("component"))
+        updated, c = materialize(
+            labels.join(nbr_min, labels["node"] == nbr_min["s"], "left").select(
                 "node",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("_nbr"), F.col("component"))
-                ).alias("component"),
-                (F.coalesce(F.col("_nbr"), F.col("component")) < F.col("component")).alias(
-                    "_chg"
-                ),
-            )
-            .localCheckpoint(eager=True)
+                F.least(F.col("component"), nbr).alias("component"),
+                (nbr < F.col("component")).alias("_chg"),
+            ),
+            f"connected_components: labels {i}",
+            changed=F.count_if("_chg"),
         )
-        n_changed = updated.filter(F.col("_chg")).count()
-        labels = updated.drop("_chg")
-        if n_changed == 0:
-            return labels
+        release(labels)
+        labels = updated
+        if c["changed"] == 0:
+            release(edges)
+            return labels.drop("_chg")
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 
@@ -884,38 +884,43 @@ def connected_components_star(
     boilerplate) makes diameter the bottleneck. Star contractions converge
     in O(log n) rounds regardless of diameter, and every round is the same
     slim shape as hash-min: two groupBy-min aggregations + equi-joins over
-    (node, node) pairs, localCheckpoint'd so lineage never stacks. The
-    fixed point is a star forest: every non-root points directly at its
-    component minimum."""
-    edges = (
+    (node, node) pairs, materialized with an observed edge count; the
+    superseded edge set is released. The fixed point is a star forest:
+    every non-root points directly at its component minimum."""
+    n_rows = F.count(F.lit(1))
+    edges, c = materialize(
         pairs.select(
             F.greatest(F.col(src), F.col(dst)).alias("s"),
             F.least(F.col(src), F.col(dst)).alias("d"),
         )
         .filter(F.col("s") != F.col("d"))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
+        .dropDuplicates(),
+        "connected_components_star: edges",
+        n=n_rows,
     )
-    all_nodes = (
+    all_nodes, _ = materialize(
         edges.select(F.col("s").alias("node"))
         .unionByName(edges.select(F.col("d").alias("node")))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
+        .dropDuplicates(),
+        "connected_components_star: nodes",
     )
-    prev_n = edges.count()
-    for _ in range(max_iter):
-        new = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        n = new.count()
+    prev_n = c["n"]
+    for i in range(1, max_iter + 1):
+        new, c = materialize(
+            _small_star(_large_star(edges)), f"connected_components_star: round {i}", n=n_rows
+        )
         # fixed point: identical edge multiset (both are deduped sets, so
         # count equality + empty difference suffices)
-        if n == prev_n and new.exceptAll(edges).isEmpty():
+        fixed = c["n"] == prev_n and new.exceptAll(edges).isEmpty()
+        release(edges)
+        if fixed:
             # star forest: (s → d) with d = component root
             non_roots = new.select(F.col("s").alias("node"), F.col("d").alias("component"))
             roots = all_nodes.join(
                 new.select(F.col("s").alias("node")), "node", "left_anti"
             ).withColumn("component", F.col("node"))
             return non_roots.unionByName(roots)
-        edges, prev_n = new, n
+        edges, prev_n = new, c["n"]
     raise RuntimeError(
         f"connected_components_star did not converge in {max_iter} rounds"
     )

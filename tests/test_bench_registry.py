@@ -1,6 +1,9 @@
-"""bench.builders is the one bench query registry: bench.py times it and
-bench_extra.py times, noop-sinks and plan-dumps the same leaves."""
+"""Structural checks: bench.builders is the one bench query registry
+(bench.py times it and bench_extra.py times, noop-sinks and plan-dumps the
+same leaves), and session.materialize is the one eager checkpoint."""
 
+import ast
+import glob
 import json
 import os
 import sys
@@ -27,3 +30,22 @@ def test_bench_registry_is_the_only_one_and_analyses(spark):
     # every leaf builds and analyses (schema only, nothing executed)
     for name, build in bs.items():
         assert build().schema.fields, name
+
+
+def test_local_checkpoint_is_called_only_inside_materialize():
+    """Every eager checkpoint in the package goes through
+    ``session.materialize``: no other code names ``localCheckpoint``."""
+    calls = []
+    for path in sorted(glob.glob(os.path.join(ROOT, "seraster_spark", "*.py"))):
+        tree = ast.parse(open(path).read(), path)
+        owner = {}  # node -> its outermost enclosing function (walk is BFS)
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for node in ast.walk(fn):
+                    owner.setdefault(node, fn.name)
+        calls += [
+            (os.path.basename(path), owner.get(node))
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Attribute) and node.attr == "localCheckpoint"
+        ]
+    assert set(calls) == {("session.py", "materialize")}, calls

@@ -1,13 +1,14 @@
 """Plan-quality tests — the 100 TB guarantees, asserted on the optimizer
 output rather than trusted: column pruning to the scan, broadcast joins on
 the small side, whole-stage codegen on the hot path, partition pruning on
-the tile sink — plus the driver budgets: Spark jobs per call and py4j round
-trips per plan build."""
+the tile sink — plus the driver budgets: Spark jobs per call, py4j round
+trips per plan build, and the checkpoints an operator leaves persisted."""
 
 import os
 import threading
 import uuid
 
+import numpy as np
 import pytest
 from py4j.java_gateway import GatewayClient
 from pyspark.sql import functions as F
@@ -119,6 +120,21 @@ def _exchange_schemas(df) -> list[tuple[str, list[str]]]:
 
     walk(df._jdf.queryExecution().executedPlan())
     return out
+
+
+@pytest.mark.parametrize("op", ["gene_expression", "cell_type_roster"])
+def test_raster_tile_meta_is_broadcast(spark, docs, op):
+    """The per-tile meta side (num_cell, roster) joins by broadcast: tiles
+    are far fewer than docs, so the doc-side aggregate never shuffles for
+    the join."""
+    if op == "gene_expression":
+        out = rasterize.rasterize_gene_expression(docs, 100.0, fun="mean")
+    else:
+        out = rasterize.rasterize_cell_type(docs, 100.0, fun="sum", collect_roster=True)
+    assert "BroadcastHashJoin" in _physical(out)
+    assert any(
+        "BroadcastExchange" in h and "num_cell" in fields for h, fields in _exchange_schemas(out)
+    ), _exchange_schemas(out)
 
 
 def test_exact_dedup_payload_never_rides_hash_exchange(spark, docs_text):
@@ -408,3 +424,170 @@ def test_operator_build_round_trips(spark, docs_root, op):
     build()  # first build: one-time imports and JVM class loading
     n = _round_trips(build)
     assert n <= _BUILD_CEILINGS[op], f"{op}: {n} py4j round trips"
+
+
+# ---------------------------------------------------------------------------
+# eager checkpoints: counts ride the checkpoint job, superseded blocks freed
+
+
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def _checkpoints_behind(df) -> set:
+    """RDD ids of the checkpoints (LogicalRDD leaves) ``df`` reads."""
+    ids, stack = set(), [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "LogicalRDD":
+            ids.add(node.rdd().id())
+        ch = node.children()
+        stack.extend(ch.apply(i) for i in range(ch.size()))
+    return ids
+
+
+def test_materialize_observes_counts_on_the_checkpoint_job(spark):
+    """The counts come from the checkpoint job itself, that job carries the
+    given description, and the caller's description is restored."""
+    from seraster_spark.session import materialize
+
+    sc = spark.sparkContext
+    agg = spark.range(100).groupBy((F.col("id") % 7).alias("k")).count()
+    group = f"materialize_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "outer")
+    try:
+        out, c = materialize(
+            agg, "sizes", n=F.count(F.lit(1)), big=F.count_if(F.col("count") > 14)
+        )
+        desc = sc.getLocalProperty("spark.job.description")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    store = sc._jsc.sc().statusStore()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    # the aggregate's shuffle stage + the checkpoint; no count job
+    assert [store.job(j).description().get() for j in jobs] == ["sizes", "sizes"]
+    assert desc == "outer"
+    assert c == {"n": 7, "big": 2}  # k = 0 and 1 have 15 members, the rest 14
+    assert out.count() == 7
+    for empty in (
+        spark.range(0),
+        spark.range(10).limit(0),
+        spark.range(10).filter("id > 100"),
+        spark.range(0).groupBy("id").count(),
+    ):
+        assert materialize(empty, "empty", n=F.count(F.lit(1)))[1] == {"n": 0}
+
+
+def test_release_frees_exactly_the_checkpoint(spark):
+    from seraster_spark.session import materialize, release
+
+    before = _persisted(spark)
+    out, _ = materialize(spark.range(50).selectExpr("id * 2 AS v"), "doubled")
+    assert _persisted(spark) - before == _checkpoints_behind(out) != set()
+    release(out)
+    assert _persisted(spark) - before == set()
+    with pytest.raises(Exception):
+        out.collect()  # the blocks are gone
+
+
+def _knn_case(spark):
+    """400 points on a 10-unit lattice over [0, 190]^2 and two queries: one
+    in the lattice resolves at ring 1; one 35 units west of it needs rings
+    1, 2 and 4 (three rounds)."""
+    from seraster_spark.grid import GridSpec
+
+    pts = spark.createDataFrame(
+        [(i * 20 + j, 10.0 * i, 10.0 * j) for i in range(20) for j in range(20)],
+        "doc_id long, x double, y double",
+    )
+    qs = spark.createDataFrame(
+        [(0, 95.0, 95.0), (1, -35.0, 95.0)], "query_id long, x double, y double"
+    )
+    spec = GridSpec(-100.0, -100.0, 300.0, 300.0, 10.0, square=True)
+    return pts, qs, spec
+
+
+def _knn_oracle(pts, qs, k):
+    p = pts.toPandas()
+    out = set()
+    for q in qs.collect():
+        d = np.hypot(p.x - q["x"], p.y - q["y"]).to_numpy()
+        order = np.lexsort((p.doc_id.to_numpy(), d))[:k]
+        out |= {(q["query_id"], int(p.doc_id[i]), r + 1) for r, i in enumerate(order)}
+    return out
+
+
+def _knn_rows(out):
+    return {(r["query_id"], r["doc_id"], r["rank"]) for r in out.collect()}
+
+
+def test_knn_join_multi_round_job_budget(spark):
+    """Three rounds, forced by a collect: 1 job for the queries'
+    checkpoint, 4 per round's ranked checkpoint (its query stages plus the
+    checkpoint itself, which also observes the resolved count), 4 + 3 for
+    the two pending-set checkpoints, 1 for the collect. A separate
+    distinct().count() per round (3 jobs each) took this to 31."""
+    pts, qs, spec = _knn_case(spark)
+    out, n = _jobs(spark, lambda: _knn_rows(K.knn_join(pts, qs, 4, spec)))
+    assert out == _knn_oracle(pts, qs, 4)
+    assert n == 21
+
+
+def test_cap_buckets_counts_dropped_buckets_on_its_checkpoint(spark, caplog):
+    """One bucket over the cap (6 members > 5) and one exactly at it: the
+    warning names one dropped bucket, and the count costs no job beyond the
+    sizes checkpoint."""
+    import logging
+
+    from seraster_spark.text import cap_buckets
+
+    rows = [(i, 0, 7) for i in range(6)] + [(10 + i, 0, 8) for i in range(5)]
+    rows += [(20 + i, 1, i) for i in range(4)]
+    banded = spark.createDataFrame(rows, "_id long, band int, bhash long")
+    with caplog.at_level(logging.WARNING, logger="seraster_spark"):
+        kept, n = _jobs(spark, lambda: cap_buckets(banded, ["band", "bhash"], 5, "cap_test"))
+    msgs = [r.getMessage() for r in caplog.records if "cap_test" in r.getMessage()]
+    assert msgs == ["cap_test: dropped 1 degenerate LSH bucket(s) larger than 5 members"]
+    assert n == 2  # the sizes aggregate's shuffle stage + the checkpoint
+    assert sorted(r["_id"] for r in kept.collect()) == list(range(10, 15)) + list(range(20, 24))
+
+
+def test_iterative_operators_release_superseded_checkpoints(spark):
+    """After each iterative operator returns, only the checkpoints its
+    result reads stay persisted — superseded pending sets, label rounds,
+    edge sets and the IVF training sample are released — and the result
+    still collects to the right rows."""
+    from seraster_spark import text as X
+    from seraster_spark.similarity import train_ivf_centroids
+
+    pts, qs, spec = _knn_case(spark)
+    expect_knn = _knn_oracle(pts, qs, 4)
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], "id_a long, id_b long"
+    )
+    expect_cc = {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
+
+    def components(out):
+        return {r["node"]: r["component"] for r in out.collect()}
+
+    for op, rows, expect in (
+        (lambda: K.knn_join(pts, qs, 4, spec), _knn_rows, expect_knn),
+        (lambda: X.connected_components(pairs), components, expect_cc),
+        (lambda: X.connected_components_star(pairs), components, expect_cc),
+    ):
+        before = _persisted(spark)
+        out = op()
+        held = _persisted(spark) - before
+        assert held == _checkpoints_behind(out), held
+        assert rows(out) == expect  # a released block it still reads would fail here
+    rng = np.random.default_rng(3)
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(size=4)]) for i in range(300)],
+        "vec_id long, embedding array<double>",
+    )
+    before = _persisted(spark)
+    cent = train_ivf_centroids(vecs, n_centroids=3, kmeans_iters=2, sample_size=50)
+    assert cent.shape == (3, 4)
+    assert _persisted(spark) - before == set()
