@@ -417,25 +417,9 @@ def point_in_polygons_grouped(
         pad[i, : len(r)] = r
         if len(r) < E:
             pad[i, len(r) :] = r[-1]
-    x0 = pad[codes, :-1, 0]
-    y0 = pad[codes, :-1, 1]
-    x1 = pad[codes, 1:, 0]
-    y1 = pad[codes, 1:, 1]
-    pxc = px[:, None]
-    pyc = py[:, None]
-    cross = (x1 - x0) * (pyc - y0) - (y1 - y0) * (pxc - x0)
-    on_seg = (
-        (cross == 0)
-        & (pxc >= np.minimum(x0, x1))
-        & (pxc <= np.maximum(x0, x1))
-        & (pyc >= np.minimum(y0, y1))
-        & (pyc <= np.maximum(y0, y1))
-    ).any(axis=1)
-    cond = (y0 > pyc) != (y1 > pyc)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = x0 + (pyc - y0) * (x1 - x0) / (y1 - y0)
-    crossings = (cond & (pxc < xint)).sum(axis=1)
-    return ((crossings % 2) == 1) | on_seg
+    return _pip_on_pad(
+        px, py, pad[codes, :-1, 0], pad[codes, :-1, 1], pad[codes, 1:, 0], pad[codes, 1:, 1]
+    )
 
 
 def point_polygon_distance(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
@@ -527,6 +511,24 @@ def _dist_on_pad(
     return np.sqrt((pxc - qx) ** 2 + (pyc - qy) ** 2).min(axis=1)
 
 
+def _near_radius(spec: GridSpec, bx0, bx1, by0, by1):
+    """Cover distance bound for rings with bbox ``[bx0, bx1] × [by0, by1]``
+    (scalars or per-ring arrays): the tile circumradius plus the float
+    error of the centroid, encode and distance arithmetic, a few ulps of
+    the largest coordinate involved. A bound relative to the circumradius
+    alone misses tiles far from the origin: a ring vertex on a tile corner
+    at y = 16384 on a res-1.01 grid measured farther than
+    circumradius·(1 + 1e-12) from the centroid of the tile it encodes to."""
+    circum = (
+        spec.resolution * math.sqrt(2.0) / 2.0 if spec.square else spec.resolution / SQRT3
+    )
+    mag = np.maximum(
+        np.maximum(np.abs(bx0), np.abs(bx1)), np.maximum(np.abs(by0), np.abs(by1))
+    )
+    eps = np.finfo(np.float64).eps
+    return circum * (1 + 1e-12) + 64 * eps * (mag + abs(spec.xmin) + abs(spec.ymin))
+
+
 def covering_cells_batch(
     flat_x: np.ndarray,
     flat_y: np.ndarray,
@@ -573,10 +575,9 @@ def covering_cells_batch(
     ex1 = pad[poly, 1:, 0]
     ey1 = pad[poly, 1:, 1]
     inside = _pip_on_pad(cxx, cyy, ex0, ey0, ex1, ey1)
-    circum = (
-        spec.resolution * math.sqrt(2.0) / 2.0 if spec.square else spec.resolution / SQRT3
-    )
-    near = _dist_on_pad(cxx, cyy, ex0, ey0, ex1, ey1) <= circum * (1 + 1e-12)
+    near = _dist_on_pad(cxx, cyy, ex0, ey0, ex1, ey1) <= _near_radius(
+        spec, bx0, bx1, by0, by1
+    )[poly]
     m = inside | near
     return poly[m], cand[m]
 
@@ -605,8 +606,5 @@ def covering_cells(ring: np.ndarray, spec: GridSpec) -> np.ndarray:
     cand = pack(spec.mode, spec.level, rr.ravel(), cc.ravel())
     cx, cy = centroid(cand, spec)
     inside = point_in_polygon(cx, cy, ring)
-    circum = (
-        spec.resolution * math.sqrt(2.0) / 2.0 if spec.square else spec.resolution / SQRT3
-    )
-    near = point_polygon_distance(cx, cy, ring) <= circum * (1 + 1e-12)
+    near = point_polygon_distance(cx, cy, ring) <= _near_radius(spec, bx0, bx1, by0, by1)
     return np.unique(cand[inside | near])

@@ -4,13 +4,24 @@ single-shuffle Spark aggregation.
 Reference dataflow (``R/main.R:98-197`` ``rasterizeMatrix``): materialize a
 polygon grid → spatial-index join points→pixels → per-pixel task fan-out
 (``bplapply``) slicing the matrix → driver-side assembly. The Spark engine
-replaces all of that with:
+replaces all of that with one kernel:
 
     docs → cell_id = closed-form encode (JVM Column math)
          → ONE hash aggregate groupBy(cell_id[, feature]) with map-side
-           partial combine
-         → broadcast-join per-tile num_cell (mean denominator)
-         → project centroid / pixel name / WKT (all closed-form)
+           partial combine — the only step each entry point writes itself
+         → broadcast-join per-tile num_cell (mean denominator) [+ roster]
+         → project pixelval, centroid / pixel name (all closed-form)
+
+As in the reference, where ``rasterizeGeneExpression`` and
+``rasterizeCellType`` both delegate to ``rasterizeMatrix``
+(``R/main.R:316,355,544``), the last two steps are one private function,
+:func:`_with_tile_meta`. ``rasterize_gene_expression`` (``sum``),
+``rasterize_gene_expression_deterministic`` (an ordered fold),
+``rasterize_matrix`` (triplets joined to positions) and
+``rasterize_cell_type(collect_roster=True)`` (label counts) only compute
+their per-(tile, feature) totals and call it. The one exception is
+``rasterize_cell_type``'s default: every doc has one label, so num_cell is a
+window sum over the aggregated tiles rather than a second aggregate + join.
 
 Semantics preserved from the reference:
 
@@ -62,33 +73,17 @@ VALID_FUNS = ("sum", "mean")
 
 
 def _resolve_assay(
-    docs: DataFrame,
-    assay_col: str | None,
-    assay_name: str | None,
-    validate: bool = True,
+    docs: DataFrame, assay_col: str | None, assay_name: str | None
 ) -> DataFrame:
     """Reference assay selection semantics (``R/main.R:315-321,354-359``):
     validate ``assay_name`` against the assays actually present (eager, one
     column-pruned distinct over a low-cardinality column) and default to the
     first (lexicographically, for determinism — a DataFrame has no slot
-    order) when unspecified.
-
-    ``validate=False`` skips the eager distinct job entirely (for callers
-    looping over many rasterizations of the same validated input) — then
-    ``assay_name`` must be explicit, since the default-to-first rule is what
-    needs the distinct; a misspelled assay simply yields an empty result,
-    exactly like any other non-matching filter."""
+    order) when unspecified."""
     if assay_col is None:
         if assay_name is not None:
             raise ValueError("assay_name given but no assay_col to select on")
         return docs
-    if not validate:
-        if assay_name is None:
-            raise ValueError(
-                "validate_assay=False requires an explicit assay_name (the "
-                "default-to-first rule needs the eager distinct scan)"
-            )
-        return docs.filter(F.col(assay_col) == assay_name)
     avail = sorted(
         v for (v,) in docs.select(assay_col).distinct().collect() if v is not None
     )
@@ -191,6 +186,68 @@ def tile_meta(
     )
 
 
+def _with_tile_meta(
+    sums: DataFrame,
+    with_cell: DataFrame,
+    spec: GridSpec,
+    fun: str,
+    group_cols: list[str],
+    label: str,
+    total: str,
+    collect_roster: bool = False,
+    salt_buckets: int = 0,
+    keep_empty_feature_tiles: bool = False,
+) -> DataFrame:
+    """The kernel's shared last step (reference ``rasterizeMatrix``,
+    ``R/main.R:146-189``): per-(tile, ``label``) ``total``s, already
+    aggregated in ``sums``, meet the per-tile :func:`tile_meta` of
+    ``with_cell`` by broadcast join; then pixelval and the tile decoration
+    in one projection.
+
+    ``keep_empty_feature_tiles`` adds the tiles present in the meta but
+    absent from ``sums`` (every member doc had no triplet) with ``label =
+    NULL`` and ``total = 0``: a tile-cardinality anti-join unioned back in —
+    never a re-scan of the corpus, and the big fact side stays streamable
+    (a broadcast right-outer is not a plannable shape; the anti+union is).
+
+    Output: (group_cols..., cell_id, <label>, num_cell[, cellID_list],
+    pixelval, cx, cy, grid_index, pixel_name, type, resolution)."""
+    keys = group_cols + ["cell_id"]
+    meta = tile_meta(
+        with_cell, group_cols, collect_roster=collect_roster, salt_buckets=salt_buckets
+    )
+    joined = sums.join(F.broadcast(meta), on=keys, how="inner")
+    if keep_empty_feature_tiles:
+        dtypes = dict(sums.dtypes)
+        # broadcast the distinct tile keys (tile-cardinality) so the
+        # anti-join stays shuffle-free like the meta join it mirrors
+        empty = meta.join(
+            F.broadcast(sums.select(*keys).distinct()), on=keys, how="left_anti"
+        ).withColumns(
+            {
+                # cast BOTH literals to the sparse side's dtypes: a bare 0.0
+                # would widen an integer-valued total to double for every
+                # row through the union (schema drift + driver-hash mismatch)
+                label: F.lit(None).cast(dtypes[label]),
+                total: F.lit(0.0).cast(dtypes[total]),
+            }
+        )
+        joined = joined.unionByName(empty)
+    items = [X.ident(c) for c in (*keys, label)] + ["`num_cell`"]
+    if collect_roster:
+        items.append("`cellID_list`")
+    return _decorated(joined, items, fun, X.ident(total), "`num_cell`", spec)
+
+
+def _triplets(with_cell: DataFrame, keys: list[str], values_col: str) -> DataFrame:
+    """Long (triplet) form of the sparse ``values_col`` vectors: (keys...,
+    doc_id, feature, value), one row per present feature."""
+    qkeys = [X.ident(k) for k in keys]
+    return with_cell.selectExpr(
+        *qkeys, "`doc_id`", f"explode({X.ident(values_col)}) AS _kv"
+    ).selectExpr(*qkeys, "`doc_id`", "_kv.feature AS feature", "_kv.value AS value")
+
+
 def rasterize_cell_type(
     docs: DataFrame,
     resolution: float = 100.0,
@@ -227,21 +284,19 @@ def rasterize_cell_type(
     counts = with_cell.groupBy(*keys, label_col).agg(
         F.expr("CAST(count(1) AS DOUBLE) AS _cnt")
     )
-    items = [X.ident(c) for c in keys + [label_col]]
     if collect_roster:
         # roster needs the doc ids → second aggregate + broadcast join
-        meta = tile_meta(
-            with_cell, gcols, collect_roster=True, salt_buckets=salt_buckets
+        return _with_tile_meta(
+            counts, with_cell, spec, fun, gcols, label_col, "_cnt",
+            collect_roster=True, salt_buckets=salt_buckets,
         )
-        joined = counts.join(F.broadcast(meta), on=keys, how="inner")
-        items += ["`num_cell`", "`cellID_list`"]
-        return _decorated(joined, items, fun, "`_cnt`", "`num_cell`", spec)
     # every doc has exactly one label, so num_cell = Σ_label counts — a
     # window over the ALREADY-AGGREGATED tiles replaces a second full
     # scan + join (the window exchange moves tiles×labels rows, not docs).
     # The window gets its own projection: in one select with pixelval and
     # the decoration, the analyzer computes those BELOW the window, and the
     # window exchange would carry them (+64% shuffle bytes)
+    items = [X.ident(c) for c in keys + [label_col]]
     part = ", ".join(X.ident(k) for k in keys)
     with_n = counts.selectExpr(
         *items, "`_cnt`", f"CAST(sum(`_cnt`) OVER (PARTITION BY {part}) AS BIGINT) AS num_cell"
@@ -263,7 +318,6 @@ def rasterize_gene_expression(
     salt_buckets: int = 0,
     assay_col: str | None = None,
     assay_name: str | None = None,
-    validate_assay: bool = True,
     keep_empty_feature_tiles: bool = False,
 ) -> DataFrame:
     """Continuous-feature rasterization (reference
@@ -281,10 +335,7 @@ def rasterize_gene_expression(
 
     Multi-assay inputs: pass ``assay_col`` (a discriminator column) and
     optionally ``assay_name`` — validated eagerly against the assays present,
-    defaulting to the first (``R/main.R:315-321``). Loop callers rasterizing
-    many assays/resolutions of the same already-validated input can pass
-    ``validate_assay=False`` (with an explicit ``assay_name``) to skip the
-    eager distinct job per invocation.
+    defaulting to the first (``R/main.R:315-321``).
 
     By default an occupied tile whose member docs ALL have empty ``values``
     arrays yields no output row (sparse long form has nothing to emit),
@@ -292,10 +343,7 @@ def rasterize_gene_expression(
     metadata (R/main.R:153-176). Pass ``keep_empty_feature_tiles=True`` for
     reference semantics: such tiles are emitted with ``feature = NULL`` and
     ``pixelval = 0.0`` (the long-form encoding of the all-zero column),
-    num_cell metadata intact. Implemented as a tile-cardinality anti-join
-    from ``tile_meta`` unioned back in — never a re-scan of the corpus, and
-    the big fact side stays streamable (a broadcast right-outer is not a
-    plannable shape; the anti+union is).
+    num_cell metadata intact (see :func:`_with_tile_meta`).
     """
     if fun not in VALID_FUNS:
         raise ValueError(f"fun must be one of {VALID_FUNS} (R/main.R:33-36)")
@@ -304,46 +352,32 @@ def rasterize_gene_expression(
     # grid — the reference's common-bbox invariant (R/main.R:294-308); the
     # assay filter applies only after the grid is fixed
     spec = spec or grid_spec_for(docs, resolution, square=square, bbox=bbox)
-    docs = _resolve_assay(docs, assay_col, assay_name, validate=validate_assay)
+    docs = _resolve_assay(docs, assay_col, assay_name)
     keys = gcols + ["cell_id"]
-    qkeys = [X.ident(k) for k in keys]
     with_cell = docs.selectExpr(
         *[X.ident(c) for c in (*gcols, "doc_id", values_col)],
         f"{_cell_id(spec)} AS cell_id",
     )
-
-    meta = tile_meta(
-        with_cell, gcols, collect_roster=collect_roster, salt_buckets=salt_buckets
+    sums = _triplets(with_cell, keys, values_col).groupBy(*keys, "feature").agg(
+        F.expr("sum(value) AS _sum")
+    )
+    return _with_tile_meta(
+        sums, with_cell, spec, fun, gcols, "feature", "_sum",
+        collect_roster=collect_roster, salt_buckets=salt_buckets,
+        keep_empty_feature_tiles=keep_empty_feature_tiles,
     )
 
-    triplets = with_cell.selectExpr(
-        *qkeys, f"explode({X.ident(values_col)}) AS _kv"
-    ).selectExpr(*qkeys, "_kv.feature AS feature", "_kv.value AS value")
 
-    sums = triplets.groupBy(*keys, "feature").agg(F.expr("sum(value) AS _sum"))
-    joined = sums.join(F.broadcast(meta), on=keys, how="inner")
-    if keep_empty_feature_tiles:
-        # tiles present in meta but absent from the sparse sums: all member
-        # docs had empty `values`. Both sides of this anti-join are
-        # tile-cardinality (sums is already aggregated), so it is cheap at
-        # any scale; the union adds one row per all-empty tile.
-        dtypes = dict(sums.dtypes)
-        # broadcast the distinct tile keys (tile-cardinality) so the
-        # anti-join stays shuffle-free like the meta join it mirrors
-        empty = meta.join(
-            F.broadcast(sums.select(*keys).distinct()), on=keys, how="left_anti"
-        ).withColumns(
-            {
-                # cast BOTH literals to the sparse side's dtypes: a bare 0.0
-                # would widen an integer-valued _sum to double for every row
-                # through the union (schema drift + driver-hash mismatch)
-                "feature": F.lit(None).cast(dtypes["feature"]),
-                "_sum": F.lit(0.0).cast(dtypes["_sum"]),
-            }
-        )
-        joined = joined.unionByName(empty)
-    items = [*qkeys, "`feature`", "`num_cell`"] + (["`cellID_list`"] if collect_roster else [])
-    return _decorated(joined, items, fun, "`_sum`", "`num_cell`", spec)
+# The ordered fold of rasterize_gene_expression_deterministic: the group's
+# values sorted by doc id and summed left to right. The first addition is
+# -0.0 + v0, which is v0 bitwise for every v0 (a start at +0.0 would turn
+# a lone -0.0 into 0.0). NULL values are skipped as sum() skips them, and
+# a group of only NULLs stays NULL.
+_ORDERED_SUM = (
+    "aggregate(array_sort(collect_list(struct(`doc_id`, CAST(value AS DOUBLE) AS v))"
+    " FILTER (WHERE value IS NOT NULL)), CAST(NULL AS DOUBLE),"
+    " (acc, e) -> coalesce(acc, -0.0D) + e.v) AS _sum"
+)
 
 
 def rasterize_gene_expression_deterministic(
@@ -356,63 +390,28 @@ def rasterize_gene_expression_deterministic(
     spec: GridSpec | None = None,
 ) -> DataFrame:
     """Bit-for-bit reproducible variant (north_star: "match ... bit-for-bit
-    on aggregated pixel values"; SURVEY.md §4.3.4): per-tile values are
-    summed in CANONICAL ORDER — member docs sorted by (feature, doc_id)
-    inside an applyInPandas group — so the result is byte-identical across
-    partitionings, cluster sizes, and reruns. Tiles are small by the very
-    premise of rasterization, so per-tile pandas groups are cheap.
+    on aggregated pixel values"; SURVEY.md §4.3.4): each (tile, feature)
+    sum is an ordered fold over its values sorted by doc id, so the result
+    is byte-identical across partitionings, cluster sizes, and reruns.
+    The fold runs in the JVM (``array_sort`` of the group's
+    ``collect_list``, then ``aggregate``); values are cast to double.
 
-    This path is NOT the hot 100 TB aggregate: the default
-    rasterize_gene_expression (single codegen shuffle, order-free exact or
-    near-exact sums) is; use this variant only when last-ulp float
-    reproducibility across reruns/cluster sizes is a hard requirement."""
-    import numpy as np
-    import pandas as pd
-
+    This path is NOT the hot 100 TB aggregate: it collects each (tile,
+    feature) group's values into one list, where the default
+    rasterize_gene_expression (single codegen shuffle, order-free sums)
+    combines partial sums map-side; use this variant only when last-ulp
+    float reproducibility across reruns/cluster sizes is a hard
+    requirement. Output columns are those of rasterize_gene_expression."""
     if fun not in VALID_FUNS:
         raise ValueError(f"fun must be one of {VALID_FUNS} (R/main.R:33-36)")
     spec = spec or grid_spec_for(docs, resolution, square=square, bbox=bbox)
-    with_cell = assign_tiles(docs.select("doc_id", "x", "y", values_col), spec)
-    triplets = with_cell.select(
-        "cell_id",
-        "doc_id",
-        F.explode(values_col).alias("_kv"),
-    ).select(
-        "cell_id",
-        "doc_id",
-        F.col("_kv.feature").alias("feature"),
-        F.col("_kv.value").alias("value"),
+    with_cell = docs.selectExpr(
+        "`doc_id`", X.ident(values_col), f"{_cell_id(spec)} AS cell_id"
     )
-    num = with_cell.groupBy("cell_id").agg(F.count(F.lit(1)).alias("num_cell"))
-
-    out_schema = "cell_id long, feature string, pixel_sum double"
-
-    def tile_sum(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["feature", "doc_id"], kind="mergesort")
-        recs = []
-        # dropna=False: the default (JVM) path keeps a NULL-feature group,
-        # so the deterministic twin must too — pandas groupby silently
-        # drops NaN keys by default, which would diverge the result sets
-        for feat, grp in pdf.groupby("feature", sort=True, dropna=False):
-            if pd.isna(feat):
-                feat = None
-            # np.cumsum is a strict sequential accumulation (no pairwise
-            # reassociation), so its last element is bit-identical to a
-            # left-to-right Python fold — at vector speed
-            vals = grp["value"].to_numpy(np.float64)
-            s = float(np.cumsum(vals)[-1]) if len(vals) else 0.0
-            recs.append((int(pdf["cell_id"].iloc[0]), feat, s))
-        return pd.DataFrame(recs, columns=["cell_id", "feature", "pixel_sum"])
-
-    sums = triplets.groupBy("cell_id").applyInPandas(tile_sum, out_schema)
-    joined = sums.join(F.broadcast(num), "cell_id")
-    pixelval = (
-        F.col("pixel_sum")
-        if fun == "sum"
-        else F.col("pixel_sum") / F.col("num_cell").cast("double")
+    sums = _triplets(with_cell, ["cell_id"], values_col).groupBy("cell_id", "feature").agg(
+        F.expr(_ORDERED_SUM)
     )
-    out = joined.withColumn("pixelval", pixelval).drop("pixel_sum")
-    return _with_tile_decor(out, spec)
+    return _with_tile_meta(sums, with_cell, spec, fun, [], "feature", "_sum")
 
 
 @dataclass(frozen=True)
@@ -461,7 +460,8 @@ def rasterize_matrix(
     Plan shape: pos → closed-form tile encode → ONE aggregate for meta
     (num_cell + salted roster); triplets pick up their tile by an equi-join
     on the unique doc id (uniform key), then ONE aggregate per
-    (tile, feature); num_cell attaches by broadcast (tiles ≪ docs).
+    (tile, feature); num_cell attaches by broadcast (tiles ≪ docs) in the
+    kernel step shared with the other entry points, :func:`_with_tile_meta`.
     """
     if fun not in VALID_FUNS:
         raise ValueError(f"fun must be one of {VALID_FUNS} (R/main.R:33-36)")
@@ -479,13 +479,8 @@ def rasterize_matrix(
         F.col(id_col), F.col(feature_col).alias("feature"), F.col(value_col).alias("value")
     ).join(with_cell.select(id_col, "cell_id"), id_col)
     sums = triplets.groupBy("cell_id", "feature").agg(F.sum("value").alias("_sum"))
-    meta_slim = F.broadcast(meta.select("cell_id", "num_cell", "pixel_name"))
-    pixelval = (
-        F.col("_sum") if fun == "sum" else F.col("_sum") / F.col("num_cell").cast("double")
-    )
-    data_rast = (
-        sums.join(meta_slim, "cell_id")
-        .select("cell_id", "pixel_name", "feature", pixelval.alias("pixelval"))
+    data_rast = _with_tile_meta(sums, with_cell, spec, fun, [], "feature", "_sum").select(
+        "cell_id", "pixel_name", "feature", "pixelval"
     )
     pos_rast = meta.select(
         "cell_id", "pixel_name", F.col("cx").alias("x"), F.col("cy").alias("y")

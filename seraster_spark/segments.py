@@ -51,8 +51,9 @@ Conventions (consistent with :mod:`seraster_spark.grid`):
   dyadic grid ``2^-b`` (``floor(frac·2^b + 0.5)/2^b``) *before*
   aggregation. With b ≤ 20 and integer value columns the summed terms
   are exact in float64, so aggregate results are independent of
-  partitioning/summation order — the same bit-determinism contract as
-  ``rasterize_gene_expression_deterministic`` (SURVEY §4.3.4), and what
+  partitioning/summation order — the bit-determinism contract of
+  ``rasterize_gene_expression_deterministic`` (SURVEY §4.3.4), reached
+  by exact terms instead of that function's fixed-order fold, and what
   lets a SQL twin reproduce the aggregate bit-for-bit. Default ``None``
   keeps full double precision (last-ulp order sensitivity, like any
   float sum).

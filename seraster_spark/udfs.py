@@ -3,8 +3,9 @@
 
 These are the vectorized batch kernels (never per-row Python — BASELINE.json
 ``input_hint``) for ops with no reasonable Column form: polygonize to WKT or
-GeoJSON, and point-in-polygon. Tile encoding and centroids have no UDF here:
-they run as pure Column expressions (:mod:`seraster_spark.expressions`).
+GeoJSON. Point-in-polygon runs in :mod:`seraster_spark.vector`'s join
+kernels. Tile encoding and centroids have no UDF here: they run as pure
+Column expressions (:mod:`seraster_spark.expressions`).
 
 Each factory closes over a broadcastable :class:`GridSpec` (plain frozen
 dataclass → pickled once into the UDF closure, not per batch).
@@ -44,17 +45,3 @@ def geojson_geom_udf(spec: GridSpec, decimals: int = 6):
         return pd.Series(out)
 
     return _geom
-
-
-def pip_udf(ring_vertices: list[tuple[float, float]]):
-    """point-in-polygon against one broadcast polygon ring (vector→raster
-    filter path). Ring must be closed (first == last vertex)."""
-    ring = np.asarray(ring_vertices, dtype=np.float64)
-
-    @F.pandas_udf(T.BooleanType())
-    def _pip(x: pd.Series, y: pd.Series) -> pd.Series:
-        return pd.Series(
-            grid.point_in_polygon(x.to_numpy(np.float64), y.to_numpy(np.float64), ring)
-        )
-
-    return _pip

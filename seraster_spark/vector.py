@@ -6,9 +6,10 @@ its cell id (reference keeps sfc_POLYGON geometry in colData,
 materializing a grid).
 
 Vector → raster: a polygon is mapped to its covering cell set (bbox → ring of
-candidate cells → centroid-in-polygon filter + vertex cells), then used as a
-semi-join filter on the documents table — an equi-join on cell_id, never a
-per-row geometry test against the big table.
+candidate cells → centroid-in-polygon filter + boundary band), then joined
+to the documents table — an equi-join on cell_id, never a per-row geometry
+test against the big table; the exact ray-cast test runs on the join's
+survivors only.
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from .expressions import quote
 from .grid import GridSpec, covering_cells, polygon_vertices
 from .udfs import wkt_udf
 
@@ -109,15 +111,6 @@ def write_geojson_lines(
         F.lit("}"),
     )
     tiles.select(line.alias("value")).write.mode(mode).text(path)
-
-
-def polygon_covering_cells(ring_vertices: list[tuple[float, float]], spec: GridSpec) -> list[int]:
-    """Driver-side: cell ids covering a polygon (closed ring). Small result —
-    the grid arithmetic is O(bbox cells), not O(data)."""
-    ring = np.asarray(ring_vertices, dtype=np.float64)
-    if not (ring[0] == ring[-1]).all():
-        ring = np.vstack([ring, ring[:1]])
-    return [int(c) for c in covering_cells(ring, spec)]
 
 
 def spatial_join(
@@ -747,25 +740,11 @@ def filter_by_polygon(
     spec: GridSpec,
     exact: bool = True,
 ) -> DataFrame:
-    """Vector → raster join: keep docs inside the polygon.
-
-    Stage 1 (coarse): semi-join against a BROADCAST covering-cell frame
-    (same shape as spatial_join). For small cell sets an isin literal list
-    would also work, but a large polygon on a fine grid covers millions of
-    cells — as plan literals those blow up plan serialization and driver
-    memory, while a broadcast join scales to any covering-set size. Stage 2
-    (exact, optional): vectorized ray-casting PIP on the survivors only —
-    the expensive geometry test touches a tiny fraction of the table.
-    """
-    cells = polygon_covering_cells(ring_vertices, spec)
-    spark = docs_with_cell.sparkSession
-    cells_df = spark.createDataFrame([(int(c),) for c in cells], "cell_id long")
-    coarse = docs_with_cell.join(F.broadcast(cells_df), "cell_id", "left_semi")
-    if not exact:
-        return coarse
-    from .udfs import pip_udf
-
-    ring = list(ring_vertices)
-    if ring[0] != ring[-1]:
-        ring = ring + [ring[0]]
-    return coarse.filter(pip_udf(ring)(F.col("x"), F.col("y")))
+    """Vector → raster join: keep docs inside the polygon (open or closed
+    ring). This is :func:`spatial_join` with one ring — the broadcast
+    covering-cell equi-join, then (``exact``) the vectorized ray-cast PIP on
+    its survivors — returning exactly the input columns. The cover holds
+    each cell once, so each doc is kept at most once; ``exact=False``
+    returns the coarse cover (a superset: every doc in a covering tile)."""
+    out = spatial_join(docs_with_cell, {"polygon": ring_vertices}, spec, exact=exact)
+    return out.select(*[F.col(quote(c)) for c in docs_with_cell.columns])

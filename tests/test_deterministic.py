@@ -76,3 +76,30 @@ def test_deterministic_keeps_null_feature_group(spark):
          for r in rasterize_gene_expression_deterministic(d, 50.0, fun="sum", spec=spec).collect()}
     assert a == b
     assert any(k[1] is None for k in a)
+
+
+def test_deterministic_skips_null_values_like_sum(spark):
+    """A NULL value beside non-NULL values in one (tile, feature) group is
+    skipped, as the default path's sum() skips it; a group of only NULL
+    values gives a NULL pixel on both paths."""
+    from seraster_spark.grid import GridSpec
+    from seraster_spark.rasterize import (
+        rasterize_gene_expression,
+        rasterize_gene_expression_deterministic,
+    )
+
+    spec = GridSpec(0.0, 0.0, 100.0, 100.0, 50.0, square=True)
+    rows = [
+        (1, 10.0, 10.0, [("g1", None), ("g2", None)]),
+        (2, 12.0, 11.0, [("g1", 3.0)]),
+    ]
+    d = spark.createDataFrame(
+        rows,
+        "doc_id long, x double, y double, "
+        "values array<struct<feature:string,value:double>>",
+    )
+    a = {r["feature"]: r["pixelval"]
+         for r in rasterize_gene_expression(d, 50.0, fun="sum", spec=spec).collect()}
+    b = {r["feature"]: r["pixelval"]
+         for r in rasterize_gene_expression_deterministic(d, 50.0, fun="sum", spec=spec).collect()}
+    assert a == b == {"g1": 3.0, "g2": None}

@@ -165,6 +165,21 @@ def test_covering_cells_big_polygon():
     assert np.isin(cells, cover).all()
 
 
+def test_covering_cells_keeps_far_corner_vertex_tile():
+    """A ring vertex on a tile corner far from the origin (relative to the
+    resolution) keeps the tile it encodes to, on both cover kernels: the
+    centroid→vertex distance there exceeds circumradius·(1 + 1e-12) by
+    float error alone."""
+    spec = GridSpec(0.0, 16384.0, 40.4, 16414.3, 1.01, square=True)
+    ring = np.array([[0.0, 16384.0], [-0.3, 16383.0], [-0.6, 16383.0], [0.0, 16384.0]])
+    tile = int(grid.encode(ring[:1, 0], ring[:1, 1], spec)[0])
+    assert tile in grid.covering_cells(ring, spec)
+    _, cells = grid.covering_cells_batch(
+        ring[:, 0], ring[:, 1], np.array([0]), np.array([len(ring)]), spec
+    )
+    assert tile in cells
+
+
 def test_morton_expr_interleaves_and_clusters(spark):
     """Morton code = python-reference bit interleave; and sorting by it
     clusters space: the mean |Δrow|+|Δcol| between SORT-adjacent tiles is

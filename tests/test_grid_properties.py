@@ -299,3 +299,51 @@ def test_centroid_expr_matches_numpy_centroid(spark, grids, rowcol):
         cx, cy = grid.centroid(ids[spec], spec)
         np.testing.assert_array_equal(_bits(got[f"{name}_cx"]), _bits(cx))
         np.testing.assert_array_equal(_bits(got[f"{name}_cy"]), _bits(cy))
+
+
+# ---------------------------------------------------------------------------
+# polygon covers: the vectorized batch cover == the per-ring cover, and both
+# are complete
+
+
+@st.composite
+def _ring_batches(draw, sq, hx):
+    """1-4 rings of 3-8 vertices (open or closed) drawn from free points and
+    tile-edge floats ±1 ulp, plus candidate interior points from the same
+    pool."""
+    pool = draw(_grid_points(sq, hx))
+    vertex = st.sampled_from(pool)
+    rings = []
+    for _ in range(draw(st.integers(min_value=1, max_value=4))):
+        ring = draw(st.lists(vertex, min_size=3, max_size=8))
+        if draw(st.booleans()):
+            ring.append(ring[0])
+        rings.append(np.array(ring, dtype=np.float64))
+    return rings, pool
+
+
+@settings(max_examples=200, deadline=None)
+@given(data=st.data(), grids=_grid_pairs(), seed=st.integers(0, 2**32 - 1))
+def test_covering_cells_batch_matches_per_ring_and_is_complete(data, grids, seed):
+    """covering_cells_batch (the polygon-corpus cover kernel) gives each
+    ring the same cell set as covering_cells on the closed ring, and every
+    ring vertex and every sampled interior point has its grid.encode tile in
+    that cover — square and hex, open and closed rings, vertices on tile
+    edges ±1 ulp."""
+    rings, pool = data.draw(_ring_batches(*grids))
+    lens = np.array([len(r) for r in rings], dtype=np.int64)
+    offs = np.cumsum(lens) - lens
+    flat = np.concatenate(rings)
+    rng = np.random.default_rng(seed)
+    for spec in grids:
+        ridx, cells = grid.covering_cells_batch(flat[:, 0], flat[:, 1], offs, lens, spec)
+        for i, ring in enumerate(rings):
+            closed = ring if (ring[0] == ring[-1]).all() else np.vstack([ring, ring[:1]])
+            cover = set(cells[ridx == i].tolist())
+            assert cover == set(grid.covering_cells(closed, spec).tolist())
+            lo, hi = ring.min(axis=0), ring.max(axis=0)
+            probe = np.vstack([np.array(pool), rng.uniform(lo, hi, (64, 2))])
+            inside = grid.point_in_polygon(probe[:, 0], probe[:, 1], closed)
+            pts = np.vstack([ring, probe[inside]])
+            missing = set(grid.encode(pts[:, 0], pts[:, 1], spec).tolist()) - cover
+            assert not missing, (spec, ring, missing)

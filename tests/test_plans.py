@@ -137,6 +137,15 @@ def test_raster_tile_meta_is_broadcast(spark, docs, op):
     ), _exchange_schemas(out)
 
 
+def test_deterministic_raster_stays_in_the_jvm(spark, docs):
+    """The bit-reproducible raster sums with a JVM ordered fold: no row of
+    it crosses into Python."""
+    out = rasterize.rasterize_gene_expression_deterministic(docs, 100.0, fun="mean")
+    plan = _physical(out)
+    for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan
+
+
 def test_exact_dedup_payload_never_rides_hash_exchange(spark, docs_text):
     """The document payload must not be shuffled by the (skewed) content
     hash: group stats run on a slim (id, hash) projection; text re-attaches

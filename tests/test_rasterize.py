@@ -528,37 +528,3 @@ def test_keep_empty_feature_tiles_preserves_integer_sum_dtype(spark):
     assert dict(on.dtypes)["pixelval"] == dict(off.dtypes)["pixelval"]
     vals = {r["feature"]: r["pixelval"] for r in on.collect()}
     assert vals == {"f": 6, None: 0}
-
-
-def test_assay_validate_optout_zero_jobs_and_identical_result(spark, docs):
-    """validate_assay=False (loop-caller fast path): building the
-    DataFrame runs ZERO Spark jobs (the default path pays one eager
-    distinct per call), the result is identical to the validated path, and
-    an explicit assay_name is required (the default-to-first rule needs
-    the eager distinct)."""
-    multi = docs.withColumn(
-        "assay",
-        F.when(F.col("doc_id").substr(-1, 1) < "5", "counts").otherwise("lognorm"),
-    )
-    spec = grid_spec_for(multi, RES, square=True)
-    sc = spark.sparkContext
-    sc.setJobGroup("assay_noval", "validate_assay=False construction")
-    try:
-        fast = rasterize.rasterize_gene_expression(
-            multi, RES, spec=spec, assay_col="assay", assay_name="counts",
-            validate_assay=False,
-        )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup("assay_noval") == [], (
-        "validate_assay=False must not run any job at construction time"
-    )
-    slow = rasterize.rasterize_gene_expression(
-        multi, RES, spec=spec, assay_col="assay", assay_name="counts"
-    )
-    key = ["cell_id", "feature"]
-    assert fast.orderBy(*key).collect() == slow.orderBy(*key).collect()
-    with pytest.raises(ValueError, match="explicit assay_name"):
-        rasterize.rasterize_gene_expression(
-            multi, RES, spec=spec, assay_col="assay", validate_assay=False
-        )

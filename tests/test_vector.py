@@ -41,16 +41,17 @@ def test_filter_by_polygon_vs_oracle(spark, docs, docs_pdf):
     spec = grid_spec_for(docs, 100.0, square=True)
     ring = [(500.0, 300.0), (1500.0, 400.0), (1400.0, 1500.0), (600.0, 1300.0)]
     with_cell = rasterize.assign_tiles(docs, spec)
-    got = set(
-        r[0]
-        for r in vector.filter_by_polygon(with_cell, ring, spec).select("doc_id").collect()
-    )
+    out = vector.filter_by_polygon(with_cell, ring, spec)
+    assert out.columns == with_cell.columns
+    ids = [r[0] for r in out.select("doc_id").collect()]
+    got = set(ids)
     closed = np.array(ring + [ring[0]], dtype=float)
     inside = point_in_polygon(
         docs_pdf.x.to_numpy(), docs_pdf.y.to_numpy(), closed
     )
     exp = set(docs_pdf.doc_id[inside])
     assert got == exp
+    assert len(ids) == len(got)
 
 
 def test_coarse_filter_superset(spark, docs):
