@@ -844,8 +844,9 @@ def q_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     r5: routed through ``spatial_join_corpus`` — the polygons enter as
     DATA ROWS (ring vertex arrays), exercising the corpus-scale path
     (mapInPandas cover generation, ring payload on the join, grouped
-    Arrow PIP) against the same convex half-plane SQL twin. Row-for-row
-    parity with the dict path is separately pytest-proven."""
+    Arrow PIP) against the same convex half-plane SQL twin. The dict
+    ``spatial_join`` (q_zonal_stats) runs the same cover kernel on the
+    driver and the same join + PIP stage."""
     from .bbox import grid_spec_for
     from .vector import spatial_join_corpus
 

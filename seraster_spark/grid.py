@@ -389,7 +389,9 @@ def point_in_polygon(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.nda
         & (pyc <= np.maximum(y0, y1))
     ).any(axis=1)
     cond = (y0 > pyc) != (y1 > pyc)
-    with np.errstate(divide="ignore", invalid="ignore"):
+    # xint overflows only on an edge off the scanline, which ``cond`` masks
+    # out: a straddling edge has |py - y0| <= |y1 - y0|
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
         xint = x0 + (pyc - y0) * (x1 - x0) / (y1 - y0)
     crossings = (cond & (pxc < xint)).sum(axis=1)
     return ((crossings % 2) == 1) | on_seg
@@ -432,7 +434,9 @@ def point_polygon_distance(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> 
     ex = (ring[1:, 0] - ring[:-1, 0])[None, :]
     ey = (ring[1:, 1] - ring[:-1, 1])[None, :]
     ee = ex * ex + ey * ey
-    with np.errstate(divide="ignore", invalid="ignore"):
+    # t overflows only on a near-degenerate edge far from the probe, where
+    # the clip to [0, 1] below yields the (correct) endpoint distance
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
         t = ((px - x0) * ex + (py - y0) * ey) / ee
     t = np.nan_to_num(np.clip(t, 0.0, 1.0))
     qx = x0 + t * ex
@@ -481,7 +485,9 @@ def _pip_on_pad(
         & (pyc <= np.maximum(y0, y1))
     ).any(axis=1)
     cond = (y0 > pyc) != (y1 > pyc)
-    with np.errstate(divide="ignore", invalid="ignore"):
+    # xint overflows only on an edge off the scanline, which ``cond`` masks
+    # out: a straddling edge has |py - y0| <= |y1 - y0|
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
         xint = x0 + (pyc - y0) * (x1 - x0) / (y1 - y0)
     crossings = (cond & (pxc < xint)).sum(axis=1)
     return ((crossings % 2) == 1) | on_seg
@@ -503,7 +509,9 @@ def _dist_on_pad(
     ex = x1 - x0
     ey = y1 - y0
     ee = ex * ex + ey * ey
-    with np.errstate(divide="ignore", invalid="ignore"):
+    # t overflows only on a near-degenerate edge far from the probe, where
+    # the clip to [0, 1] below yields the (correct) endpoint distance
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
         t = ((pxc - x0) * ex + (pyc - y0) * ey) / ee
     t = np.nan_to_num(np.clip(t, 0.0, 1.0))
     qx = x0 + t * ex
@@ -529,6 +537,20 @@ def _near_radius(spec: GridSpec, bx0, bx1, by0, by1):
     return circum * (1 + 1e-12) + 64 * eps * (mag + abs(spec.xmin) + abs(spec.ymin))
 
 
+def box_tiles(
+    r0: np.ndarray, r1: np.ndarray, c0: np.ndarray, c1: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Every (row, col) of each inclusive index box ``[r0, r1] × [c0, c1]``,
+    box by box and row-major within a box: ``(box index, row, col)``."""
+    ncc = c1 - c0 + 1
+    counts = (r1 - r0 + 1) * ncc
+    box = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
+    local = np.arange(int(counts.sum()), dtype=np.int64) - np.repeat(
+        np.cumsum(counts) - counts, counts
+    )
+    return box, r0[box] + local // ncc[box], c0[box] + local % ncc[box]
+
+
 def covering_cells_batch(
     flat_x: np.ndarray,
     flat_y: np.ndarray,
@@ -543,7 +565,9 @@ def covering_cells_batch(
     (identical corner-encode bounds, centroid PIP and boundary-distance
     arithmetic; see :func:`_pad_rings` for why padding changes no
     decision), without the per-ring Python/numpy dispatch overhead that
-    dominated the polygon-corpus cover kernel."""
+    dominated the polygon-corpus cover kernel. Pairs come ring by ring,
+    each ring's cells ascending by id like ``covering_cells``' (candidates
+    are generated row-major, which is packed-id order)."""
     B = len(offs)
     bx0 = np.minimum.reduceat(flat_x, offs)
     bx1 = np.maximum.reduceat(flat_x, offs)
@@ -558,15 +582,7 @@ def covering_cells_batch(
     r1 = r4.max(axis=0) + 1
     c0 = c4.min(axis=0) - 1
     c1 = c4.max(axis=0) + 1
-    counts = (r1 - r0 + 1) * (c1 - c0 + 1)
-    tot = int(counts.sum())
-    poly = np.repeat(np.arange(B, dtype=np.int64), counts)
-    local = np.arange(tot, dtype=np.int64) - np.repeat(
-        np.cumsum(counts) - counts, counts
-    )
-    ncc = c1 - c0 + 1
-    rr = r0[poly] + local // ncc[poly]
-    cc = c0[poly] + local % ncc[poly]
+    poly, rr, cc = box_tiles(r0, r1, c0, c1)
     cand = pack(spec.mode, spec.level, rr, cc)
     cxx, cyy = centroid(cand, spec)
     pad = _pad_rings(flat_x, flat_y, offs, lens)

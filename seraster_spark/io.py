@@ -202,10 +202,8 @@ def _escape_partition_value(v: str) -> str:
     )
 
 
-def completed_units(spark: SparkSession | None, out_dir: str) -> set[str]:
-    """Units with a manifest row. Pure local-filesystem scan; the ``spark``
-    parameter is unused and kept only for caller compatibility (pass
-    None)."""
+def completed_units(out_dir: str) -> set[str]:
+    """Units with a manifest row (a local-filesystem scan, no Spark job)."""
     mpath = _manifest_path(out_dir)
     if not os.path.exists(mpath):
         return set()
@@ -242,7 +240,7 @@ def checkpointed_write(
     job_id = job_id or uuid.uuid4().hex[:12]
     os.makedirs(_manifest_path(out_dir), exist_ok=True)
     spark = df.sparkSession
-    done = completed_units(spark, out_dir)
+    done = completed_units(out_dir)
     pending = [str(u) for u in units if str(u) not in done]
     records = []
     if pending:

@@ -5,23 +5,29 @@ its cell id (reference keeps sfc_POLYGON geometry in colData,
 ``R/main.R:191-193``; we synthesize the ring on demand instead of ever
 materializing a grid).
 
-Vector → raster: a polygon is mapped to its covering cell set (bbox → ring of
-candidate cells → centroid-in-polygon filter + boundary band), then joined
-to the documents table — an equi-join on cell_id, never a per-row geometry
+Vector → raster: every polygon entry point (``spatial_join``,
+``filter_by_polygon``, ``spatial_join_corpus``, ``zonal_weighted``,
+``rasterize_polygons``) maps its rings to covering cell sets through one
+step, :func:`_ring_covers` over :func:`_valid_rings` — validate, close,
+span-guard, then ``grid.covering_cells_batch`` (bbox → ring of candidate
+cells → centroid-in-polygon filter + boundary band) on groups of rings
+whose candidates × edges fit one memory budget. The cover is then joined to
+the documents table — an equi-join on cell_id, never a per-row geometry
 test against the big table; the exact ray-cast test runs on the join's
-survivors only.
+survivors only, one grouped Arrow kernel for every ring.
 """
 
 from __future__ import annotations
 
 import json
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .expressions import quote
-from .grid import GridSpec, covering_cells, polygon_vertices
+from .grid import GridSpec, polygon_vertices
 from .udfs import wkt_udf
 
 
@@ -113,55 +119,172 @@ def write_geojson_lines(
     tiles.select(line.alias("value")).write.mode(mode).text(path)
 
 
+_MAX_TILES_PER_POLY = 262144
+
+# Σ candidate tiles × padded edges per covering_cells_batch call: bounds the
+# cover's (candidates × edges) float64 temporaries to ~8 MiB each whatever
+# the batch size; a ring over it on its own is covered alone, at the cost
+# of one per-ring cover
+_COVER_BUDGET = 1 << 20
+
+
+class _Rings(NamedTuple):
+    """Ragged storage of validated, closed rings: ring ``i`` is
+    ``x[offs[i] : offs[i] + lens[i]]`` (and ``y``), ``sel[i]`` is its row in
+    the input and ``box[i]`` its ``(x0, x1, y0, y1)`` bbox."""
+
+    sel: np.ndarray
+    x: np.ndarray
+    y: np.ndarray
+    offs: np.ndarray
+    lens: np.ndarray
+    box: np.ndarray
+
+    def take(self, idx: np.ndarray) -> "_Rings":
+        lens = self.lens[idx]
+        offs = np.cumsum(lens) - lens
+        v = np.repeat(self.offs[idx] - offs, lens) + np.arange(int(lens.sum()))
+        return _Rings(self.sel[idx], self.x[v], self.y[v], offs, lens, self.box[idx])
+
+    def xy(self) -> list[np.ndarray]:
+        """Each ring as a closed ``(k, 2)`` vertex array."""
+        xy = np.column_stack([self.x, self.y])
+        return [xy[o : o + k] for o, k in zip(self.offs, self.lens)]
+
+
+def _valid_rings(xs_l: list, ys_l: list, bad: np.ndarray | None = None) -> _Rings:
+    """The usable rings among the vertex lists ``xs_l``/``ys_l``, each
+    closed (v0 appended to an open ring). Degenerate rings are dropped: a
+    NULL ring, ``xs``/``ys`` lengths that differ, fewer than 3 vertices, a
+    non-finite coordinate, or a row flagged in ``bad`` (a NULL id)."""
+    n = len(xs_l)
+    lx = np.fromiter((-1 if v is None else len(v) for v in xs_l), np.int64, n)
+    ly = np.fromiter((-1 if v is None else len(v) for v in ys_l), np.int64, n)
+    ok = (lx == ly) & (lx >= 3)
+    if bad is not None:
+        ok &= ~bad
+    sel = np.flatnonzero(ok)
+    lens = lx[sel]
+    offs = np.cumsum(lens) - lens
+    if not len(sel):
+        z = np.zeros(0)
+        return _Rings(sel, z, z, offs, lens, np.zeros((0, 4)))
+    x = np.concatenate([np.asarray(xs_l[i], dtype=np.float64) for i in sel])
+    y = np.concatenate([np.asarray(ys_l[i], dtype=np.float64) for i in sel])
+    box = np.stack(
+        [f.reduceat(v, offs) for v in (x, y) for f in (np.minimum, np.maximum)], axis=1
+    )
+    r = _Rings(sel, x, y, offs, lens, box)
+    fin = np.isfinite(box).all(axis=1)
+    if not fin.all():
+        r = r.take(np.flatnonzero(fin))
+    last = r.offs + r.lens - 1
+    op = (r.x[r.offs] != r.x[last]) | (r.y[r.offs] != r.y[last])
+    if op.any():
+        at = (r.offs + r.lens)[op]
+        lens = r.lens + op
+        r = r._replace(
+            x=np.insert(r.x, at, r.x[r.offs[op]]),
+            y=np.insert(r.y, at, r.y[r.offs[op]]),
+            offs=np.cumsum(lens) - lens,
+            lens=lens,
+        )
+    return r
+
+
+def _ring_covers(rings: _Rings, spec: GridSpec, cap: int):
+    """The one vector → raster cover step: yields ``(group, ridx, cells)``,
+    ``group`` a run of consecutive rings whose candidate tiles × padded
+    edges fit :data:`_COVER_BUDGET` and ``(ridx, cells)`` its
+    ``covering_cells_batch`` pairs (each ring's cells ascending by id, as
+    ``covering_cells`` returns them). Raises before materializing anything
+    when one ring's candidate bbox (corner-encode bounds, +1 tile per side)
+    holds more than ``cap`` tiles."""
+    from .grid import covering_cells_batch, encode, unpack
+
+    n = len(rings.sel)
+    if not n:
+        return
+    x0, x1, y0, y1 = rings.box.T
+    _, _, r4, c4 = unpack(
+        encode(np.concatenate([x0, x1, x0, x1]), np.concatenate([y0, y0, y1, y1]), spec)
+    )
+    r4, c4 = r4.reshape(4, n), c4.reshape(4, n)
+    span = (r4.max(axis=0) - r4.min(axis=0) + 3) * (c4.max(axis=0) - c4.min(axis=0) + 3)
+    if (span > cap).any():
+        raise ValueError(
+            f"polygon bbox covers {int(span[span > cap][0])} candidate tiles > "
+            f"max_tiles_per_poly={cap}; coarsen the grid or split the geometry"
+        )
+    bounds = [0]
+    cand = edges = 0
+    for i, (c, e) in enumerate(zip(span.tolist(), rings.lens.tolist())):
+        if i > bounds[-1] and (cand + c) * max(edges, e) > _COVER_BUDGET:
+            bounds.append(i)
+            cand = edges = 0
+        cand += c
+        edges = max(edges, e)
+    bounds.append(n)
+    for lo, hi in zip(bounds[:-1], bounds[1:]):
+        g = rings if hi - lo == n else rings.take(np.arange(lo, hi))
+        yield (g, *covering_cells_batch(g.x, g.y, g.offs, g.lens, spec))
+
+
+def _dict_rings(polygons: dict[str, list[tuple[float, float]]]) -> tuple[list, _Rings]:
+    """Ids and validated rings of a driver-side ``{id: [(x, y), ...]}``
+    dict. A degenerate ring or a NULL id (see :func:`_valid_rings`) raises:
+    a literal polygon that cannot be covered is a caller error, not a row
+    to drop."""
+    ids = list(polygons)
+    arrs = [np.asarray(v, dtype=np.float64) for v in polygons.values()]
+    arrs = [a if a.ndim == 2 and a.shape[1] == 2 else None for a in arrs]
+    xs_l, ys_l = ([None if a is None else a[:, k] for a in arrs] for k in (0, 1))
+    rings = _valid_rings(xs_l, ys_l, np.asarray(pd.isna(ids), dtype=bool))
+    if len(rings.sel) < len(ids):
+        bad = [ids[i] for i in np.setdiff1d(np.arange(len(ids)), rings.sel)]
+        raise ValueError(
+            f"degenerate polygon ring(s) {bad}: a ring needs a non-NULL id and "
+            "at least 3 finite (x, y) vertices"
+        )
+    return ids, rings
+
+
 def spatial_join(
     docs_with_cell: DataFrame,
     polygons: dict[str, list[tuple[float, float]]],
     spec: GridSpec,
     exact: bool = True,
 ) -> DataFrame:
-    """N-polygon containment join: docs × polygons → (doc rows, poly_id).
-
-    Stage 1: each polygon's covering cell set (driver-side closed-form grid
-    arithmetic, tiny) becomes a broadcast (cell_id, poly_id) table — the
-    spatial join is an equi-join on cell_id, partition-prunable, and each
-    doc only meets polygons whose cover contains its tile.
-    Stage 2 (exact): vectorized ray-casting PIP per (doc, poly) pair inside
-    one Arrow batch kernel — touching only stage-1 survivors.
+    """N-polygon containment join: docs × polygons → (doc rows, poly_id),
+    for polygons given as a driver-side ``{poly_id: [(x, y), ...]}`` dict
+    (open or closed rings). It is :func:`spatial_join_corpus` with
+    ``broadcast_cover=True`` — same cover kernel, same join and PIP stage,
+    same columns (``cell_id``, the other input columns, ``poly_id``), same
+    rows — except that the cover kernel runs here on the driver, where the
+    rings already are: the cover is then a local relation whose broadcast
+    runs no Spark job and no Python worker (covering a one-row-per-ring
+    frame with mapInPandas cost ~0.3 s more per call on 200k docs, 4
+    cores). Dict joins share the corpus path's cap: a polygon whose bbox
+    cover exceeds 262144 candidate tiles raises ``ValueError`` (coarsen the
+    grid, split the geometry, or call :func:`spatial_join_corpus` with a
+    larger ``max_tiles_per_poly``). A degenerate ring raises ``ValueError``
+    instead of being dropped.
 
     A doc inside k polygons yields k rows (standard spatial-join semantics).
     """
-    spark = docs_with_cell.sparkSession
-    rows = []
-    rings: dict[str, np.ndarray] = {}
-    for pid, verts in polygons.items():
-        ring = np.asarray(verts, dtype=np.float64)
-        if not (ring[0] == ring[-1]).all():
-            ring = np.vstack([ring, ring[:1]])
-        rings[pid] = ring
-        for c in covering_cells(ring, spec):
-            rows.append((int(c), pid))
-    cover = spark.createDataFrame(rows, "cell_id long, poly_id string")
-    coarse = docs_with_cell.join(F.broadcast(cover), "cell_id")
-    if not exact:
-        return coarse
+    from pyspark.sql.types import StringType
 
-    ring_items = list(rings.items())
-
-    @F.pandas_udf("boolean")
-    def _pip_multi(x: pd.Series, y: pd.Series, pid: pd.Series) -> pd.Series:
-        out = np.zeros(len(x), dtype=bool)
-        xv = x.to_numpy(np.float64)
-        yv = y.to_numpy(np.float64)
-        pv = pid.to_numpy()
-        for p, ring in ring_items:
-            mask = pv == p
-            if mask.any():
-                from .grid import point_in_polygon
-
-                out[mask] = point_in_polygon(xv[mask], yv[mask], ring)
-        return pd.Series(out)
-
-    return coarse.filter(_pip_multi(F.col("x"), F.col("y"), F.col("poly_id")))
+    ids, rings = _dict_rings(polygons)
+    rs = rings.xy()
+    pdf = pd.DataFrame(
+        {"poly_id": ids, "xs": [r[:, 0] for r in rs], "ys": [r[:, 1] for r in rs]}
+    )
+    kernel = _cover_kernel(spec, "poly_id", "xs", "ys", _MAX_TILES_PER_POLY)
+    cover = docs_with_cell.sparkSession.createDataFrame(
+        [row for part in kernel([pdf]) for row in zip(*(part[c].tolist() for c in part))],
+        _cover_schema("poly_id", StringType()),
+    )
+    return _cover_join(docs_with_cell, cover, "poly_id", exact, broadcast_cover=True)
 
 
 def spatial_join_corpus(
@@ -173,28 +296,36 @@ def spatial_join_corpus(
     xs: str = "xs",
     ys: str = "ys",
     broadcast_cover: bool = True,
-    max_tiles_per_poly: int = 262144,
+    max_tiles_per_poly: int = _MAX_TILES_PER_POLY,
 ) -> DataFrame:
-    """Containment join where the polygons are themselves a CORPUS — the
-    data-scale counterpart of :func:`spatial_join` (driver dict), the way
-    :func:`rasterize_polygons` generalizes :func:`zonal_weighted`: parcels
-    × points at 100 TB means BOTH sides are DataFrames.
+    """Containment join where the polygons are themselves a CORPUS: parcels
+    × points at 100 TB means BOTH sides are DataFrames (:func:`spatial_join`
+    is its driver-dict form).
 
     ``polys`` carries ring vertex arrays ``xs``/``ys`` (open or closed,
     any simple polygon) plus an id column. Stage 1: one mapInPandas kernel
-    turns each polygon into its covering-cell set — a slim (cell_id,
-    poly_id, ring) table; the spatial join becomes an equi-join on
-    cell_id (``broadcast_cover=True`` broadcasts it — right when the
-    polygon corpus is dimension-sized; ``False`` is the corpus↔corpus
-    shuffle shape, where AQE's skew splitting handles hot cells and the
-    ring payload rides the one exchange so no second join is needed).
-    Stage 2 (``exact``): vectorized ray-casting PIP over stage-1
+    turns each polygon into its covering-cell set (:func:`_ring_covers`) —
+    a slim (cell_id, poly_id, ring) table; the spatial join becomes an
+    equi-join on cell_id (``broadcast_cover=True`` broadcasts it — right
+    when the polygon corpus is dimension-sized; ``False`` is the
+    corpus↔corpus shuffle shape, where AQE's skew splitting handles hot
+    cells and the ring payload rides the one exchange so no second join is
+    needed). Stage 2 (``exact``): vectorized ray-casting PIP over stage-1
     survivors, one Arrow batch kernel, grouped per distinct ring inside
-    each batch. Same row semantics as ``spatial_join``: a doc inside k
-    polygons yields k rows; boundary points count as inside. Degenerate
-    rings (NULL / < 3 vertices / non-finite) are dropped; a polygon whose
-    bbox cover exceeds ``max_tiles_per_poly`` raises loudly.
+    each batch. Output columns: ``cell_id``, the other ``docs_with_cell``
+    columns, ``poly_id``. A doc inside k polygons yields k rows; boundary
+    points count as inside. Degenerate rings (NULL / length mismatch / < 3
+    vertices / non-finite / NULL id) are dropped; a polygon whose bbox
+    cover exceeds ``max_tiles_per_poly`` raises loudly.
     """
+    cover = polys.mapInPandas(
+        _cover_kernel(spec, poly_id, xs, ys, max_tiles_per_poly),
+        _cover_schema(poly_id, polys.schema[poly_id].dataType),
+    )
+    return _cover_join(docs_with_cell, cover, poly_id, exact, broadcast_cover)
+
+
+def _cover_schema(poly_id: str, id_type):
     from pyspark.sql.types import (
         BinaryType,
         DoubleType,
@@ -203,11 +334,10 @@ def spatial_join_corpus(
         StructType,
     )
 
-    id_field = polys.schema[poly_id]
-    cover_schema = StructType(
+    return StructType(
         [
             StructField("cell_id", LongType()),
-            StructField(poly_id, id_field.dataType),
+            StructField(poly_id, id_type),
             # ONE binary column per ring: 6.4M array<double> cells took
             # ~2/3 of the PIP stage in Arrow->pandas deserialization;
             # bytes objects are ~an order of magnitude cheaper to box
@@ -223,113 +353,43 @@ def spatial_join_corpus(
             StructField("_pby1", DoubleType()),
         ]
     )
-    cap = max_tiles_per_poly
-    # bound the vectorized cover's transient arrays (candidates × padded
-    # edges) regardless of Arrow batch sizing
-    chunk_rows = 8192
 
-    def cover_kernel(batches):
-        from .grid import covering_cells_batch
 
+def _cover_kernel(spec: GridSpec, poly_id: str, xs: str, ys: str, cap: int):
+    """Stage 1 of the containment join, over pandas batches of polygon rows:
+    the :func:`_cover_schema` rows of every valid ring's cover."""
+
+    def kernel(batches):
         for pdf in batches:
-            for lo in range(0, len(pdf), chunk_rows):
-                sub = pdf.iloc[lo : lo + chunk_rows]
-                if not len(sub):
-                    continue
-                xs_l = sub[xs].tolist()
-                ys_l = sub[ys].tolist()
-                pid_vals = sub[poly_id]
-                # structural validity, vectorized: NULL cells, length
-                # mismatch, < 3 vertices, NaN ids (pd.factorize codes NaN
-                # ids as -1, which would gather the WRONG ring in the PIP
-                # stage)
-                lx = np.fromiter(
-                    (-1 if v is None else len(v) for v in xs_l), np.int64, len(xs_l)
-                )
-                ly = np.fromiter(
-                    (-1 if v is None else len(v) for v in ys_l), np.int64, len(ys_l)
-                )
-                ok = (lx == ly) & (lx >= 3) & ~pd.isna(pid_vals).to_numpy()
-                if not ok.any():
-                    continue
-                sel = np.flatnonzero(ok)
-                lens = lx[sel]
-                flat_x = np.concatenate(
-                    [np.asarray(xs_l[i], dtype=np.float64) for i in sel]
-                )
-                flat_y = np.concatenate(
-                    [np.asarray(ys_l[i], dtype=np.float64) for i in sel]
-                )
-                offs = np.cumsum(lens) - lens
-                fin = np.isfinite(flat_x) & np.isfinite(flat_y)
-                allfin = np.bitwise_and.reduceat(fin.astype(np.int8), offs).astype(bool)
-                if not allfin.all():
-                    sel = sel[allfin]
-                    if not len(sel):
-                        continue
-                    keep_v = np.repeat(allfin, lens)
-                    lens = lens[allfin]
-                    flat_x = flat_x[keep_v]
-                    flat_y = flat_y[keep_v]
-                    offs = np.cumsum(lens) - lens
-                # span guard (identical semantics/message to the per-ring
-                # path: bbox-corner encode bounds, +3 slop per axis)
-                from .grid import encode as _encode
-                from .grid import unpack as _unpack
-
-                nB = len(sel)
-                bx0 = np.minimum.reduceat(flat_x, offs)
-                bx1 = np.maximum.reduceat(flat_x, offs)
-                by0 = np.minimum.reduceat(flat_y, offs)
-                by1 = np.maximum.reduceat(flat_y, offs)
-                _, _, cr4, cc4 = _unpack(
-                    _encode(
-                        np.concatenate([bx0, bx1, bx0, bx1]),
-                        np.concatenate([by0, by0, by1, by1]),
-                        spec,
-                    )
-                )
-                cr4 = cr4.reshape(4, nB)
-                cc4 = cc4.reshape(4, nB)
-                span = (cr4.max(axis=0) - cr4.min(axis=0) + 3) * (
-                    cc4.max(axis=0) - cc4.min(axis=0) + 3
-                )
-                if (span > cap).any():
-                    bad = int(span[span > cap][0])
-                    raise ValueError(
-                        f"polygon bbox covers {bad} candidate tiles > "
-                        f"max_tiles_per_poly={cap}; coarsen the grid or "
-                        "split the geometry"
-                    )
-                ridx, cells = covering_cells_batch(flat_x, flat_y, offs, lens, spec)
+            ids = pdf[poly_id]
+            # NULL/NaN ids are dropped: pd.factorize codes them -1, which
+            # would gather the WRONG ring in the PIP stage
+            rings = _valid_rings(pdf[xs].tolist(), pdf[ys].tolist(), pd.isna(ids).to_numpy())
+            for g, ridx, cells in _ring_covers(rings, spec, cap):
                 if not len(cells):
                     continue
-                # closed-ring bytes per ring, exactly the per-ring layout:
-                # vertices (+ closing v0 only when the input ring is open)
-                from .grid import _pad_rings
-
-                pad = _pad_rings(flat_x, flat_y, offs, lens)
-                closed = (flat_x[offs] == flat_x[offs + lens - 1]) & (
-                    flat_y[offs] == flat_y[offs + lens - 1]
-                )
-                clen = lens + (~closed).astype(np.int64)
-                ring_bytes = np.empty(nB, dtype=object)
-                for i in range(nB):
-                    ring_bytes[i] = pad[i, : clen[i]].tobytes()
-                pid_np = pid_vals.to_numpy()[sel]
+                ring_bytes = np.empty(len(g.sel), dtype=object)
+                ring_bytes[:] = [r.tobytes() for r in g.xy()]
                 yield pd.DataFrame(
                     {
                         "cell_id": cells,
-                        poly_id: pid_np[ridx],
+                        poly_id: ids.to_numpy()[g.sel][ridx],
                         "_ring": ring_bytes[ridx],
-                        "_pbx0": bx0[ridx],
-                        "_pbx1": bx1[ridx],
-                        "_pby0": by0[ridx],
-                        "_pby1": by1[ridx],
+                        "_pbx0": g.box[ridx, 0],
+                        "_pbx1": g.box[ridx, 1],
+                        "_pby0": g.box[ridx, 2],
+                        "_pby1": g.box[ridx, 3],
                     }
                 )
 
-    cover = polys.mapInPandas(cover_kernel, cover_schema)
+    return kernel
+
+
+def _cover_join(
+    docs_with_cell: DataFrame, cover: DataFrame, poly_id: str, exact: bool, broadcast_cover: bool
+) -> DataFrame:
+    """Stages 1 (equi-join on cell_id) and 2 (exact ray cast) of the
+    containment join, given the :func:`_cover_schema` cover table."""
     _aux = ["_ring", "_pbx0", "_pbx1", "_pby0", "_pby1"]
     coarse = docs_with_cell.join(
         F.broadcast(cover) if broadcast_cover else cover, "cell_id"
@@ -390,28 +450,27 @@ def zonal_weighted(
     stats when only the raster (not the points) is available; exact
     polygon-overlay aggregation under the uniform-density-per-tile model.
 
-    Scale shape: stage 1 is the same broadcast covering-cells equi-join as
-    the spatial join (a tile meets only zones whose cover contains it);
-    stage 2 clips in one Arrow kernel per batch (Sutherland–Hodgman
-    against the convex tile polygon — square AND hex grids, any simple
-    zone polygon). Numerics: the aggregate sums AREA·value products and
-    divides by the tile area once per zone AFTER aggregation — for
-    rectilinear zones on representable coordinates the summed terms are
-    exact, so the result is independent of summation order (the property
-    the DuckDB oracle's bitwise comparison relies on).
+    Scale shape: stage 1 covers every zone in one driver-side
+    :func:`_ring_covers` call (the spatial join's cover step, with its cap
+    of 262144 candidate tiles per zone; a degenerate zone ring raises
+    ``ValueError``) and broadcasts the (cell_id, zone_id) table — a tile
+    meets only zones whose cover contains it; stage 2 clips in one Arrow
+    kernel per batch (Sutherland–Hodgman against the convex tile polygon —
+    square AND hex grids, any simple zone polygon). Numerics: the aggregate
+    sums AREA·value products and divides by the tile area once per zone
+    AFTER aggregation — for rectilinear zones on representable coordinates
+    the summed terms are exact, so the result is independent of summation
+    order (the property the DuckDB oracle's bitwise comparison relies on).
     """
-    from .grid import polygon_vertices, ring_area, tile_clip_areas
+    from .grid import ring_area, tile_clip_areas
 
     spark = tiles.sparkSession
-    rows: list[tuple[int, str]] = []
-    rings: dict[str, np.ndarray] = {}
-    for zid, verts in zones.items():
-        ring = np.asarray(verts, dtype=np.float64)
-        if not (ring[0] == ring[-1]).all():
-            ring = np.vstack([ring, ring[:1]])
-        rings[zid] = ring
-        for c in covering_cells(ring, spec):
-            rows.append((int(c), zid))
+    ids, rings = _dict_rings(zones)
+    rows = [
+        (c, ids[i])
+        for g, ridx, cells in _ring_covers(rings, spec, _MAX_TILES_PER_POLY)
+        for i, c in zip(g.sel[ridx].tolist(), cells.tolist())
+    ]
     schema = "zone_id string, covered_area double" + "".join(
         f", w_{c} double" for c in value_cols
     )
@@ -419,7 +478,7 @@ def zonal_weighted(
         return spark.createDataFrame([], schema)
     cover = spark.createDataFrame(rows, "cell_id long, zone_id string")
     cand = tiles.join(F.broadcast(cover), "cell_id")
-    ring_items = list(rings.items())
+    ring_items = list(zip(ids, rings.xy()))
 
     @F.pandas_udf("double")
     def _area(cell_id: pd.Series, zid: pd.Series) -> pd.Series:
@@ -452,7 +511,7 @@ def rasterize_polygons(
     polys: DataFrame,
     spec: GridSpec,
     value_cols: tuple[str, ...] = (),
-    max_tiles_per_poly: int = 262144,
+    max_tiles_per_poly: int = _MAX_TILES_PER_POLY,
     xs: str = "xs",
     ys: str = "ys",
 ) -> DataFrame:
@@ -466,30 +525,30 @@ def rasterize_polygons(
     Input is a DataFrame with ring vertex arrays ``xs``/``ys`` (open or
     closed, any simple polygon, any orientation) — polygons are DATA, not
     driver-side literals, so the corpus can be arbitrarily large. Scale
-    shape (the segment-op pattern): one mapInPandas kernel clips each
-    polygon against its bbox tiles (±1 safety ring) and emits per-batch
-    partial aggregates via bincount, so only O(distinct cells) rows cross
-    the Python boundary or the ONE final shuffle. Axis-aligned rectangles
-    take a fully vectorized closed-form overlap path (bitwise-equal to the
+    shape (the segment-op pattern): one mapInPandas kernel validates each
+    batch's rings at once and emits per-batch partial aggregates via
+    bincount, so only O(distinct cells) rows cross the Python boundary or
+    the ONE final shuffle. Axis-aligned rectangles on a square grid take a
+    fully vectorized closed-form overlap block (bitwise-equal to the
     Sutherland-Hodgman clip for rectilinear rings on representable
-    coordinates — the property the oracle relies on); general rings run
-    the S-H kernel per candidate tile. A polygon whose candidate-tile
-    count exceeds ``max_tiles_per_poly`` raises loudly (coarsen the grid
-    or pre-split the geometry); the guard bounds what each path actually
-    MATERIALIZES — the grid-clamped bbox on the rect fast path, the full
-    unclamped bbox meshgrid that ``covering_cells`` builds on the general
-    path — so a mostly-off-grid geometry may pass as a 4-vertex rect but
-    raise when written with a collinear fifth vertex. Degenerate rings
-    (< 3 vertices, non-finite coordinates) are dropped. Square and hex
-    grids alike.
+    coordinates — the property the oracle relies on); general rings are
+    covered by the spatial join's cover step (:func:`_ring_covers`) and
+    clipped (S-H) per candidate tile. A polygon whose candidate-tile count
+    exceeds ``max_tiles_per_poly`` raises loudly (coarsen the grid or
+    pre-split the geometry); the guard bounds what each path actually
+    MATERIALIZES — the grid-clamped bbox on the rect block, the full
+    unclamped bbox + 1 tile per side on the cover step — so a mostly-off-grid
+    geometry may pass as a 4-vertex rect but raise when written with a
+    collinear fifth vertex. Degenerate rings (NULL, length mismatch, < 3
+    vertices, non-finite coordinates) are dropped. Square and hex grids
+    alike.
     """
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    from .grid import ring_area, tile_clip_areas
+    from .grid import box_tiles, clip_polygon_convex, pack, ring_area, unpack
 
-    tile_area = ring_area(
-        polygon_vertices(np.array([_pack_py(spec, 0, 0)], dtype=np.int64), spec)[0]
-    )
+    origin = np.zeros(1, dtype=np.int64)
+    tile_area = ring_area(polygon_vertices(pack(spec.mode, spec.level, origin, origin), spec)[0])
     fields = [
         StructField("cell_id", LongType()),
         StructField("n_polys", LongType()),
@@ -502,153 +561,74 @@ def rasterize_polygons(
     ncols, nrows = spec.ncols, spec.nrows
     cap = max_tiles_per_poly
 
-    def rect_block(pdf, rect_ix, rects):
+    def rect_block(rect_rows, xa, ya, xb, yb):
         """Fully vectorized closed-form burn for a block of axis-aligned
-        rects (the common zone-mask case): two-stage arange/repeat
-        expansion of bbox tiles — no per-polygon Python iteration at all.
-        Same overlap expression tree as the per-polygon rect path, so
-        results are bitwise-identical."""
-        from .grid import pack as _pack_np
-
-        xa = np.array([r[0] for r in rects])
-        ya = np.array([r[1] for r in rects])
-        xb = np.array([r[2] for r in rects])
-        yb = np.array([r[3] for r in rects])
+        rects (the common zone-mask case): one ``grid.box_tiles``
+        expansion of the bbox tiles — no per-polygon Python iteration at
+        all. Same overlap per tile as the S-H clip, bitwise. It keeps its own
+        cap on the GRID-CLAMPED bbox because that is all it materializes:
+        no candidate ring outside the grid and no edge arrays, unlike the
+        cover step, whose guard counts the unclamped bbox + 1 tile per
+        side."""
         c0 = np.maximum(np.floor((xa - xmin) / res).astype(np.int64), 0)
         c1 = np.minimum(np.floor((xb - xmin) / res).astype(np.int64), ncols - 1)
         r0 = np.maximum(np.floor((ya - ymin) / res).astype(np.int64), 0)
         r1 = np.minimum(np.floor((yb - ymin) / res).astype(np.int64), nrows - 1)
-        ok = (c0 <= c1) & (r0 <= r1)
-        if not ok.any():
-            return None
-        keep = np.nonzero(ok)[0]
-        c0, c1, r0, r1 = c0[keep], c1[keep], r0[keep], r1[keep]
-        span = (c1 - c0 + 1) * (r1 - r0 + 1)
+        keep = np.flatnonzero((c0 <= c1) & (r0 <= r1))
+        span = (c1 - c0 + 1)[keep] * (r1 - r0 + 1)[keep]
         if (span > cap).any():
             raise ValueError(
                 f"polygon bbox covers {int(span.max())} candidate tiles > "
                 f"max_tiles_per_poly={cap}; coarsen the grid or split the "
                 "geometry"
             )
-        colspan = c1 - c0 + 1
-        n1 = int(colspan.sum())
-        pix = np.repeat(np.arange(len(keep)), colspan)
-        starts = np.cumsum(colspan) - colspan
-        ci = np.arange(n1, dtype=np.int64) - np.repeat(starts, colspan) + np.repeat(c0, colspan)
-        rowspan = (r1 - r0 + 1)[pix]
-        n2 = int(rowspan.sum())
-        starts2 = np.cumsum(rowspan) - rowspan
-        strip = np.repeat(np.arange(n1), rowspan)
-        ri = np.arange(n2, dtype=np.int64) - np.repeat(starts2, rowspan) + r0[pix][strip]
-        pixf = pix[strip]
-        cif = ci[strip]
-        tx0 = xmin + cif.astype(np.float64) * res
+        k, ri, ci = box_tiles(r0[keep], r1[keep], c0[keep], c1[keep])
+        rect = keep[k]
+        tx0 = xmin + ci.astype(np.float64) * res
         ty0 = ymin + ri.astype(np.float64) * res
         ov = np.maximum(
-            0.0, np.minimum(tx0 + res, xb[keep][pixf]) - np.maximum(tx0, xa[keep][pixf])
+            0.0, np.minimum(tx0 + res, xb[rect]) - np.maximum(tx0, xa[rect])
         ) * np.maximum(
-            0.0, np.minimum(ty0 + res, yb[keep][pixf]) - np.maximum(ty0, ya[keep][pixf])
+            0.0, np.minimum(ty0 + res, yb[rect]) - np.maximum(ty0, ya[rect])
         )
         pos = ov > 0.0
-        if not pos.any():
-            return None
-        cells = _pack_np(spec.mode, spec.level, ri[pos], cif[pos])
-        orig = np.asarray(rect_ix, dtype=np.int64)[keep][pixf[pos]]
-        return cells, ov[pos], orig
+        return pack(spec.mode, spec.level, ri[pos], ci[pos]), ov[pos], rect_rows[rect[pos]]
 
     def kernel(batches):
-        from .grid import encode as _encode
-        from .grid import unpack as _unpack
-
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cells_acc: list[np.ndarray] = []
-            areas_acc: list[np.ndarray] = []
-            vals_acc: dict[str, list[np.ndarray]] = {c: [] for c in value_cols}
-            rect_ix: list[int] = []
-            rects: list[tuple[float, float, float, float]] = []
-            for i in range(len(pdf)):
-                raw_x, raw_y = pdf[xs].iloc[i], pdf[ys].iloc[i]
-                if raw_x is None or raw_y is None:
-                    continue
-                rx = np.asarray(raw_x, dtype=np.float64)
-                ry = np.asarray(raw_y, dtype=np.float64)
-                if rx.ndim != 1 or ry.ndim != 1:
-                    continue
-                if len(rx) != len(ry) or len(rx) < 3:
-                    continue
-                if not (np.isfinite(rx).all() and np.isfinite(ry).all()):
-                    continue
+            rings = _valid_rings(pdf[xs].tolist(), pdf[ys].tolist())
+            is_rect = np.zeros(len(rings.sel), dtype=bool)
+            if spec.square:
+                is_rect, xa, ya, xb, yb = _rects(rings)
+            parts = []  # (cells, areas, input rows): general rings, then rects
+            general = rings.take(np.flatnonzero(~is_rect))
+            for g, ridx, cells in _ring_covers(general, spec, cap):
                 if spec.square:
-                    rect = _as_rect(rx, ry)
-                    if rect is not None:
-                        rect_ix.append(i)
-                        rects.append(rect)
-                        continue
-                ring = np.column_stack([rx, ry])
-                # covering_cells / tile_clip_areas edge-walk ring[:-1]->
-                # ring[1:], so an OPEN ring silently loses its closing edge
-                # (and with it most interior PIP hits) — close it here
-                if ring[0, 0] != ring[-1, 0] or ring[0, 1] != ring[-1, 1]:
-                    ring = np.vstack([ring, ring[:1]])
-                # cap check BEFORE materializing the candidate meshgrid,
-                # using the same bbox-corner encoding covering_cells uses
-                bx = np.array([rx.min(), rx.max(), rx.min(), rx.max()])
-                by = np.array([ry.min(), ry.min(), ry.max(), ry.max()])
-                _, _, crows, ccols = _unpack(_encode(bx, by, spec))
-                span = int(crows.max() - crows.min() + 3) * int(
-                    ccols.max() - ccols.min() + 3
-                )
-                if span > cap:
-                    raise ValueError(
-                        f"polygon bbox covers {span} candidate tiles > "
-                        f"max_tiles_per_poly={cap}; coarsen the grid or "
-                        "split the geometry"
-                    )
-                cells = covering_cells(ring, spec)
-                if len(cells) == 0:
-                    continue
-                _, _, trows, tcols = _unpack(cells)
-                if spec.square:
-                    # covering_cells does not clamp to the grid extent;
-                    # hex axial coords are legitimately signed — no clamp
+                    # the cover is not clamped to the grid extent; hex
+                    # axial coords are legitimately signed — no clamp
+                    _, _, trows, tcols = unpack(cells)
                     on_grid = (
-                        (trows >= 0) & (trows < nrows)
-                        & (tcols >= 0) & (tcols < ncols)
+                        (trows >= 0) & (trows < nrows) & (tcols >= 0) & (tcols < ncols)
                     )
-                    if not on_grid.any():
-                        continue
-                    cells = cells[on_grid]
-                    trows, tcols = trows[on_grid], tcols[on_grid]
-                areas = tile_clip_areas(cells, ring, spec)
+                    ridx, cells = ridx[on_grid], cells[on_grid]
+                rs = g.xy()
+                areas = np.fromiter(
+                    (
+                        ring_area(clip_polygon_convex(rs[r], tile))
+                        for r, tile in zip(ridx.tolist(), polygon_vertices(cells, spec))
+                    ),
+                    np.float64,
+                    len(cells),
+                )
                 pos = areas > 0.0
-                if not pos.any():
-                    continue
-                cells_acc.append(cells[pos])
-                areas_acc.append(areas[pos])
-                for c in value_cols:
-                    # NULL burn contributes 0 to the weighted sum (SQL
-                    # sum-ignores-NULL semantics) but still counts coverage
-                    v = pdf[c].iloc[i]
-                    v = 0.0 if pd.isna(v) else float(v)
-                    vals_acc[c].append(areas[pos] * v)
-            if rects:
-                rb = rect_block(pdf, rect_ix, rects)
-                if rb is not None:
-                    rcells, rareas, rorig = rb
-                    cells_acc.append(rcells)
-                    areas_acc.append(rareas)
-                    for c in value_cols:
-                        v = np.nan_to_num(
-                            pdf[c].to_numpy(dtype=np.float64)[rorig],
-                            nan=0.0, posinf=np.inf, neginf=-np.inf,
-                        )
-                        vals_acc[c].append(rareas * v)
-            if not cells_acc:
+                parts.append((cells[pos], areas[pos], g.sel[ridx[pos]]))
+            if is_rect.any():
+                parts.append(rect_block(rings.sel[is_rect], xa, ya, xb, yb))
+            if not parts:
                 continue
-            cell = np.concatenate(cells_acc)
-            area = np.concatenate(areas_acc)
+            cell, area, row = (np.concatenate(p) for p in zip(*parts))
+            if not len(cell):
+                continue
             cells_u, inv = np.unique(cell, return_inverse=True)
             ncell = len(cells_u)
             data = {
@@ -657,9 +637,13 @@ def rasterize_polygons(
                 "cov_area": np.bincount(inv, weights=area, minlength=ncell),
             }
             for c in value_cols:
-                data[f"w_{c}"] = np.bincount(
-                    inv, weights=np.concatenate(vals_acc[c]), minlength=ncell
+                # NULL burn contributes 0 to the weighted sum (SQL
+                # sum-ignores-NULL semantics) but still counts coverage
+                v = np.nan_to_num(
+                    pdf[c].to_numpy(dtype=np.float64)[row],
+                    nan=0.0, posinf=np.inf, neginf=-np.inf,
                 )
+                data[f"w_{c}"] = np.bincount(inv, weights=area * v, minlength=ncell)
             yield pd.DataFrame(data)
 
     partials = polys.mapInPandas(kernel, partial_schema)
@@ -677,31 +661,22 @@ def rasterize_polygons(
     return out
 
 
-def _pack_py(spec: GridSpec, row: int, col: int) -> int:
-    from .grid import pack
-
-    return int(pack(spec.mode, spec.level, np.array([row]), np.array([col]))[0])
-
-
-def _as_rect(rx: np.ndarray, ry: np.ndarray):
-    """Detect an axis-aligned rectangle ring (open or closed, either
-    orientation, any starting vertex): exactly two distinct x values and
-    two distinct y values, 4 distinct vertices, every edge axis-parallel.
-    Returns (xa, ya, xb, yb) or None."""
-    px, py = rx, ry
-    if len(px) >= 2 and px[0] == px[-1] and py[0] == py[-1]:
-        px, py = px[:-1], py[:-1]
-    if len(px) != 4:
-        return None
-    ux, uy = np.unique(px), np.unique(py)
-    if len(ux) != 2 or len(uy) != 2:
-        return None
-    # every consecutive edge must change exactly one coordinate
-    for j in range(4):
-        k = (j + 1) % 4
-        if (px[j] != px[k]) == (py[j] != py[k]):
-            return None
-    return float(ux[0]), float(uy[0]), float(ux[1]), float(uy[1])
+def _rects(rings: _Rings):
+    """Which closed rings are axis-aligned rectangles (either orientation,
+    any starting vertex): 4 vertices before closure, exactly two distinct x
+    and two distinct y values, every edge changing exactly one coordinate.
+    Returns the mask and the rects' ``xa, ya, xb, yb`` (min/max) bounds."""
+    m = rings.lens == 5
+    v = rings.offs[m][:, None] + np.arange(4)
+    X, Y = rings.x[v], rings.y[v]
+    sx, sy = np.sort(X, axis=1), np.sort(Y, axis=1)
+    ok = (
+        ((sx[:, 1:] != sx[:, :-1]).sum(axis=1) == 1)
+        & ((sy[:, 1:] != sy[:, :-1]).sum(axis=1) == 1)
+        & ((X != np.roll(X, -1, axis=1)) != (Y != np.roll(Y, -1, axis=1))).all(axis=1)
+    )
+    m[m] = ok
+    return m, sx[ok, 0], sy[ok, 0], sx[ok, 3], sy[ok, 3]
 
 
 def raster_algebra(

@@ -267,3 +267,34 @@ def test_point_in_polygons_grouped_matches_single():
         m = codes == c
         want = point_in_polygon(px[m], py[m], rings[c])
         assert (got[m] == want).all(), c
+
+
+def test_ray_cast_and_distance_ignore_overflow_on_undecisive_edges():
+    """An edge 2 ulps tall overflows the ray-cast x-intercept for a probe
+    far off its y-range, and a subnormal-squared edge overflows the
+    distance projection for a far probe. Neither edge decides anything:
+    the intercept is masked unless the edge straddles the probe's
+    scanline (then |py - y0| <= |y1 - y0|), and the projection is clipped
+    to [0, 1]. So no RuntimeWarning escapes, and the decisions and
+    distances stay exact."""
+    import warnings
+
+    lo = 1e-300
+    hi = np.nextafter(np.nextafter(lo, 1.0), 1.0)
+    thin = np.array([(0.0, lo), (10.0, hi), (5.0, 2e3), (0.0, lo)])
+    px = np.array([5.0, 1.0, 9.0, 5.0])
+    py = np.array([1e3, 1e3, 1e3, -1e3])
+    tiny = np.array([(0.0, 0.0), (1e-160, 0.0), (0.0, 1.0), (0.0, 0.0)])
+    qx, qy = np.array([1e150]), np.array([0.5])
+    e = tiny[None, :-1], tiny[None, 1:]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        inside = grid.point_in_polygon(px, py, thin)
+        grouped = grid.point_in_polygons_grouped(px, py, np.zeros(4, int), [thin])
+        dist = grid.point_polygon_distance(qx, qy, tiny)
+        dist_pad = grid._dist_on_pad(
+            qx, qy, e[0][..., 0], e[0][..., 1], e[1][..., 0], e[1][..., 1]
+        )
+    np.testing.assert_array_equal(inside, [True, False, False, False])
+    np.testing.assert_array_equal(grouped, inside)
+    assert dist[0] == dist_pad[0] == 1e150

@@ -1,13 +1,15 @@
 """Property-based tests (hypothesis) for the numpy grid kernels, and for
 the Column-expression encoders that must match them bit for bit."""
 
+from unittest import mock
+
 import numpy as np
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from seraster_spark import expressions as X
-from seraster_spark import grid
+from seraster_spark import grid, vector
 from seraster_spark.grid import GridSpec
 
 coords = st.tuples(
@@ -323,13 +325,20 @@ def _ring_batches(draw, sq, hx):
 
 
 @settings(max_examples=200, deadline=None)
-@given(data=st.data(), grids=_grid_pairs(), seed=st.integers(0, 2**32 - 1))
-def test_covering_cells_batch_matches_per_ring_and_is_complete(data, grids, seed):
+@given(
+    data=st.data(),
+    grids=_grid_pairs(),
+    seed=st.integers(0, 2**32 - 1),
+    budget=st.one_of(st.just(1), st.integers(2, 4096), st.just(1 << 20)),
+)
+def test_covering_cells_batch_matches_per_ring_and_is_complete(data, grids, seed, budget):
     """covering_cells_batch (the polygon-corpus cover kernel) gives each
     ring the same cell set as covering_cells on the closed ring, and every
     ring vertex and every sampled interior point has its grid.encode tile in
     that cover — square and hex, open and closed rings, vertices on tile
-    edges ±1 ulp."""
+    edges ±1 ulp. The vector entry points' grouped cover
+    (``vector._ring_covers``), at any group budget down to one ring per
+    group, gives each ring covering_cells' cells in covering_cells' order."""
     rings, pool = data.draw(_ring_batches(*grids))
     lens = np.array([len(r) for r in rings], dtype=np.int64)
     offs = np.cumsum(lens) - lens
@@ -337,10 +346,26 @@ def test_covering_cells_batch_matches_per_ring_and_is_complete(data, grids, seed
     rng = np.random.default_rng(seed)
     for spec in grids:
         ridx, cells = grid.covering_cells_batch(flat[:, 0], flat[:, 1], offs, lens, spec)
+        with mock.patch.object(vector, "_COVER_BUDGET", budget):
+            groups = list(
+                vector._ring_covers(
+                    vector._valid_rings([r[:, 0] for r in rings], [r[:, 1] for r in rings]),
+                    spec,
+                    cap=2**62,
+                )
+            )
+        assert np.concatenate([g.sel for g, _, _ in groups]).tolist() == list(range(len(rings)))
+        if budget == 1:
+            assert all(len(g.sel) == 1 for g, _, _ in groups)
+        grouped = {
+            int(g.sel[j]): gc[gr == j] for g, gr, gc in groups for j in range(len(g.sel))
+        }
         for i, ring in enumerate(rings):
             closed = ring if (ring[0] == ring[-1]).all() else np.vstack([ring, ring[:1]])
+            per_ring = grid.covering_cells(closed, spec)
             cover = set(cells[ridx == i].tolist())
-            assert cover == set(grid.covering_cells(closed, spec).tolist())
+            assert cover == set(per_ring.tolist())
+            np.testing.assert_array_equal(grouped[i], per_ring)
             lo, hi = ring.min(axis=0), ring.max(axis=0)
             probe = np.vstack([np.array(pool), rng.uniform(lo, hi, (64, 2))])
             inside = grid.point_in_polygon(probe[:, 0], probe[:, 1], closed)

@@ -25,13 +25,13 @@ def test_checkpointed_write_and_resume(spark, docs, tmp_path):
     # first run: write only half the units (simulated crash after 2)
     rec1 = sio.checkpointed_write(tiles, out, "unit", units[:2], job_id="job1")
     assert rec1["units_written"] == 2
-    assert sio.completed_units(spark, out) == {"0", "1"}
+    assert sio.completed_units(out) == {"0", "1"}
 
     # resume: all 4 requested, only the 2 missing are written
     rec2 = sio.checkpointed_write(tiles, out, "unit", units, job_id="job2")
     assert rec2["units_skipped"] == 2
     assert rec2["units_written"] == 2
-    assert sio.completed_units(spark, out) == {"0", "1", "2", "3"}
+    assert sio.completed_units(out) == {"0", "1", "2", "3"}
 
     # data round-trips completely
     back = spark.read.parquet(os.path.join(out, "unit=0"))

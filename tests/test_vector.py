@@ -217,6 +217,16 @@ def test_zonal_weighted_empty_and_outside(spark, docs):
 _SJ_POLYS = {
     "A": [(300.0, 200.0), (1600.0, 400.0), (1500.0, 1800.0), (500.0, 1700.0)],
     "B": [(900.0, 100.0), (1900.0, 900.0), (1000.0, 1900.0)],
+    # concave L, given closed
+    "L": [
+        (1800.0, 200.0),
+        (2800.0, 200.0),
+        (2800.0, 700.0),
+        (2300.0, 700.0),
+        (2300.0, 1600.0),
+        (1800.0, 1600.0),
+        (1800.0, 200.0),
+    ],
 }
 
 
@@ -231,37 +241,69 @@ def _sj_polys_df(spark, polys=None, id_type="string"):
     )
 
 
-def test_spatial_join_corpus_matches_dict_path(spark, docs):
-    """Corpus path (polygons as DataFrame rows) must be row-identical to
-    the broadcast-dict path for the same polygons, both join shapes."""
+def test_spatial_join_dict_and_corpus_match_brute_force(spark, docs, docs_pdf):
+    """The dict adapter and both corpus join shapes give exactly the
+    (doc, polygon) pairs of a brute-force ray cast over every doc, for
+    convex and concave rings."""
     spec = grid_spec_for(docs, 100.0, square=True)
     wc = rasterize.assign_tiles(docs, spec)
-    want = {
-        (r["doc_id"], r["poly_id"])
-        for r in vector.spatial_join(wc, _SJ_POLYS, spec).collect()
-    }
-    assert want  # fixture docs do land inside the polygons
+    want = set()
+    for pid, verts in _SJ_POLYS.items():
+        ring = np.asarray(verts, dtype=np.float64)
+        if not (ring[0] == ring[-1]).all():
+            ring = np.vstack([ring, ring[:1]])
+        inside = point_in_polygon(docs_pdf.x.to_numpy(), docs_pdf.y.to_numpy(), ring)
+        want |= {(d, pid) for d in docs_pdf.doc_id[inside]}
+    assert {p for _, p in want} == set(_SJ_POLYS)  # every ring holds docs
+    outs = {"dict": vector.spatial_join(wc, _SJ_POLYS, spec)}
     for bc in (True, False):
-        got = {
-            (r["doc_id"], r["poly_id"])
-            for r in vector.spatial_join_corpus(
-                wc, _sj_polys_df(spark), spec, broadcast_cover=bc
-            ).collect()
-        }
-        assert got == want, bc
+        outs[bc] = vector.spatial_join_corpus(
+            wc, _sj_polys_df(spark), spec, broadcast_cover=bc
+        )
+    for name, out in outs.items():
+        got = out.select("doc_id", "poly_id").collect()
+        assert len(got) == len(want), name
+        assert {(r["doc_id"], r["poly_id"]) for r in got} == want, name
+
+
+def test_spatial_join_dict_rejects_degenerate_ring(spark, docs):
+    """A driver-dict ring that cannot be covered, or a NULL id, is a
+    caller error: it raises instead of being dropped while the other rings
+    join."""
+    import pytest
+
+    spec = grid_spec_for(docs, 100.0, square=True)
+    wc = rasterize.assign_tiles(docs, spec)
+    for bad in (
+        [(10.0, 10.0), (20.0, 10.0)],
+        [(0.0, 0.0), (float("nan"), 1.0), (5.0, 2.0)],
+        [(0.0, 0.0, 1.0), (1.0, 0.0, 1.0), (1.0, 1.0, 1.0)],
+    ):
+        with pytest.raises(ValueError, match="degenerate polygon ring"):
+            vector.spatial_join(wc, {**_SJ_POLYS, "bad": bad}, spec)
+        with pytest.raises(ValueError, match="degenerate polygon ring"):
+            vector.filter_by_polygon(wc, bad, spec)
+    with pytest.raises(ValueError, match="degenerate polygon ring"):
+        vector.spatial_join(wc, {None: _SJ_POLYS["A"]}, spec)
 
 
 def test_spatial_join_corpus_coarse_and_schema(spark, docs):
-    """exact=False returns the covering-cell superset without ring
-    columns; exact filtering only removes rows."""
+    """Output columns are exactly ``cell_id``, the other input columns in
+    input order, then ``poly_id`` — coarse and exact, corpus and dict — and
+    exact filtering only removes rows."""
     spec = grid_spec_for(docs, 100.0, square=True)
     wc = rasterize.assign_tiles(docs, spec)
-    coarse = vector.spatial_join_corpus(
-        wc, _sj_polys_df(spark), spec, exact=False
-    )
-    assert "_ring_x" not in coarse.columns
+    want = ["cell_id"] + [c for c in wc.columns if c != "cell_id"] + ["poly_id"]
+    for exact in (False, True):
+        for out in (
+            vector.spatial_join_corpus(wc, _sj_polys_df(spark), spec, exact=exact),
+            vector.spatial_join(wc, _SJ_POLYS, spec, exact=exact),
+        ):
+            assert out.columns == want, exact
+    empty = vector.spatial_join(wc, {}, spec)
+    assert empty.columns == want and empty.count() == 0
+    coarse = vector.spatial_join_corpus(wc, _sj_polys_df(spark), spec, exact=False)
     exact = vector.spatial_join_corpus(wc, _sj_polys_df(spark), spec)
-    assert "_ring_x" not in exact.columns
     assert coarse.count() >= exact.count()
 
 
@@ -456,3 +498,28 @@ def test_rasterize_polygons_matches_zonal_weighted(spark, docs):
     out = vector.rasterize_polygons(_poly_df(spark, [tri]), spec)
     total = sum(r["cov_area"] for r in out.collect())
     assert abs(total - zw["covered_area"]) < 1e-9
+
+
+def test_per_ring_geometry_kernels_are_test_references_only():
+    """Every polygon entry point covers and tests its rings through the
+    batched kernels: outside ``grid.py`` no module of the package names
+    the per-ring ``covering_cells``, ``point_in_polygon`` or
+    ``point_polygon_distance``, which stay as the tests' reference."""
+    import ast
+    import glob
+    import os
+
+    per_ring = {"covering_cells", "point_in_polygon", "point_polygon_distance"}
+    root = os.path.join(os.path.dirname(__file__), os.pardir, "seraster_spark")
+    uses = []
+    for path in sorted(glob.glob(os.path.join(root, "*.py"))):
+        if os.path.basename(path) == "grid.py":
+            continue
+        for node in ast.walk(ast.parse(open(path).read(), path)):
+            names = (
+                [a.name for a in node.names]
+                if isinstance(node, ast.ImportFrom)
+                else [getattr(node, "id", None) or getattr(node, "attr", None)]
+            )
+            uses += [(os.path.basename(path), n) for n in names if n in per_ring]
+    assert not uses, uses
