@@ -845,8 +845,9 @@ def q_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     DATA ROWS (ring vertex arrays), exercising the corpus-scale path
     (mapInPandas cover generation, ring payload on the join, grouped
     Arrow PIP) against the same convex half-plane SQL twin. The dict
-    ``spatial_join`` (q_zonal_stats) runs the same cover kernel on the
-    driver and the same join + PIP stage."""
+    ``spatial_join`` (q_zonal_stats) runs the same cover step on the
+    driver and the same join + PIP kernel, with the rings held on the
+    driver instead of on the rows."""
     from .bbox import grid_spec_for
     from .vector import spatial_join_corpus
 

@@ -341,13 +341,16 @@ def clip_polygon_convex(subject: np.ndarray, clip: np.ndarray) -> np.ndarray:
     return out
 
 
-def tile_clip_areas(cell_id: np.ndarray, ring: np.ndarray, spec: GridSpec) -> np.ndarray:
-    """area(tile ∩ ring) per tile: the zone ring clipped against each
-    (convex) tile polygon — square and hex grids alike — then shoelace."""
+def tile_clip_areas(
+    cell_id: np.ndarray, ridx: np.ndarray, rings: list[np.ndarray], spec: GridSpec
+) -> np.ndarray:
+    """area(tile ∩ ring) per (tile, ring) pair: ring ``rings[ridx[i]]``
+    clipped against the (convex) polygon of tile ``cell_id[i]`` — square
+    and hex grids alike — then shoelace."""
     verts = polygon_vertices(np.asarray(cell_id, dtype=np.int64), spec)
     out = np.empty(len(verts), dtype=np.float64)
-    for i in range(len(verts)):
-        out[i] = ring_area(clip_polygon_convex(ring, verts[i]))
+    for i, r in enumerate(np.asarray(ridx, dtype=np.int64).tolist()):
+        out[i] = ring_area(clip_polygon_convex(rings[r], verts[i]))
     return out
 
 
@@ -402,9 +405,9 @@ def point_in_polygons_grouped(
 ) -> np.ndarray:
     """Ray-casting PIP where each point tests against ITS OWN ring:
     ``codes[i]`` indexes into ``rings`` (closed (k, 2) arrays, k may
-    vary). One fully vectorized (points × edges) pass — rings are padded
-    to a common edge count by repeating their last vertex, which is
-    decision-identical to :func:`point_in_polygon` on the unpadded ring
+    vary). Vectorized (points × edges) passes over runs of points
+    (:func:`_edge_chunks`) — rings are padded to a common edge count by
+    repeating their last vertex, which is decision-identical to :func:`point_in_polygon` on the unpadded ring
     (a zero-length edge has ``y0 > py != y1 > py`` always False so it
     adds no crossing, and its on-segment test only fires when the point
     EQUALS the repeated vertex — already on the real ring). Boundary
@@ -419,9 +422,10 @@ def point_in_polygons_grouped(
         pad[i, : len(r)] = r
         if len(r) < E:
             pad[i, len(r) :] = r[-1]
-    return _pip_on_pad(
-        px, py, pad[codes, :-1, 0], pad[codes, :-1, 1], pad[codes, 1:, 0], pad[codes, 1:, 1]
-    )
+    out = np.empty(len(px), dtype=bool)
+    for s, *edges in _edge_chunks(pad, codes):
+        out[s] = _pip_on_pad(px[s], py[s], *edges)
+    return out
 
 
 def point_polygon_distance(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
@@ -461,6 +465,20 @@ def _pad_rings(
     IDX = np.where(J[None, :] < lens[:, None], J[None, :], 0)
     gather = offs[:, None] + IDX
     return np.stack([flat_x[gather], flat_y[gather]], axis=2)
+
+
+def _edge_chunks(pad: np.ndarray, codes: np.ndarray):
+    """``(points, x0, y0, x1, y1)`` per run of points, ``points`` a slice
+    and the rest their rings' gathered edges from the padded ``(B, E, 2)``
+    ring array (point ``i`` tests ring ``codes[i]``). Runs are short enough
+    that each points × edges temporary stays near 8 MiB — a batch of
+    points against a detailed ring would otherwise allocate GBs — and a
+    single ring's ``(1, E - 1)`` edges broadcast instead of being gathered.
+    Every decision is per point, so neither changes a result."""
+    step = max(1, (1 << 20) // (pad.shape[1] - 1))
+    for s in range(0, len(codes), step):
+        c = slice(0, 1) if len(pad) == 1 else codes[s : s + step]
+        yield slice(s, s + step), pad[c, :-1, 0], pad[c, :-1, 1], pad[c, 1:, 0], pad[c, 1:, 1]
 
 
 def _pip_on_pad(
@@ -585,16 +603,11 @@ def covering_cells_batch(
     poly, rr, cc = box_tiles(r0, r1, c0, c1)
     cand = pack(spec.mode, spec.level, rr, cc)
     cxx, cyy = centroid(cand, spec)
-    pad = _pad_rings(flat_x, flat_y, offs, lens)
-    ex0 = pad[poly, :-1, 0]
-    ey0 = pad[poly, :-1, 1]
-    ex1 = pad[poly, 1:, 0]
-    ey1 = pad[poly, 1:, 1]
-    inside = _pip_on_pad(cxx, cyy, ex0, ey0, ex1, ey1)
-    near = _dist_on_pad(cxx, cyy, ex0, ey0, ex1, ey1) <= _near_radius(
-        spec, bx0, bx1, by0, by1
-    )[poly]
-    m = inside | near
+    near = _near_radius(spec, bx0, bx1, by0, by1)[poly]
+    m = np.empty(len(cand), dtype=bool)
+    for s, *edges in _edge_chunks(_pad_rings(flat_x, flat_y, offs, lens), poly):
+        cx, cy = cxx[s], cyy[s]
+        m[s] = _pip_on_pad(cx, cy, *edges) | (_dist_on_pad(cx, cy, *edges) <= near[s])
     return poly[m], cand[m]
 
 

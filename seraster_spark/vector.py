@@ -127,6 +127,9 @@ _MAX_TILES_PER_POLY = 262144
 # of one per-ring cover
 _COVER_BUDGET = 1 << 20
 
+# a cover row's ring bbox columns
+_BOX = ("_pbx0", "_pbx1", "_pby0", "_pby1")
+
 
 class _Rings(NamedTuple):
     """Ragged storage of validated, closed rings: ring ``i`` is
@@ -192,14 +195,14 @@ def _valid_rings(xs_l: list, ys_l: list, bad: np.ndarray | None = None) -> _Ring
     return r
 
 
-def _ring_covers(rings: _Rings, spec: GridSpec, cap: int):
+def _ring_covers(rings: _Rings, spec: GridSpec, cap: int | None):
     """The one vector → raster cover step: yields ``(group, ridx, cells)``,
     ``group`` a run of consecutive rings whose candidate tiles × padded
     edges fit :data:`_COVER_BUDGET` and ``(ridx, cells)`` its
     ``covering_cells_batch`` pairs (each ring's cells ascending by id, as
     ``covering_cells`` returns them). Raises before materializing anything
     when one ring's candidate bbox (corner-encode bounds, +1 tile per side)
-    holds more than ``cap`` tiles."""
+    holds more than ``cap`` tiles; ``cap=None`` sets no limit."""
     from .grid import covering_cells_batch, encode, unpack
 
     n = len(rings.sel)
@@ -211,7 +214,7 @@ def _ring_covers(rings: _Rings, spec: GridSpec, cap: int):
     )
     r4, c4 = r4.reshape(4, n), c4.reshape(4, n)
     span = (r4.max(axis=0) - r4.min(axis=0) + 3) * (c4.max(axis=0) - c4.min(axis=0) + 3)
-    if (span > cap).any():
+    if cap is not None and (span > cap).any():
         raise ValueError(
             f"polygon bbox covers {int(span[span > cap][0])} candidate tiles > "
             f"max_tiles_per_poly={cap}; coarsen the grid or split the geometry"
@@ -258,33 +261,30 @@ def spatial_join(
     """N-polygon containment join: docs × polygons → (doc rows, poly_id),
     for polygons given as a driver-side ``{poly_id: [(x, y), ...]}`` dict
     (open or closed rings). It is :func:`spatial_join_corpus` with
-    ``broadcast_cover=True`` — same cover kernel, same join and PIP stage,
+    ``broadcast_cover=True`` — same cover step, same join and PIP kernel,
     same columns (``cell_id``, the other input columns, ``poly_id``), same
-    rows — except that the cover kernel runs here on the driver, where the
-    rings already are: the cover is then a local relation whose broadcast
-    runs no Spark job and no Python worker (covering a one-row-per-ring
-    frame with mapInPandas cost ~0.3 s more per call on 200k docs, 4
-    cores). Dict joins share the corpus path's cap: a polygon whose bbox
-    cover exceeds 262144 candidate tiles raises ``ValueError`` (coarsen the
-    grid, split the geometry, or call :func:`spatial_join_corpus` with a
-    larger ``max_tiles_per_poly``). A degenerate ring raises ``ValueError``
-    instead of being dropped.
+    rows — except that the rings stay on the driver, where they already
+    are: the cover is computed here, so its broadcast runs no Spark job and
+    no Python worker (covering a one-row-per-ring frame with mapInPandas
+    cost ~0.3 s more per call on 200k docs, 4 cores), and the exact test
+    takes each ring from the UDF closure, so cover and candidate rows carry
+    no ring bytes. Dict rings have no ``max_tiles_per_poly`` cap: the cover
+    step's budget grouping bounds its memory, and a ring over the budget
+    is covered on its own. A degenerate ring raises ``ValueError`` instead
+    of being dropped.
 
     A doc inside k polygons yields k rows (standard spatial-join semantics).
     """
     from pyspark.sql.types import StringType
 
     ids, rings = _dict_rings(polygons)
-    rs = rings.xy()
-    pdf = pd.DataFrame(
-        {"poly_id": ids, "xs": [r[:, 0] for r in rs], "ys": [r[:, 1] for r in rs]}
-    )
-    kernel = _cover_kernel(spec, "poly_id", "xs", "ys", _MAX_TILES_PER_POLY)
+    frames = _cover_frames(np.asarray(ids, dtype=object), rings, spec, None, "poly_id", False)
     cover = docs_with_cell.sparkSession.createDataFrame(
-        [row for part in kernel([pdf]) for row in zip(*(part[c].tolist() for c in part))],
-        _cover_schema("poly_id", StringType()),
+        [row for part in frames for row in zip(*(part[c].tolist() for c in part))],
+        _cover_schema("poly_id", StringType(), ring_bytes=False),
     )
-    return _cover_join(docs_with_cell, cover, "poly_id", exact, broadcast_cover=True)
+    held = dict(zip(ids, rings.xy()))
+    return _cover_join(docs_with_cell, cover, "poly_id", exact, True, held)
 
 
 def spatial_join_corpus(
@@ -318,107 +318,105 @@ def spatial_join_corpus(
     vertices / non-finite / NULL id) are dropped; a polygon whose bbox
     cover exceeds ``max_tiles_per_poly`` raises loudly.
     """
-    cover = polys.mapInPandas(
-        _cover_kernel(spec, poly_id, xs, ys, max_tiles_per_poly),
-        _cover_schema(poly_id, polys.schema[poly_id].dataType),
-    )
-    return _cover_join(docs_with_cell, cover, poly_id, exact, broadcast_cover)
 
-
-def _cover_schema(poly_id: str, id_type):
-    from pyspark.sql.types import (
-        BinaryType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    return StructType(
-        [
-            StructField("cell_id", LongType()),
-            StructField(poly_id, id_type),
-            # ONE binary column per ring: 6.4M array<double> cells took
-            # ~2/3 of the PIP stage in Arrow->pandas deserialization;
-            # bytes objects are ~an order of magnitude cheaper to box
-            StructField("_ring", BinaryType()),
-            # ring bbox: lets the exact path drop definitely-outside
-            # candidates with a codegen'd JVM filter BEFORE they pay the
-            # Arrow boundary + ray-cast (exact-conservative: ray-cast PIP
-            # is False strictly outside the bbox, and boundary points
-            # satisfy the closed comparisons)
-            StructField("_pbx0", DoubleType()),
-            StructField("_pbx1", DoubleType()),
-            StructField("_pby0", DoubleType()),
-            StructField("_pby1", DoubleType()),
-        ]
-    )
-
-
-def _cover_kernel(spec: GridSpec, poly_id: str, xs: str, ys: str, cap: int):
-    """Stage 1 of the containment join, over pandas batches of polygon rows:
-    the :func:`_cover_schema` rows of every valid ring's cover."""
-
-    def kernel(batches):
+    def cover_kernel(batches):
         for pdf in batches:
             ids = pdf[poly_id]
             # NULL/NaN ids are dropped: pd.factorize codes them -1, which
             # would gather the WRONG ring in the PIP stage
             rings = _valid_rings(pdf[xs].tolist(), pdf[ys].tolist(), pd.isna(ids).to_numpy())
-            for g, ridx, cells in _ring_covers(rings, spec, cap):
-                if not len(cells):
-                    continue
-                ring_bytes = np.empty(len(g.sel), dtype=object)
-                ring_bytes[:] = [r.tobytes() for r in g.xy()]
-                yield pd.DataFrame(
-                    {
-                        "cell_id": cells,
-                        poly_id: ids.to_numpy()[g.sel][ridx],
-                        "_ring": ring_bytes[ridx],
-                        "_pbx0": g.box[ridx, 0],
-                        "_pbx1": g.box[ridx, 1],
-                        "_pby0": g.box[ridx, 2],
-                        "_pby1": g.box[ridx, 3],
-                    }
-                )
+            yield from _cover_frames(
+                ids.to_numpy(), rings, spec, max_tiles_per_poly, poly_id, ring_bytes=True
+            )
 
-    return kernel
+    cover = polys.mapInPandas(
+        cover_kernel, _cover_schema(poly_id, polys.schema[poly_id].dataType, ring_bytes=True)
+    )
+    return _cover_join(docs_with_cell, cover, poly_id, exact, broadcast_cover)
+
+
+def _cover_schema(poly_id: str, id_type, ring_bytes: bool):
+    from pyspark.sql.types import BinaryType, DoubleType, LongType, StructField, StructType
+
+    # ONE binary column per ring: 6.4M array<double> cells took ~2/3 of the
+    # PIP stage in Arrow->pandas deserialization; bytes objects are ~an
+    # order of magnitude cheaper to box
+    ring = [StructField("_ring", BinaryType())] if ring_bytes else []
+    # ring bbox: lets the exact path drop definitely-outside candidates with
+    # a codegen'd JVM filter BEFORE they pay the Arrow boundary + ray-cast
+    # (exact-conservative: ray-cast PIP is False strictly outside the bbox,
+    # and boundary points satisfy the closed comparisons)
+    box = [StructField(c, DoubleType()) for c in _BOX]
+    return StructType(
+        [StructField("cell_id", LongType()), StructField(poly_id, id_type), *ring, *box]
+    )
+
+
+def _cover_frames(
+    ids: np.ndarray, rings: _Rings, spec: GridSpec, cap: int | None, poly_id: str, ring_bytes: bool
+):
+    """Stage 1 of the containment join: the :func:`_cover_schema` rows of
+    every ring's cover, one pandas frame per cover group; ``ring_bytes``
+    adds each row's ring as bytes, for rings that live only in the rows."""
+    for g, ridx, cells in _ring_covers(rings, spec, cap):
+        if not len(cells):
+            continue
+        cols = {"cell_id": cells, poly_id: ids[g.sel][ridx]}
+        if ring_bytes:
+            b = np.empty(len(g.sel), dtype=object)
+            b[:] = [r.tobytes() for r in g.xy()]
+            cols["_ring"] = b[ridx]
+        cols.update({c: g.box[ridx, k] for k, c in enumerate(_BOX)})
+        yield pd.DataFrame(cols)
 
 
 def _cover_join(
-    docs_with_cell: DataFrame, cover: DataFrame, poly_id: str, exact: bool, broadcast_cover: bool
+    docs_with_cell: DataFrame, cover: DataFrame, poly_id: str, exact: bool, broadcast_cover: bool,
+    held: dict | None = None,
 ) -> DataFrame:
     """Stages 1 (equi-join on cell_id) and 2 (exact ray cast) of the
-    containment join, given the :func:`_cover_schema` cover table."""
-    _aux = ["_ring", "_pbx0", "_pbx1", "_pby0", "_pby1"]
+    containment join, given the :func:`_cover_schema` cover table. The
+    exact test takes each ring from ``held`` (id → closed ring, driver-side
+    rings) or else from the cover rows' ``_ring`` bytes."""
+    aux = [c for c in cover.columns if c.startswith("_")]
     coarse = docs_with_cell.join(
         F.broadcast(cover) if broadcast_cover else cover, "cell_id"
     )
     if not exact:
-        return coarse.drop(*_aux)
+        return coarse.drop(*aux)
 
-    @F.pandas_udf("boolean")
-    def _pip_ring(
-        x: pd.Series, y: pd.Series, pid: pd.Series, rings_col: pd.Series
-    ) -> pd.Series:
+    def pip(x: pd.Series, y: pd.Series, pid: pd.Series, blob: pd.Series | None) -> pd.Series:
         from .grid import point_in_polygons_grouped
 
         if len(x) == 0:
             return pd.Series(np.zeros(0, dtype=bool))
         # factorize on poly_id (vectorized — a per-row Python grouping
-        # loop here measured 40 s over 6.4M candidates), convert each
+        # loop here measured 40 s over 6.4M candidates), take each
         # DISTINCT ring once, then one gathered points×edges PIP pass
-        codes, _ = pd.factorize(pid)
-        _, first_ix = np.unique(codes, return_index=True)
-        rings = [
-            np.frombuffer(rings_col.iloc[i], dtype=np.float64).reshape(-1, 2)
-            for i in first_ix
-        ]
-        return pd.Series(
-            point_in_polygons_grouped(
-                x.to_numpy(np.float64), y.to_numpy(np.float64), codes, rings
-            )
-        )
+        codes, uniq = pd.factorize(pid)
+        if blob is None:
+            rings = [held[p] for p in uniq]
+        else:
+            first_ix = np.unique(codes, return_index=True)[1]
+            rings = [np.frombuffer(blob.iloc[i]).reshape(-1, 2) for i in first_ix]
+        xv, yv = x.to_numpy(np.float64), y.to_numpy(np.float64)
+        return pd.Series(point_in_polygons_grouped(xv, yv, codes, rings))
+
+    xyp = [F.col("x"), F.col("y"), F.col(poly_id)]
+    if held is None:
+
+        @F.pandas_udf("boolean")
+        def _pip_ring(x: pd.Series, y: pd.Series, pid: pd.Series, blob: pd.Series) -> pd.Series:
+            return pip(x, y, pid, blob)
+
+        test = _pip_ring(*xyp, F.col("_ring"))
+    else:
+
+        @F.pandas_udf("boolean")
+        def _pip_held(x: pd.Series, y: pd.Series, pid: pd.Series) -> pd.Series:
+            return pip(x, y, pid, None)
+
+        test = _pip_held(*xyp)
 
     # JVM bbox prefilter first (codegen, no Python): ray-cast PIP is False
     # strictly outside the ring bbox and boundary-inclusive on it, so this
@@ -431,8 +429,8 @@ def _cover_join(
             & (F.col("y") >= F.col("_pby0"))
             & (F.col("y") <= F.col("_pby1"))
         )
-        .filter(_pip_ring(F.col("x"), F.col("y"), F.col(poly_id), F.col("_ring")))
-        .drop(*_aux)
+        .filter(test)
+        .drop(*aux)
     )
 
 
@@ -451,16 +449,17 @@ def zonal_weighted(
     polygon-overlay aggregation under the uniform-density-per-tile model.
 
     Scale shape: stage 1 covers every zone in one driver-side
-    :func:`_ring_covers` call (the spatial join's cover step, with its cap
-    of 262144 candidate tiles per zone; a degenerate zone ring raises
+    :func:`_ring_covers` call (the spatial join's cover step, uncapped like
+    the dict :func:`spatial_join`; a degenerate zone ring raises
     ``ValueError``) and broadcasts the (cell_id, zone_id) table — a tile
     meets only zones whose cover contains it; stage 2 clips in one Arrow
-    kernel per batch (Sutherland–Hodgman against the convex tile polygon —
-    square AND hex grids, any simple zone polygon). Numerics: the aggregate
-    sums AREA·value products and divides by the tile area once per zone
-    AFTER aggregation — for rectilinear zones on representable coordinates
-    the summed terms are exact, so the result is independent of summation
-    order (the property the DuckDB oracle's bitwise comparison relies on).
+    kernel per batch (``grid.tile_clip_areas``: Sutherland–Hodgman against
+    the convex tile polygon — square AND hex grids, any simple zone
+    polygon). Numerics: the aggregate sums AREA·value products and divides
+    by the tile area once per zone AFTER aggregation — for rectilinear
+    zones on representable coordinates the summed terms are exact, so the
+    result is independent of summation order (the property the DuckDB
+    oracle's bitwise comparison relies on).
     """
     from .grid import ring_area, tile_clip_areas
 
@@ -468,7 +467,7 @@ def zonal_weighted(
     ids, rings = _dict_rings(zones)
     rows = [
         (c, ids[i])
-        for g, ridx, cells in _ring_covers(rings, spec, _MAX_TILES_PER_POLY)
+        for g, ridx, cells in _ring_covers(rings, spec, None)
         for i, c in zip(g.sel[ridx].tolist(), cells.tolist())
     ]
     schema = "zone_id string, covered_area double" + "".join(
@@ -478,18 +477,13 @@ def zonal_weighted(
         return spark.createDataFrame([], schema)
     cover = spark.createDataFrame(rows, "cell_id long, zone_id string")
     cand = tiles.join(F.broadcast(cover), "cell_id")
-    ring_items = list(zip(ids, rings.xy()))
+    held = dict(zip(ids, rings.xy()))
 
     @F.pandas_udf("double")
     def _area(cell_id: pd.Series, zid: pd.Series) -> pd.Series:
-        cv = cell_id.to_numpy(np.int64)
-        zv = zid.to_numpy()
-        out = np.zeros(len(cv), dtype=np.float64)
-        for z, ring in ring_items:
-            mask = zv == z
-            if mask.any():
-                out[mask] = tile_clip_areas(cv[mask], ring, spec)
-        return pd.Series(out)
+        codes, uniq = pd.factorize(zid)
+        rs = [held[z] for z in uniq]
+        return pd.Series(tile_clip_areas(cell_id.to_numpy(np.int64), codes, rs, spec))
 
     # every tile of one grid is congruent — measure one
     tile_area = ring_area(
@@ -533,19 +527,19 @@ def rasterize_polygons(
     Sutherland-Hodgman clip for rectilinear rings on representable
     coordinates — the property the oracle relies on); general rings are
     covered by the spatial join's cover step (:func:`_ring_covers`) and
-    clipped (S-H) per candidate tile. A polygon whose candidate-tile count
-    exceeds ``max_tiles_per_poly`` raises loudly (coarsen the grid or
-    pre-split the geometry); the guard bounds what each path actually
-    MATERIALIZES — the grid-clamped bbox on the rect block, the full
-    unclamped bbox + 1 tile per side on the cover step — so a mostly-off-grid
-    geometry may pass as a 4-vertex rect but raise when written with a
-    collinear fifth vertex. Degenerate rings (NULL, length mismatch, < 3
+    clipped (S-H) per candidate tile by ``grid.tile_clip_areas``. A
+    polygon whose candidate-tile count exceeds ``max_tiles_per_poly``
+    raises loudly (coarsen the grid or pre-split the geometry); the guard
+    bounds what each path actually MATERIALIZES — the grid-clamped bbox on
+    the rect block, the full unclamped bbox + 1 tile per side on the cover
+    step — so a mostly-off-grid geometry may pass as a 4-vertex rect but
+    raise when written with a collinear fifth vertex. Degenerate rings (NULL, length mismatch, < 3
     vertices, non-finite coordinates) are dropped. Square and hex grids
     alike.
     """
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    from .grid import box_tiles, clip_polygon_convex, pack, ring_area, unpack
+    from .grid import box_tiles, pack, ring_area, tile_clip_areas, unpack
 
     origin = np.zeros(1, dtype=np.int64)
     tile_area = ring_area(polygon_vertices(pack(spec.mode, spec.level, origin, origin), spec)[0])
@@ -611,15 +605,7 @@ def rasterize_polygons(
                         (trows >= 0) & (trows < nrows) & (tcols >= 0) & (tcols < ncols)
                     )
                     ridx, cells = ridx[on_grid], cells[on_grid]
-                rs = g.xy()
-                areas = np.fromiter(
-                    (
-                        ring_area(clip_polygon_convex(rs[r], tile))
-                        for r, tile in zip(ridx.tolist(), polygon_vertices(cells, spec))
-                    ),
-                    np.float64,
-                    len(cells),
-                )
+                areas = tile_clip_areas(cells, ridx, g.xy(), spec)
                 pos = areas > 0.0
                 parts.append((cells[pos], areas[pos], g.sel[ridx[pos]]))
             if is_rect.any():

@@ -145,7 +145,7 @@ def test_clip_areas_rect_closed_form(spark, docs):
     cells = np.array([r["cell_id"] for r in wc.select("cell_id").distinct().collect()])
     rx0, ry0, rx1, ry1 = 400.5, 300.5, 1200.5, 900.5
     ring = np.array([(rx0, ry0), (rx1, ry0), (rx1, ry1), (rx0, ry1), (rx0, ry0)])
-    got = tile_clip_areas(cells, ring, spec)
+    got = tile_clip_areas(cells, np.zeros(len(cells), dtype=np.int64), [ring], spec)
     from seraster_spark.grid import polygon_vertices
 
     verts = polygon_vertices(cells, spec)
@@ -166,7 +166,7 @@ def test_clip_areas_mass_conservation_triangle(spark, docs):
     for square in (True, False):
         spec = grid_spec_for(docs, 100.0, square=square)
         cells = covering_cells(tri, spec)
-        areas = tile_clip_areas(np.asarray(cells, dtype=np.int64), tri, spec)
+        areas = tile_clip_areas(cells, np.zeros(len(cells), dtype=np.int64), [tri], spec)
         assert abs(areas.sum() - ring_area(tri)) < 1e-6, square
 
 
@@ -285,6 +285,28 @@ def test_spatial_join_dict_rejects_degenerate_ring(spark, docs):
             vector.filter_by_polygon(wc, bad, spec)
     with pytest.raises(ValueError, match="degenerate polygon ring"):
         vector.spatial_join(wc, {None: _SJ_POLYS["A"]}, spec)
+
+
+def test_spatial_join_dict_has_no_tile_cap(spark, docs, docs_pdf):
+    """A driver-dict ring whose bbox spans more than the corpus default of
+    262144 candidate tiles (here ~270k on a fine grid) still joins, through
+    spatial_join, filter_by_polygon and zonal_weighted, to exactly the docs
+    of a brute-force ray cast."""
+    spec = grid_spec_for(docs, 2.0, square=True)
+    sliver = [(300.0, 200.0), (1340.0, 1240.0), (1340.0, 1140.0)]
+    assert (1040.0 / spec.resolution + 2) ** 2 > vector._MAX_TILES_PER_POLY
+    ring = np.asarray(sliver + sliver[:1])
+    inside = point_in_polygon(docs_pdf.x.to_numpy(), docs_pdf.y.to_numpy(), ring)
+    want = set(docs_pdf.doc_id[inside])
+    assert want
+    wc = rasterize.assign_tiles(docs, spec)
+    got = vector.spatial_join(wc, {"S": sliver}, spec).select("doc_id").collect()
+    assert sorted(r["doc_id"] for r in got) == sorted(want)
+    got = vector.filter_by_polygon(wc, sliver, spec).select("doc_id").collect()
+    assert sorted(r["doc_id"] for r in got) == sorted(want)
+    tiles = wc.groupBy("cell_id").agg(F.count(F.lit(1)).cast("double").alias("n"))
+    zw = vector.zonal_weighted(tiles, {"S": sliver}, spec, ("n",)).collect()
+    assert [r["zone_id"] for r in zw] == ["S"] and zw[0]["covered_area"] > 0.0
 
 
 def test_spatial_join_corpus_coarse_and_schema(spark, docs):
